@@ -44,6 +44,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 _KEY = "__bloom_key"
 
 
@@ -133,7 +135,7 @@ def bloom_merge(*blooms: DataFrame) -> DataFrame:
     out = blooms[0]
     for b in blooms[1:]:
         out = out.unionByName(b)
-    out = out.localCheckpoint(eager=True)
+    out = pin(out)
     _geometry(out, "bloom_merge")  # raises on mixed; empty-over-empty is fine
     return (
         out.groupBy("word", "m", "k")
@@ -168,7 +170,7 @@ def bloom_contains_col(bloom: DataFrame, df: DataFrame, key: str, flag: str = "m
     geometry collect itself) replans the whole build, so a freshly
     built bloom would materialize k+1 times. The pinned footprint is
     ≤ m/64 rows (MBs), held until the session drops the reference."""
-    bloom = bloom.localCheckpoint(eager=True)
+    bloom = pin(bloom)
     geom = _geometry(bloom, "bloom_contains_col")
     if geom is None:
         # Empty filter = empty set: everything is definitely absent.

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def running_total(
     df: DataFrame,
@@ -42,10 +44,9 @@ def running_total(
     and the cumsum pass)."""
     spark = df.sparkSession
     parts = num_partitions or spark.sparkContext.defaultParallelism
-    ordered = (
+    ordered = pin(
         df.repartitionByRange(parts, *order_by)
         .sortWithinPartitions(*order_by)
-        .localCheckpoint(eager=True)
     )
     rows = (
         ordered.groupBy(F.spark_partition_id().alias("pid"))

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def _probes(key: Column, d: int, w: int, hash_fn: str = "xxhash64") -> Column:
     """Array of d (i, bucket) structs for one key.
@@ -145,27 +147,6 @@ def _geometry(sketch: DataFrame, what: str) -> tuple[int, int, str]:
     return rows[0]["d"], rows[0]["w"], (rows[0]["hash_fn"] if has_hf else "xxhash64")
 
 
-def _pin_sketch(sketch: DataFrame) -> DataFrame:
-    """Eagerly materialize a sketch frame (≤ d×w rows — KB-scale) so the
-    ``_geometry`` guard's collect and the consuming join/aggregate read
-    the same blocks instead of each re-executing the sketch's LINEAGE —
-    which for a freshly built sketch is a full fact-table pass per
-    consumer (measured: cms_join_size_estimate executed each of its two
-    builds twice — once for the geometry read, once for the product).
-
-    Idempotent (r13, r12 ADVICE): a frame that is already a pinned RDD
-    scan — a prior ``localCheckpoint`` output, e.g. repeated
-    ``cms_estimate`` calls probing the same stored sketch — returns
-    as-is instead of accumulating a new checkpoint block set per call.
-    Trade-off note (guide §5): localCheckpoint blocks are
-    NON-REPLAYABLE — on executor loss the consuming job fails rather
-    than recomputes; acceptable for KB-scale frames, and why this
-    helper is never applied to corpus-sized inputs."""
-    if sketch._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRDD":
-        return sketch
-    return sketch.localCheckpoint(eager=True)
-
-
 def cms_merge(*sketches: DataFrame) -> DataFrame:
     """Union counter tables built with the SAME (d, w, hash_fn) —
     linearity of counters makes merge a sum, which is what lets
@@ -181,7 +162,7 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
         # merges them with same-family counters instead of keeping a
         # parallel NULL-keyed counter set.
         out = out.withColumn("hash_fn", F.coalesce(F.col("hash_fn"), F.lit("xxhash64")))
-    out = _pin_sketch(out)  # read twice: geometry guard + the merge agg
+    out = pin(out)  # read twice: geometry guard + the merge agg
     _geometry(out, "cms_merge")
     keys = ["i", "bucket", "d", "w"] + (["hash_fn"] if "hash_fn" in out.columns else [])
     return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt")).select(
@@ -200,7 +181,7 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, key: str, d: int | None = N
     stored-params-win contract as dedup._resolve_index_params). The
     sketch side is ≤ d×w rows, so it broadcasts — estimation is a
     map-side join however many query keys stream through."""
-    sketch = _pin_sketch(sketch)  # read twice: geometry guard + broadcast
+    sketch = pin(sketch)  # read twice: geometry guard + broadcast
     sd, sw, shf = _geometry(sketch, "cms_estimate")
     if (d is not None and d != sd) or (w is not None and w != sw):
         raise ValueError(f"cms_estimate: sketch was built with (d={sd}, w={sw}), caller expected (d={d}, w={w})")
@@ -236,7 +217,7 @@ def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
     verified, same contract as cms_merge). Returns one row
     ``(est bigint)``. Buckets present in only one sketch contribute 0
     (inner join drops them — their product is 0)."""
-    a, b = _pin_sketch(a), _pin_sketch(b)  # each read twice: guard + product
+    a, b = pin(a), pin(b)  # each read twice: guard + product
     da, wa, ha = _geometry(a, "cms_inner_product(a)")
     db, wb, hb = _geometry(b, "cms_inner_product(b)")
     if (da, wa, ha) != (db, wb, hb):

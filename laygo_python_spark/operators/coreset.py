@@ -101,6 +101,7 @@ def farthest_point_sample(
             ),
         )
         if step % checkpoint_every == 0:
+            # Lazy lineage truncation, not a pin: nothing is read twice.
             state = state.localCheckpoint(eager=False)
     return centers
 

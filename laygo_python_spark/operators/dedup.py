@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin, release
 
 # Universal-hash constants: h_i(x) = (a_i * x + b_i) mod P over
 # x = xxhash64(shingle) folded into [0, 2^31). P = 2^31 - 1 (prime);
@@ -376,35 +376,19 @@ def minhash_lsh_candidates(
     # pass, so the exchange ships 1+bands longs per row (before
     # map-side combine collapses same-signature duplicates) instead of
     # the r3 shape's raw 128-long signature + JVM concat_ws/xxhash64.
-    # Eager localCheckpoint: `groups` feeds four subtrees (clique
+    # Pinned (see ``session.pin``): `groups` feeds four subtrees (clique
     # expansion, band entries, both membership joins); unpinned, each
     # would re-run the Python signature pass. The frame is small —
-    # distinct signatures only. Blocks are freed by the async
-    # ContextCleaner once the result is dereferenced, or immediately
-    # via the result's ``_release_pin()`` handle (after which the
-    # result must not be recomputed — same contract as simhash).
-    spark = docs.sparkSession
-
-    def _persistent_ids() -> set[int]:
-        return {int(k) for k in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
-    pre = _persistent_ids()
-    groups = (
+    # distinct signatures only. The result's ``_release_pin()`` frees
+    # it; the result must not be recomputed after that.
+    groups = pin(
         sig.groupBy("sig_key")
         .agg(
             F.collect_list(F.col(id_col)).alias("members"),
             F.min(F.col(id_col)).alias("rep"),
             F.first("band_keys").alias("band_keys"),
         )
-        .localCheckpoint(eager=True)
     )
-    pin_ids = _persistent_ids() - pre
-
-    def _release_pin() -> None:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for k, v in live.items():
-            if int(k) in pin_ids:
-                v.unpersist(False)
     if clique_mode == "pairs":
         same = (
             groups.filter(F.size("members") >= 2)
@@ -499,7 +483,7 @@ def minhash_lsh_candidates(
             )
         )
     out = cross.unionByName(same)
-    out._release_pin = _release_pin  # deterministic release handle
+    out._release_pin = lambda: release(groups)
     return out
 
 
@@ -544,9 +528,9 @@ def minhash_index(
     # caller-side checkpoints in the queries) would re-shingle the whole
     # seen corpus. Blocks release via ContextCleaner once the returned
     # frames are dereferenced.
-    sig = _minhash_sig_keys(
+    sig = pin(_minhash_sig_keys(
         docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
-    ).localCheckpoint(eager=True)
+    ))
     membership = sig.select(F.col(id_col).alias("doc_id"), "sig_key")
     reps = membership.groupBy("sig_key").agg(F.min("doc_id").alias("rep"))
     band_all = (
@@ -887,7 +871,7 @@ def minhash_index_append(
             # View mode: the batch frames must outlive this call (the
             # caller's match reads them after we return), so pin with
             # checkpoint blocks instead of a persist we'd have to leak.
-            sig = sig.localCheckpoint(eager=True)
+            sig = pin(sig)
         else:
             sig = sig.persist()
             sig_pin = sig
@@ -907,11 +891,10 @@ def minhash_index_append(
     # aggregation subtree executing 3x inside the combined checkpoint
     # alone. The frame is |distinct batch sigs| rows (KB-scale); the
     # pin is one short job that turns every re-execution into a block
-    # read. (localCheckpoint blocks are non-replayable on executor
-    # loss — the standard small-frame trade, guide §5.)
-    per_sig = sig.groupBy("sig_key").agg(
+    # read (the small-frame trade documented on ``session.pin``).
+    per_sig = pin(sig.groupBy("sig_key").agg(
         F.min(id_col).alias("rep"), F.any_value("band_keys").alias("band_keys")
-    ).localCheckpoint(eager=True)
+    ))
     reps_add = per_sig.select("sig_key", "rep")
     existing_sigs = _idx_read(spark, path, "reps").select("sig_key")
     dropped_cur = _read_or_empty(spark, f"{path}/dropped", "band_key long")
@@ -927,12 +910,11 @@ def minhash_index_append(
     # chain (and its existing_sigs/dropped broadcasts) executed 3x per
     # append (SQL profile r13: 9 jobs in the combined exec, 6 of them
     # re-built broadcasts). |batch band rows| x 2 longs — KB-scale.
-    new_band_rows = (
+    new_band_rows = pin(
         per_sig.join(existing_sigs, "sig_key", "left_anti")
         .select("sig_key", F.explode(F.array_distinct("band_keys")).alias("band_key"))
         .join(dropped_cur, "band_key", "left_anti")
         .select("sig_key", "band_key")  # USING-join reordered; parquet appends by name
-        .localCheckpoint(eager=True)
     )
     new_counts = new_band_rows.groupBy("band_key").agg(F.count(F.lit(1)).alias("add"))
     cur_counts = (
@@ -947,9 +929,7 @@ def minhash_index_append(
     )
     # The per-bucket verdict table is |touched buckets| rows — broadcast
     # it back onto the band rows rather than paying a band_key exchange.
-    combined = new_band_rows.join(F.broadcast(verdict), "band_key").localCheckpoint(
-        eager=True
-    )
+    combined = pin(new_band_rows.join(F.broadcast(verdict), "band_key"))
     newly_dropped = combined.filter(F.col("__drop")).select("band_key").distinct()
     band_append = combined.filter(~F.col("__drop")).select("sig_key", "band_key")
     # The post-append logical view is assembled BEFORE any write: the
@@ -1084,9 +1064,9 @@ def minhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int
 
     Returns post-compaction row counts per rewritten table."""
     idx = minhash_index_read(spark, path)
-    membership = idx["membership"].localCheckpoint(eager=True)
-    reps = idx["reps"].localCheckpoint(eager=True)
-    bands = idx["bands"].localCheckpoint(eager=True)
+    membership = pin(idx["membership"])
+    reps = pin(idx["reps"])
+    bands = pin(idx["bands"])
     _concurrent_actions(
         lambda: _write_swap(membership, f"{path}/membership"),
         lambda: _write_swap(reps, f"{path}/reps"),
@@ -1206,9 +1186,9 @@ def minhash_match_incremental(
     # output built with this index's params.
     sig = precomputed_sig
     if sig is None:
-        sig = _minhash_sig_keys(
+        sig = pin(_minhash_sig_keys(
             new_docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
-        ).localCheckpoint(eager=True)
+        ))
     seen_side = index["membership"] if mode == "pairs" else index["reps"]
     seen_cols = {"sig_key": "nsig", "doc_id": "doc_id_seen"} if mode == "pairs" else {
         "sig_key": "nsig",
@@ -1323,7 +1303,7 @@ def ngram_containment_pairs(
             .filter(F.col("__df") <= max_df)
             .drop("__df")
         )
-    grams = grams.localCheckpoint(eager=True)
+    grams = pin(grams)
     sizes = grams.groupBy("__doc").agg(F.count(F.lit(1)).alias("__n"))
     a = grams.select(F.col("__doc").alias("__ida"), "g")
     b = grams.select(F.col("__doc").alias("__idb"), "g")
@@ -1480,9 +1460,7 @@ def substring_index(
     At 100 TB the postings table is the substring analog of a suffix
     array that actually shards: one row per token position, 8-byte
     fingerprints, bucketable by fp for co-located match joins."""
-    posts = _substring_postings(docs, id_col, text_col, k, max_df).localCheckpoint(
-        eager=True
-    )
+    posts = pin(_substring_postings(docs, id_col, text_col, k, max_df))
     return {"postings": posts, "params": {"k": k, "max_df": max_df}}
 
 
@@ -1629,9 +1607,9 @@ def substring_match_incremental(
     self-join (new-vs-new); one shared gaps-and-islands pass coalesces
     both streams."""
     k = index["params"]["k"]
-    newp = _substring_postings(
+    newp = pin(_substring_postings(
         new_docs, id_col, text_col, k, index["params"]["max_df"]
-    ).localCheckpoint(eager=True)  # feeds BOTH the cross join and the self join
+    ))  # feeds BOTH the cross join and the self join
     seen = index["postings"]
     cross = (
         newp.select(F.col("__doc").alias("nd"), F.col("pos").alias("np"), "fp")
@@ -1782,15 +1760,7 @@ def ngram_jaccard_pairs(
     # consumer beyond the sample probe is inevitable; unpinned, each
     # consumer re-runs scan+explode+distinct (and, under block_col, the
     # docs⋈components join feeding it). Integers+short strings only.
-    grams_pinned = False
-
-    def _pin_grams(g):
-        nonlocal grams_pinned
-        if grams_pinned:
-            return g
-        grams_pinned = True
-        return g.localCheckpoint(eager=True)
-
+    # ``pin`` is idempotent, so each path below may pin it again freely.
     if strategy == "auto":
         # Two-stage probe so the full-corpus distinct-gram count only
         # ever runs when it is cheap: a bounded doc sample first (vocab
@@ -1814,18 +1784,18 @@ def ngram_jaccard_pairs(
             or 0
         )
         if 0 < sample_vocab <= 64:
-            grams = _pin_grams(grams)  # the exact count reads it anyway
+            grams = pin(grams)  # the exact count reads it anyway
             n_vocab = grams.agg(F.count_distinct("g")).first()[0] or 0
             strategy = "bitmask" if 0 < n_vocab <= 64 else "prefix"
         else:
             strategy = "prefix"
     elif strategy == "bitmask":
-        grams = _pin_grams(grams)
+        grams = pin(grams)
         n_vocab = grams.agg(F.count_distinct("g")).first()[0] or 0
         if n_vocab > 64 or n_vocab == 0:
             raise ValueError(f"bitmask strategy needs 1..64 distinct grams, found {n_vocab}")
     if strategy == "bitmask":
-        grams = _pin_grams(grams)
+        grams = pin(grams)
         vocab = (
             grams.select("g")
             .distinct()
@@ -1840,10 +1810,9 @@ def ngram_jaccard_pairs(
         # cliques (3 consumers) — exchange reuse never fires across a
         # self-join's sides, so unpinned each side re-runs the
         # vocab-window + masks aggregation. Distinct masks only — tiny.
-        groups = (
+        groups = pin(
             masks.groupBy("mask", *blk)
             .agg(F.collect_list(F.col(id_col)).alias("ids"))
-            .localCheckpoint(eager=True)
         )
         a, b = groups.alias("a"), groups.alias("b")
         i_bits = F.bit_count(F.col("a.mask").bitwiseAND(F.col("b.mask")))
@@ -1893,7 +1862,7 @@ def ngram_jaccard_pairs(
     # plan, zero exchange reuse (measured 5.7 s -> 2.9 s at sf0.1 for
     # the t=0.8 truth join when pinned). Same discipline as
     # ngram_containment_pairs; integers only, never text.
-    grams = _pin_grams(grams)
+    grams = pin(grams)
     freq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("fc"))
     ranked = (
         grams.join(freq, "g")
@@ -1973,7 +1942,7 @@ def verify_candidates_jaccard(
     no explicit release hook, unlike simhash's self-contained pin."""
     from pyspark.sql import Window
 
-    cand = candidates.select("doc_id_a", "doc_id_b").localCheckpoint(eager=True)
+    cand = pin(candidates.select("doc_id_a", "doc_id_b"))
     touched = (
         cand.select(F.col("doc_id_a").alias(id_col))
         .unionByName(cand.select(F.col("doc_id_b").alias(id_col)))
@@ -2047,7 +2016,7 @@ def connected_components(
     of a labels⋈labels join per round.
 
     Superseded checkpoints are released EAGERLY each round (see
-    ``_release``): at 10^10 nodes a labels snapshot is ~160 GB of
+    ``session.release``): at 10^10 nodes a labels snapshot is ~160 GB of
     executor storage — holding all 25 rounds' snapshots alive until GC
     would need TBs. Only the blocks backing the RETURNED frame stay
     (freed when the caller drops it).
@@ -2069,15 +2038,6 @@ def connected_components(
     smokes do, to measure its round bounds)."""
     spark = edges.sparkSession
 
-    def _persistent_ids() -> set[int]:
-        return {int(k) for k in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
-    def _release(ids: set[int]) -> None:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for i in ids:
-            if i in live:
-                live[i].unpersist(False)
-
     # Materialize the symmetric edge list ONCE — it joins into every
     # round, and its lineage may be an expensive pair-discovery pipeline
     # (e.g. the Jaccard self-join) that must not re-execute per round.
@@ -2088,136 +2048,127 @@ def connected_components(
     from pyspark.sql import Observation
 
     obs = Observation()
-    pre = _persistent_ids()
-    sym = (
+    sym = pin(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    sym_ids = _persistent_ids() - pre
-    if driver_threshold and obs.get["n"] <= 2 * driver_threshold:
-        # Small-graph fast path (see docstring): union-find over the
-        # bounded, already-materialized edge list. Same contract —
-        # (node, label=min reachable id) — verified against the
-        # distributed path by tests/test_dedup.py. Fetched via Arrow
-        # (toPandas on the two long columns, ~16 B/edge contiguous)
-        # rather than Row collect (~100+ B/edge of boxed Row objects):
-        # at the threshold the driver holds ~32 MB, not hundreds.
-        pdf = sym.toPandas()
-        _release(sym_ids)
-        n_pairs = len(pdf)
-        parent: dict = {}
+    try:
+        if driver_threshold and obs.get["n"] <= 2 * driver_threshold:
+            # Small-graph fast path (see docstring): union-find over the
+            # bounded, already-materialized edge list. Same contract —
+            # (node, label=min reachable id) — verified against the
+            # distributed path by tests/test_dedup.py. Fetched via Arrow
+            # (toPandas on the two long columns, ~16 B/edge contiguous)
+            # rather than Row collect (~100+ B/edge of boxed Row objects):
+            # at the threshold the driver holds ~32 MB, not hundreds.
+            pdf = sym.toPandas()
+            n_pairs = len(pdf)
+            parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while x != root:  # path compression
-                nxt = parent[x]
-                parent[x] = root
-                x = nxt
-            return root
+            def find(x):
+                root = x
+                while parent.get(root, root) != root:
+                    root = parent[root]
+                while x != root:  # path compression
+                    nxt = parent[x]
+                    parent[x] = root
+                    x = nxt
+                return root
 
-        s_vals = pdf["s"].tolist()
-        d_vals = pdf["d"].tolist()
-        del pdf
-        for a0, b0 in zip(s_vals, d_vals):
-            a, b = find(a0), find(b0)
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        nodes = set(s_vals)
-        del s_vals, d_vals
-        comp_min: dict = {}
-        roots = {n: find(n) for n in nodes}
-        for n, root in roots.items():
-            if root not in comp_min or n < comp_min[root]:
-                comp_min[root] = n
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["driver_path_edges"] = n_pairs // 2
-        t = dict(sym.dtypes)["s"]
-        from laygo_python_spark.session import local_rows_df
-
-        return local_rows_df(
-            spark,
-            sorted((n, comp_min[root]) for n, root in roots.items()),
-            f"node {t}, cluster {t}",
-        )
-    labels = (
-        sym.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
-    )
-    prev_ids: set[int] = set()
-    prev_sum = None
-    for i in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym.d == labels.node)
-            .groupBy("s")
-            .agg(F.min("label").alias("nmin"))
-        )
-        propagated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.s, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-            )
-        )
-        # Materialize the propagate join ONCE — the pointer-jump
-        # self-join below reads this checkpoint on both sides instead of
-        # re-executing edges⋈labels twice.
-        pre = _persistent_ids()
-        propagated = propagated.localCheckpoint(eager=True)
-        prop_ids = _persistent_ids() - pre
-        # The propagate snapshot is materialized; the previous round's
-        # label snapshot has been consumed and nothing references it.
-        _release(prev_ids)
-        # Pointer-jump: label ← min(label, label's label). Halves the
-        # remaining hop distance to the component minimum each round.
-        l1, l2 = propagated.alias("l1"), propagated.alias("l2")
-        new_labels = l1.join(l2, F.col("l1.label") == F.col("l2.node"), "left").select(
-            F.col("l1.node").alias("node"),
-            F.least(F.col("l1.label"), F.coalesce(F.col("l2.label"), F.col("l1.label"))).alias("label"),
-        )
-        # Convergence via the monotone label sum: labels only ever
-        # decrease, so an unchanged EXACT sum (decimal accumulation —
-        # no int64 overflow at any node-id scale) means a fixpoint. On
-        # checkpointed rounds the sum rides the CHECKPOINT JOB ITSELF
-        # as an observed metric (r7: one job per round instead of two —
-        # the separate scan-only agg was pure job-scheduling overhead,
-        # ~0.2 s/round at any data size).
-        cur_sum = None
-        if (i + 1) % checkpoint_every == 0:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"cc_label_sum_r{i}")
-            new_labels = new_labels.observe(
-                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("lsum")
-            )
-            pre = _persistent_ids()
-            new_labels = new_labels.localCheckpoint(eager=True)
-            new_ids = _persistent_ids() - pre
-            cur_sum = obs.get["lsum"]
-            # The jump consumed the propagate snapshot.
-            _release(prop_ids)
-            prev_ids = new_ids
-        else:
-            # new_labels stays one cheap join above the propagate
-            # checkpoint; those blocks must survive until the next
-            # materialized snapshot replaces them.
-            prev_ids = prop_ids
-            cur_sum = new_labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-        labels = new_labels
-        if cur_sum is None or (prev_sum is not None and cur_sum == prev_sum):
+            s_vals = pdf["s"].tolist()
+            d_vals = pdf["d"].tolist()
+            del pdf
+            for a0, b0 in zip(s_vals, d_vals):
+                a, b = find(a0), find(b0)
+                if a != b:
+                    parent[max(a, b)] = min(a, b)
+            nodes = set(s_vals)
+            del s_vals, d_vals
+            comp_min: dict = {}
+            roots = {n: find(n) for n in nodes}
+            for n, root in roots.items():
+                if root not in comp_min or n < comp_min[root]:
+                    comp_min[root] = n
             if stats is not None:
-                stats["rounds"] = i + 1
-            break
-        prev_sum = cur_sum
-    else:
-        if stats is not None:
-            stats["rounds"] = max_iterations
-    # The final labels frame no longer references the edge list.
-    _release(sym_ids)
-    return labels.select(F.col("node"), F.col("label").alias("cluster"))
+                stats["rounds"] = 0
+                stats["driver_path_edges"] = n_pairs // 2
+            t = dict(sym.dtypes)["s"]
+            return local_rows_df(
+                spark,
+                sorted((n, comp_min[root]) for n, root in roots.items()),
+                f"node {t}, cluster {t}",
+            )
+        labels = (
+            sym.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
+        )
+        prev = None  # the snapshot the current labels read
+        prev_sum = None
+        for i in range(max_iterations):
+            neighbor_min = (
+                sym.join(labels, sym.d == labels.node)
+                .groupBy("s")
+                .agg(F.min("label").alias("nmin"))
+            )
+            propagated = (
+                labels.join(neighbor_min, labels.node == neighbor_min.s, "left")
+                .select(
+                    "node",
+                    F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
+                )
+            )
+            # Materialize the propagate join ONCE — the pointer-jump
+            # self-join below reads this checkpoint on both sides instead of
+            # re-executing edges⋈labels twice.
+            propagated = pin(propagated)
+            # The propagate snapshot is materialized; the previous round's
+            # label snapshot has been consumed and nothing references it.
+            release(prev)
+            # Pointer-jump: label ← min(label, label's label). Halves the
+            # remaining hop distance to the component minimum each round.
+            l1, l2 = propagated.alias("l1"), propagated.alias("l2")
+            new_labels = l1.join(l2, F.col("l1.label") == F.col("l2.node"), "left").select(
+                F.col("l1.node").alias("node"),
+                F.least(F.col("l1.label"), F.coalesce(F.col("l2.label"), F.col("l1.label"))).alias("label"),
+            )
+            # Convergence via the monotone label sum: labels only ever
+            # decrease, so an unchanged EXACT sum (decimal accumulation —
+            # no int64 overflow at any node-id scale) means a fixpoint. On
+            # checkpointed rounds the sum rides the CHECKPOINT JOB ITSELF
+            # as an observed metric (r7: one job per round instead of two —
+            # the separate scan-only agg was pure job-scheduling overhead,
+            # ~0.2 s/round at any data size).
+            cur_sum = None
+            if (i + 1) % checkpoint_every == 0:
+                obs = Observation(f"cc_label_sum_r{i}")
+                new_labels = new_labels.observe(
+                    obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("lsum")
+                )
+                new_labels = pin(new_labels)
+                cur_sum = obs.get["lsum"]
+                # The jump consumed the propagate snapshot.
+                release(propagated)
+                prev = new_labels
+            else:
+                # new_labels stays one cheap join above the propagate
+                # checkpoint; those blocks must survive until the next
+                # materialized snapshot replaces them.
+                prev = propagated
+                cur_sum = new_labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+            labels = new_labels
+            if cur_sum is None or (prev_sum is not None and cur_sum == prev_sum):
+                if stats is not None:
+                    stats["rounds"] = i + 1
+                break
+            prev_sum = cur_sum
+        else:
+            if stats is not None:
+                stats["rounds"] = max_iterations
+        return labels.select(F.col("node"), F.col("label").alias("cluster"))
+    finally:
+        # Neither return path reads the edge list: the driver path
+        # returns local rows, the distributed one its own snapshots.
+        release(sym)
 
 
 def simhash_fingerprints(
@@ -2347,7 +2298,7 @@ def simhash_near_dups(
     # across mapInPandas subtrees. The frame is (sh, members, rep) over
     # distinct fingerprints — tiny at any scale. Two pinning modes:
     #
-    # * no hint: eager localCheckpoint (the count probe materializes it
+    # * no hint: ``pin`` (the count probe materializes it
     #   anyway, and checkpoint truncates lineage so every subtree reads
     #   the stored blocks).
     # * ``n_fingerprints`` hint: ``persist()`` — the ONLY truly lazy
@@ -2355,40 +2306,15 @@ def simhash_near_dups(
     #   conversion, which materializes the shuffle stages = a job at
     #   compose time). First execution populates the cache; parallel
     #   stages may race the first fill (recompute, not wrong results).
-    spark = docs.sparkSession
-
-    def _persistent_ids() -> set[int]:
-        return {int(k) for k in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
     fp = (
         simhash_fingerprints(docs, id_col, text_col, bits, hash_fn)
         .groupBy("sh")
         .agg(F.collect_list(F.col(id_col)).alias("members"), F.min(F.col(id_col)).alias("rep"))
     )
-    if n_fingerprints is None:
-        pre = _persistent_ids()
-        fp = fp.localCheckpoint(eager=True)
-        pin_ids = _persistent_ids() - pre
-    else:
-        fp = fp.persist()
-        pin_ids = None
-
-    # DataFrame.unpersist does NOT release a localCheckpoint (it is an
-    # RDD-level cache, invisible to the CacheManager) — so the result
-    # carries an explicit ``_release_pin()`` that unpersists the
-    # checkpoint blocks by RDD id. Without calling it, blocks are freed
-    # by the async ContextCleaner once the result is dereferenced. The
-    # hinted persist() path releases through the normal CacheManager.
-    def _release_pin() -> None:
-        if pin_ids is None:
-            fp.unpersist(False)
-            return
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for i in pin_ids:
-            if int(i) in {int(k) for k in live}:
-                for k, v in live.items():
-                    if int(k) == int(i):
-                        v.unpersist(False)
+    # The result's ``_release_pin()`` frees either pin: ``release`` for
+    # the checkpoint (DataFrame.unpersist cannot see it), the normal
+    # CacheManager for the hinted persist().
+    fp = pin(fp) if n_fingerprints is None else fp.persist()
 
     # Same-fingerprint groups: hamming 0 by definition, no banding needed.
     if clique_mode == "pairs":
@@ -2477,7 +2403,7 @@ def simhash_near_dups(
             )
         )
     out = cross.unionByName(same)
-    out._release_pin = _release_pin  # deterministic release handle
+    out._release_pin = lambda: release(fp) if n_fingerprints is None else fp.unpersist(False)
     return out
 
 
@@ -2527,10 +2453,9 @@ def simhash_index(
     # Pinned once: fingerprints/reps/chunks are three derived frames
     # (same rationale as minhash_index — unpinned, each derived table's
     # action re-fingerprints the whole seen corpus).
-    fp = (
+    fp = pin(
         simhash_fingerprints(docs, id_col, text_col, bits, hash_fn)
         .select(F.col(id_col).alias("doc_id"), "sh")
-        .localCheckpoint(eager=True)
     )
     from pyspark.sql import Window
 
@@ -2623,9 +2548,9 @@ def simhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int
     any mix of compacted/raw tables reads back to the identical logical
     index)."""
     idx = simhash_index_read(spark, path)
-    fingerprints = idx["fingerprints"].localCheckpoint(eager=True)
-    reps = idx["reps"].localCheckpoint(eager=True)
-    chunks = idx["chunks"].localCheckpoint(eager=True)
+    fingerprints = pin(idx["fingerprints"])
+    reps = pin(idx["reps"])
+    chunks = pin(idx["chunks"])
     _concurrent_actions(
         lambda: _write_swap(fingerprints, f"{path}/fingerprints"),
         lambda: _write_swap(reps, f"{path}/reps"),
@@ -2659,15 +2584,14 @@ def simhash_index_append(
     chunk_bits = bits // n_chunks
     if batch_id is not None and _batch_already_applied(spark, path, batch_id):
         return {"applied": False, "fingerprints": 0, "reps": 0, "chunks": 0, "dropped": 0}
-    fp = (
+    fp = pin(
         simhash_fingerprints(new_docs, id_col, text_col, bits, hash_fn)
         .select(F.col(id_col).alias("doc_id"), "sh")
-        .localCheckpoint(eager=True)
     )
     reps_add = fp.groupBy("sh").agg(F.min("doc_id").alias("rep"))
     existing = _simhash_read(spark, path, "reps").select("sh")
     dropped_cur = _read_or_empty(spark, f"{path}/dropped", _SIMHASH_DROPPED_SCHEMA)
-    new_chunk_rows = (
+    new_chunk_rows = pin(
         fp.select("sh").distinct()
         .join(existing, "sh", "left_anti")
         .select(
@@ -2676,7 +2600,6 @@ def simhash_index_append(
         .select("sh", "c.chunk_idx", "c.chunk_val")
         .join(dropped_cur, ["chunk_idx", "chunk_val"], "left_anti")
         .select("sh", "chunk_idx", "chunk_val")  # USING-join reordered
-        .localCheckpoint(eager=True)
     )
     new_counts = new_chunk_rows.groupBy("chunk_idx", "chunk_val").agg(
         F.count(F.lit(1)).alias("add")
@@ -2687,11 +2610,10 @@ def simhash_index_append(
         .groupBy("chunk_idx", "chunk_val")
         .agg(F.count(F.lit(1)).alias("cur"))
     )
-    newly_dropped = (
+    newly_dropped = pin(
         new_counts.join(cur_counts, ["chunk_idx", "chunk_val"], "left")
         .filter(F.coalesce(F.col("cur"), F.lit(0)) + F.col("add") > max_bucket)
         .select("chunk_idx", "chunk_val")
-        .localCheckpoint(eager=True)
     )
     chunk_append = new_chunk_rows.join(
         newly_dropped, ["chunk_idx", "chunk_val"], "left_anti"
@@ -2747,10 +2669,9 @@ def simhash_match_incremental(
     chunk_bits = bits // n_chunks
     # Pinned once — feeds the same-fp join, chunk explode, and cross
     # join (3x Python fingerprint pass otherwise; see minhash twin).
-    new_fp = (
+    new_fp = pin(
         simhash_fingerprints(new_docs, id_col, text_col, bits, hash_fn)
         .select(F.col(id_col).alias("doc_id_new"), F.col("sh").alias("nsh"))
-        .localCheckpoint(eager=True)
     )
     if mode == "pairs":
         seen_fp = index["fingerprints"].withColumnsRenamed({"doc_id": "doc_id_seen", "sh": "ssh"})

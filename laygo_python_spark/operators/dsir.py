@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def hashed_token_buckets(
     df: DataFrame,
@@ -94,10 +96,9 @@ def dsir_log_weights(
     # this compact frame, so without the pin each would re-run the
     # explode + md5 over the full corpus (measured 3x the token pass at
     # 1M docs / 30M tokens in tools/selection_scale_smoke.py).
-    db = (
+    db = pin(
         tb.groupBy(id_col, "__is_target", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
 
     # Model fits: bucket histograms (<= `buckets` rows each) + scalar

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin, release
+
 
 def bfs_hops(
     edges: DataFrame,
@@ -55,28 +57,15 @@ def bfs_hops(
     """
     from pyspark.sql import Observation
 
-    spark = edges.sparkSession
-
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
-    def _release(ids: set[int]) -> None:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for i, rdd in live.items():
-            if int(i) in ids:
-                rdd.unpersist(False)
-
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .repartition("src")
         .persist()
     )
-    pre = _persistent_ids()
-    visited = (
+    visited = pin(
         sources.select(F.col(node).alias("node")).distinct().withColumn("hops", F.lit(0))
-    ).localCheckpoint(eager=True)
-    prev_pins = _persistent_ids() - pre
+    )
     frontier = visited
     try:
         for k in range(1, max_hops + 1):
@@ -97,17 +86,18 @@ def bfs_hops(
             # release eagerly (same discipline as kcore/CC below —
             # at scale each snapshot is |V| rows of executor storage).
             obs = Observation(f"bfs_frontier_h{k}")
-            before = _persistent_ids()
-            visited = (
-                visited.unionByName(nxt)
-                .observe(obs, F.sum((F.col("hops") == k).cast("long")).alias("n"))
-                .localCheckpoint(eager=True)
+            prev, visited = visited, pin(
+                visited.unionByName(nxt).observe(
+                    obs, F.sum((F.col("hops") == k).cast("long")).alias("n")
+                )
             )
-            _release(prev_pins)
-            prev_pins = _persistent_ids() - before
+            release(prev)
             if not obs.get["n"]:
                 break
             frontier = visited.filter(F.col("hops") == k)
+    except BaseException:
+        release(visited)
+        raise
     finally:
         e.unpersist()
     return visited
@@ -153,12 +143,12 @@ def triangle_count(
     # The oriented table feeds THREE plan legs (both wedge sides + the
     # closing-edge probe); localCheckpoint materializes it once instead
     # of re-running canonicalize+degree+orient per leg.
-    oriented = with_deg.select(
+    oriented = pin(with_deg.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(lower_first, F.col("da")).otherwise(F.col("db")).alias("du"),
         F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)
+    ))
     # Wedges u->v, u->w with (v) before (w) in orientation order: dedups
     # each candidate pair to one wedge row per center.
     l, r = oriented.alias("l"), oriented.alias("r")
@@ -241,25 +231,8 @@ def _kcore_impl(
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    # Release discipline (same as operators/dedup.py): DataFrame.rdd
-    # wraps a NEW RDD, so unpersisting it would be a no-op — the pinned
-    # localCheckpoint blocks are found and freed by persistent-RDD id.
-    spark = edges.sparkSession
-
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
-    def _release(ids: set[int]) -> None:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for i, rdd in live.items():
-            if int(i) in ids:
-                rdd.unpersist(False)
-
-    pre = _persistent_ids()
-    e = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    prev_pins = _persistent_ids() - pre
+    e = pin(canon.unionByName(canon.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+    pinned = e
     r = 0
     n_edges = e.count() if rounds is None else None
     while True:
@@ -292,11 +265,9 @@ def _kcore_impl(
             checkpoint_every and r % checkpoint_every == 0
         )
         if must_ckpt:
-            before = _persistent_ids()
-            nxt = survivors.localCheckpoint(eager=True)
-            _release(prev_pins)
-            prev_pins = _persistent_ids() - before
-            e = nxt
+            e = pin(survivors)
+            release(pinned)
+            pinned = e
         else:
             e = survivors
         if rounds is not None:
@@ -328,7 +299,7 @@ def label_propagation(
     with loop_parallelism(edges.sparkSession):
         return _label_propagation_impl(
             edges, rounds, src, dst, checkpoint_every, assume_symmetric
-        ).localCheckpoint(eager=True)
+        )
 
 
 def _label_propagation_impl(
@@ -382,52 +353,38 @@ def _label_propagation_impl(
             half.select(F.col("d").alias("s"), F.col("s").alias("d"))
         ).distinct()
     )
-
-    spark = edges.sparkSession
-
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in dict(spark.sparkContext._jsc.getPersistentRDDs())}
-
-    def _release(ids: set[int]) -> None:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-        for i, rdd in live.items():
-            if int(i) in ids:
-                rdd.unpersist(False)
-
-    pre = _persistent_ids()
-    e = sym.localCheckpoint(eager=True)
-    edge_pins = _persistent_ids() - pre  # noqa: F841 — documents what stays pinned
+    e = pin(sym)
     # Round 1 under the identity init is pure algebra: every neighbor
     # carries a distinct label (its own id), so all vote counts are 1
     # and the count-desc/min-label argmax degenerates to min(neighbor)
     # — one aggregation, no join, no argmax. Exactly the synchronous
     # update, one round cheaper.
     labels = e.groupBy(F.col("d").alias("node")).agg(F.min("s").alias("label"))
-    prev_pins: set[int] = set()
-    for r in range(2, rounds + 1):
-        if checkpoint_every and (r - 1) % checkpoint_every == 0:
-            before = _persistent_ids()
-            labels = labels.localCheckpoint(eager=True)
-            _release(prev_pins)
-            prev_pins = _persistent_ids() - before
-        votes = (
-            e.join(labels.withColumnRenamed("node", "s"), "s")
-            .groupBy(F.col("d").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        # argmax (count desc, label asc) as ONE partial-aggregatable
-        # max(struct): max = highest n, then smallest label via the
-        # negated field — cheaper than a row_number window (no
-        # per-partition sort, map-side combine after the vote agg).
-        nxt = (
-            votes.select("node", F.struct(F.col("n"), (-F.col("label")).alias("neg")).alias("t"))
-            .groupBy("node")
-            .agg(F.max("t").alias("t"))
-            .select("node", (-F.col("t.neg")).alias("label"))
-        )
-        labels = nxt
-    # prev_pins (the last checkpointed round) and edge_pins still back
-    # the returned plan — they are NOT releasable here. Only superseded
-    # intermediate rounds were released above, right after each newer
-    # checkpoint materialized.
-    return labels
+    pinned = None
+    try:
+        for r in range(2, rounds + 1):
+            if checkpoint_every and (r - 1) % checkpoint_every == 0:
+                labels = pin(labels)
+                release(pinned)
+                pinned = labels
+            votes = (
+                e.join(labels.withColumnRenamed("node", "s"), "s")
+                .groupBy(F.col("d").alias("node"), "label")
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            # argmax (count desc, label asc) as ONE partial-aggregatable
+            # max(struct): max = highest n, then smallest label via the
+            # negated field — cheaper than a row_number window (no
+            # per-partition sort, map-side combine after the vote agg).
+            nxt = (
+                votes.select("node", F.struct(F.col("n"), (-F.col("label")).alias("neg")).alias("t"))
+                .groupBy("node")
+                .agg(F.max("t").alias("t"))
+                .select("node", (-F.col("t.neg")).alias("label"))
+            )
+            labels = nxt
+        return pin(labels)
+    finally:
+        # The pinned result reads neither the edge list nor the last
+        # round's snapshot.
+        release(e, pinned)

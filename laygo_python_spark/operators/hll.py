@@ -38,6 +38,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def _hash_exprs(p: int, hash_fn: str) -> tuple[str, str]:
     """(idx_sql, rho_sql) over the ``__hll_key`` column.
@@ -125,19 +127,6 @@ def _p_of(sketch: DataFrame, what: str) -> int | None:
     return rows[0]["p"]
 
 
-def _pin_registers(sketch: DataFrame) -> DataFrame:
-    """Eagerly materialize a register table (≤ 2^p rows — KBs) so the
-    ``_p_of`` guard's collect and the consuming aggregate read the same
-    blocks instead of each re-executing the sketch's lineage (for a
-    freshly built sketch, a full fact-table pass per consumer — the
-    cms._pin_sketch discipline, including its r13 idempotence: an
-    already-pinned RDD scan returns as-is, and the non-replayable
-    localCheckpoint trade is documented there)."""
-    if sketch._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRDD":
-        return sketch
-    return sketch.localCheckpoint(eager=True)
-
-
 def hll_merge(*sketches: DataFrame) -> DataFrame:
     """Union register tables built with the SAME p — registers form a
     max-lattice, so per-day/per-shard sketches roll up without raw
@@ -152,7 +141,7 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
         # backcompat default so max-merge actually combines them with
         # same-family registers.
         out = out.withColumn("hash_fn", F.coalesce(F.col("hash_fn"), F.lit("xxhash64")))
-    out = _pin_registers(out)  # read twice: guard + max-merge agg
+    out = pin(out)  # read twice: guard + max-merge agg
     _p_of(out, "hll_merge")
     keys = ["idx", "p"] + (["hash_fn"] if "hash_fn" in out.columns else [])
     return out.groupBy(*keys).agg(F.max("rho").alias("rho")).select("idx", "rho", *keys[1:])
@@ -164,7 +153,7 @@ def hll_estimate(sketch: DataFrame) -> float:
     the sketch is KBs). Standard bias-corrected harmonic mean with
     linear-counting fallback for the small range. An EMPTY sketch
     (zero/all-NULL build input) estimates 0.0 — all registers zero."""
-    sketch = _pin_registers(sketch)  # read twice: guard + the estimate agg
+    sketch = pin(sketch)  # read twice: guard + the estimate agg
     p = _p_of(sketch, "hll_estimate")
     if p is None:
         return 0.0
@@ -224,7 +213,7 @@ def hll_estimate_by(sketch: DataFrame, group_cols: list[str] | None = None) -> D
     a sharded sketch with zero driver scalars (``hll_estimate`` is the
     driver-scalar convenience for a single sketch). Groups estimate
     independently; m and alpha come from the sketch's own p."""
-    sketch = _pin_registers(sketch)  # read twice: guard + the group agg
+    sketch = pin(sketch)  # read twice: guard + the group agg
     p = _p_of(sketch, "hll_estimate_by")
     if p is None:
         # Empty sketch: no shards, no groups — an empty (group, est) frame.

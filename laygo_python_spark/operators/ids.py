@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin
 
 
 def assign_sequential_ids(
@@ -46,10 +46,9 @@ def assign_sequential_ids(
     # localCheckpoint pins the materialized partitions: the count job and
     # the id job MUST see byte-identical partitioning (and the range
     # shuffle should run once, not once per downstream action).
-    ordered = (
+    ordered = pin(
         df.repartitionByRange(parts, *order_by)
         .sortWithinPartitions(*order_by)
-        .localCheckpoint(eager=True)
     )
 
     # Tiny driver round-trip: one (pid, count) row per partition.

@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin
 
 # Declared schemas of the stored IVF artifact tables (written by
 # ivf_index_write below) — explicit on every read so no footer
@@ -319,7 +319,7 @@ def ivf_search_indexed(
         centroids, "query_id", "qv", id_col, vec_col, n_probe=n_probe,
         passthrough=("__pre_nq",),
     ).withColumnRenamed("__pre_nq", "nq")
-    q = q.localCheckpoint(eager=True)  # probed twice: cell list + the join
+    q = pin(q)  # probed twice: cell list + the join
     probed = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
     c = (
         spark.read.schema(_IVF_CELLS_SCHEMA).parquet(f"{path}/cells")
@@ -365,9 +365,9 @@ def ivf_index_add(
     centroids = np.array(
         [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])], dtype=np.float64
     )
-    assigned = _assign_cells(
+    assigned = pin(_assign_cells(
         new_corpus, centroids, "neighbor_id", "cv", id_col, vec_col, n_probe=1
-    ).localCheckpoint(eager=True)  # pin before writing into the dirs a later read scans
+    ))  # pin before writing into the dirs a later read scans
     assigned.write.partitionBy("cell").mode("append").parquet(f"{path}/cells")
     return assigned.count()
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def pagerank(
     edges: DataFrame,
@@ -233,7 +235,7 @@ def _pagerank_impl(
                 "node", F.lit((1.0 - damping) / n_s).alias("pr")
             )
             if checkpoint_every:
-                base_rows = base_rows.localCheckpoint(eager=True)
+                base_rows = pin(base_rows)
             # checkpoint_every=0 (the unrolled-loop mode): skip the
             # base_rows materialization job too — its subtree is one
             # broadcast semi-join over the persisted node set, deduped
@@ -264,7 +266,7 @@ def _pagerank_impl(
                     if it + 1 == iterations or (
                         checkpoint_every and (it + 1) % checkpoint_every == 0
                     ):
-                        ranks = ranks.localCheckpoint(eager=True)
+                        ranks = pin(ranks)
             finally:
                 for p_ in pins:
                     p_.unpersist()
@@ -340,7 +342,7 @@ def _pagerank_impl(
             if it + 1 == iterations or (
                 checkpoint_every and (it + 1) % checkpoint_every == 0
             ):
-                ranks = ranks.localCheckpoint(eager=True)
+                ranks = pin(ranks)
     finally:
         for p_ in pins:
             p_.unpersist()

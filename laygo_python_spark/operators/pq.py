@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin
 
 # Declared schemas of the stored-artifact tables this module reads —
 # written by pq_index_write / ivfpq_index_write below, so footer schema
@@ -468,9 +468,8 @@ def pq_encode_append(
 
     Returns the number of codes appended."""
     _, codebooks = pq_index_read(spark, path)
-    codes = pq_encode(new_corpus, codebooks, id_col=id_col, vec_col=vec_col).localCheckpoint(
-        eager=True  # pin before appending into the dir a later read scans
-    )
+    # pin before appending into the dir a later read scans
+    codes = pin(pq_encode(new_corpus, codebooks, id_col=id_col, vec_col=vec_col))
     codes.write.mode("append").parquet(f"{path}/codes")
     return codes.count()
 
@@ -586,9 +585,9 @@ def ivfpq_index_add(
     quantization error (``pq_encode_append`` docstring) — the composed
     index inherits both. Returns rows appended."""
     centroids, codebooks = _ivfpq_index_params(spark, path)
-    rows = _assign_encode(
+    rows = pin(_assign_encode(
         new_corpus, centroids, codebooks, id_col, vec_col
-    ).localCheckpoint(eager=True)  # pin before appending into scanned dirs
+    ))  # pin before appending into scanned dirs
     rows.write.partitionBy("cell").mode("append").parquet(f"{path}/codes")
     if not count_rows:
         return 0

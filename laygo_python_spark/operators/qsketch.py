@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin
 
 
 def qsketch_build(df: DataFrame, col: str, gamma: float = 1.02) -> DataFrame:
@@ -103,8 +103,7 @@ def qsketch_merge(*sketches: DataFrame) -> DataFrame:
     out = sketches[0]
     for s in sketches[1:]:
         out = out.unionByName(s)
-    if out._jdf.queryExecution().analyzed().getClass().getSimpleName() != "LogicalRDD":
-        out = out.localCheckpoint(eager=True)  # read twice: guard + merge agg (cms._pin_sketch discipline)
+    out = pin(out)  # read twice: guard + merge agg
     _gamma(out, "qsketch_merge")
     return out.groupBy("bucket", "gamma").agg(F.sum("cnt").alias("cnt")).select(
         "bucket", "cnt", "gamma"
@@ -121,8 +120,7 @@ def qsketch_quantiles(sketch: DataFrame, qs: list[float]) -> DataFrame:
     semantics up to bucket resolution (relative error ≤ gamma-1)."""
     from pyspark.sql import Window
 
-    if sketch._jdf.queryExecution().analyzed().getClass().getSimpleName() != "LogicalRDD":
-        sketch = sketch.localCheckpoint(eager=True)  # read twice: guard + the window pass
+    sketch = pin(sketch)  # read twice: guard + the window pass
     g = _gamma(sketch, "qsketch_quantiles")
     lg = math.log(g)
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)

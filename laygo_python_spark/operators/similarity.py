@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df
+from ..session import local_rows_df, pin
 
 
 def as_double_array(col: str | Column) -> Column:
@@ -531,9 +531,9 @@ def srp_search_indexed(
     set (a bounded driver list), score bucket-locally. Matches
     ``lsh_bucketed_topk`` with the same params (pytest-pinned)."""
     p = spark.read.schema(_SRP_PARAM_SCHEMA).parquet(f"{path}/params").collect()[0]
-    q = _with_bucket_keys(
+    q = pin(_with_bucket_keys(
         queries, "query_id", "qv", p["dim"], p["n_planes"], p["n_tables"], p["seed"], id_col, vec_col
-    ).localCheckpoint(eager=True)  # read twice: bucket list + join
+    ))  # read twice: bucket list + join
     probed = [r["bkey"] for r in q.select("bkey").distinct().collect()]
     c = (
         spark.read.schema("neighbor_id long, cv array<double>, bkey long").parquet(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def merge_upsert(
     target: DataFrame,
@@ -124,7 +126,7 @@ def gapfill(
     construction (series × occupied buckets), so materializing it is the
     right trade at any scale.
     """
-    df = df.localCheckpoint(eager=True)
+    df = pin(df)
     unit = step.split()[-1].rstrip("s")
     bounds = df.agg(
         F.date_trunc(unit, F.min(ts)).alias("__lo"), F.date_trunc(unit, F.max(ts)).alias("__hi")

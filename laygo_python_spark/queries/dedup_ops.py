@@ -22,6 +22,7 @@ from laygo_python_spark.operators import dedup
 from laygo_python_spark.operators.dedup import _P, _hash_params
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
+from laygo_python_spark.session import pin
 
 
 def _minhash_sig_cte(num_hashes: int, seed: int = 42, doc_filter: str = "") -> str:
@@ -608,10 +609,10 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
-            sig_box[tag] = dedup._minhash_sig_keys(
+            sig_box[tag] = pin(dedup._minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
                 prow["bands"], prow["seed"], prow["hash_fn"],
-            ).localCheckpoint(eager=True)
+            ))
 
         dedup._concurrent_actions(
             lambda: _mk_sig("day2", day2), lambda: _mk_sig("probe", probe)
@@ -622,9 +623,9 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             return_view=True, background_writes=True,
         )
         try:
-            return dedup.minhash_match_incremental(
+            return pin(dedup.minhash_match_incremental(
                 probe, res["view"], precomputed_sig=sig_box["probe"]
-            ).localCheckpoint(eager=True)
+            ))
         finally:
             res["wait"]()
     finally:
@@ -664,10 +665,10 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
-            sig_box[tag] = dedup._minhash_sig_keys(
+            sig_box[tag] = pin(dedup._minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
                 prow["bands"], prow["seed"], prow["hash_fn"],
-            ).localCheckpoint(eager=True)
+            ))
 
         dedup._concurrent_actions(
             lambda: _mk_sig("day2", day2), lambda: _mk_sig("probe", probe)
@@ -678,9 +679,9 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dedup.minhash_index_compact(spark, path, stats=False)
         stored = dedup.minhash_index_read(spark, path, params=prow)
-        return dedup.minhash_match_incremental(
+        return pin(dedup.minhash_match_incremental(
             probe, stored, precomputed_sig=sig_box["probe"]
-        ).localCheckpoint(eager=True)
+        ))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -709,7 +710,7 @@ def dedup_simhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.simhash_index_write(dedup.simhash_index(day1, bits=60, hash_fn="md5"), path)
         dedup.simhash_index_append(spark, path, day2, batch_id=1, stats=False)
         stored = dedup.simhash_index_read(spark, path)
-        return dedup.simhash_match_incremental(probe, stored).localCheckpoint(eager=True)
+        return pin(dedup.simhash_match_incremental(probe, stored))
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -856,7 +857,7 @@ def lsh_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _mk_truth() -> None:
-        box["truth"] = (
+        box["truth"] = pin(
             # strategy="prefix" pinned by the caller: a 3-gram
             # vocabulary over a real corpus is never <= 64 distinct
             # grams, so the auto probe's sample job (0.8 s / 2 jobs at
@@ -865,7 +866,6 @@ def lsh_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             # results are identical.
             dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8, strategy="prefix")
             .select("doc_id_a", "doc_id_b", F.lit(1).alias("__t"))
-            .localCheckpoint(eager=True)
         )
 
     dedup._concurrent_actions(_mk_cands, _mk_truth)
@@ -1139,7 +1139,7 @@ def simhash_radius_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         box["pairs"] = dedup.simhash_near_dups(docs, max_hamming=5, hash_fn="md5")
 
     def _mk_truth() -> None:
-        box["truth"] = (
+        box["truth"] = pin(
             # strategy="prefix" pinned by the caller: a 3-gram
             # vocabulary over a real corpus is never <= 64 distinct
             # grams, so the auto probe's sample job could only ever
@@ -1147,7 +1147,6 @@ def simhash_radius_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Path equivalence is pytest-pinned; results are identical.
             dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.8, strategy="prefix")
             .select("doc_id_a", "doc_id_b", F.lit(1).alias("__t"))
-            .localCheckpoint(eager=True)
         )
 
     dedup._concurrent_actions(_mk_pairs, _mk_truth)

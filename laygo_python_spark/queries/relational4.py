@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
+from laygo_python_spark.session import pin
 
 
 @query(
@@ -365,9 +366,9 @@ def hll_relational_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("day", F.to_date("ts"))
     )
     days = [r["day"] for r in ev.select("day").distinct().orderBy("day").limit(3).collect()]
-    sharded = hll_build_sharded(
+    sharded = pin(hll_build_sharded(
         ev.filter(F.col("day").isin(days)), "user_id", shard="day", p=12, hash_fn="md5"
-    ).localCheckpoint(eager=True)
+    ))
     per_day = hll_estimate_by(sharded, ["shard"]).select(
         F.col("shard").cast("string").alias("day"), F.round("est", 1).alias("est_distinct")
     )

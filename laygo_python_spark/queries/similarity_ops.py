@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from laygo_python_spark.operators import multimodal, similarity
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
+from laygo_python_spark.session import pin
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -182,9 +183,9 @@ def ann_srp_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         srp_index_write(emb.filter(F.col("vec_id") % 2 == 0), path, n_planes=4, n_tables=8)
         srp_index_add(spark, path, emb.filter(F.col("vec_id") % 2 == 1))
         out = srp_search_indexed(spark, path, emb.filter(F.col("vec_id") < 5), k=10)
-        return out.select(
+        return pin(out.select(
             "query_id", "neighbor_id", "sim", F.col("rank").cast("int").alias("rank")
-        ).localCheckpoint(eager=True)
+        ))
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -611,9 +612,9 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivfpq_search_indexed(
             spark, path, emb.filter(F.col("vec_id") < 5), k=10, n_probe=4
         )
-        return out.select(
+        return pin(out.select(
             "query_id", "neighbor_id", "sim", F.col("rank").cast("int").alias("rank")
-        ).localCheckpoint(eager=True)
+        ))
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -1828,9 +1829,9 @@ def pq_m_distortion_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 20)
-    truth = brute_force_topk(emb, queries_df, k=10).select(
+    truth = pin(brute_force_topk(emb, queries_df, k=10).select(
         "query_id", "neighbor_id", F.lit(1).alias("__t")
-    ).localCheckpoint(eager=True)  # feeds every grid point + the denominator
+    ))  # feeds every grid point + the denominator
     nt = truth.agg(F.count(F.lit(1)).alias("__n_truth"))
     parts = []
     for m in (8, 16, 32):

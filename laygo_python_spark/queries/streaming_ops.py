@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from laygo_python_spark.queries import query
+from laygo_python_spark.session import pin
 from laygo_python_spark.streaming import (
     read_events_stream,
     run_to_completion,
@@ -298,10 +299,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
         # Pin the result, then remove the scratch dirs.
-        return (
+        return pin(
             spark.read.parquet(out_dir)
             .select("doc_id_new", "doc_id_seen", "n_bands")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -356,9 +356,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bin")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        return drift_from_counts(ref_hist, cur_hist, ["event_type"]).localCheckpoint(
-            eager=True
-        )
+        return pin(drift_from_counts(ref_hist, cur_hist, ["event_type"]))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -413,14 +411,13 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         partials = spark.read.parquet(f"{scratch}/summaries").select("p_brand", "cnt")
         candidates = mg_merge(partials, "p_brand", k=k).select("p_brand")
         n_tot = part.agg(F.count(F.lit(1)).alias("n_tot"))
-        return (
+        return pin(
             part.join(F.broadcast(candidates), "p_brand", "left_semi")
             .groupBy("p_brand")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .crossJoin(F.broadcast(n_tot))
             .filter(F.col("cnt") >= F.col("n_tot") * min_freq)
             .select("p_brand", "cnt")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -474,7 +471,7 @@ def stream_moments_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         partials = spark.read.parquet(f"{scratch}/summaries").select(
             "event_type", "n", "s", "m2"
         )
-        return (
+        return pin(
             merge_moments_by(partials, ["event_type"])
             .select(
                 "event_type", "n_rows",
@@ -482,7 +479,6 @@ def stream_moments_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round("var_pop", 6).alias("var_pop"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -563,7 +559,7 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("x.q", "x.exact")
         )
-        return (
+        return pin(
             est.join(exact, "q")
             .select(
                 "q",
@@ -572,7 +568,6 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.abs(F.col("est") - F.col("exact")) / F.col("exact"), 4).alias("rel_err"),
             )
             .orderBy("q")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -635,10 +630,9 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.sum("n").alias("n"))
         )
-        return (
+        return pin(
             dp_laplace_release(merged, ["event_type"], "n", epsilon=1.0)
             .orderBy("event_type")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -710,14 +704,13 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
         partials = spark.read.parquet(f"{scratch}/summaries")
         merged = partials.groupBy("shard", "idx", "p").agg(F.max("rho").alias("rho"))
-        return (
+        return pin(
             hll_estimate_by(merged, ["shard"])
             .select(
                 F.col("shard").alias("event_type"),
                 F.round("est", 1).alias("est_distinct"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -769,9 +762,8 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         top = partials.orderBy("es_key", "doc_id").limit(50)
         w = Window.orderBy("es_key", "doc_id")
-        return (
+        return pin(
             top.withColumn("rn", F.row_number().over(w))
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -829,11 +821,10 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
         finally:
             q.stop()
-        return (
+        return pin(
             spark.read.parquet(out_dir)
             .select("doc_id_a", "doc_id_b", "start_a", "start_b", "span_len")
             .orderBy("doc_id_a", "doc_id_b", "start_a", "start_b")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -155,6 +155,45 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema=st)
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now (eager ``localCheckpoint``) so every later
+    reader scans the stored blocks instead of re-running its lineage.
+
+    The returned frame records the id of the one RDD it pinned, read
+    from its own plan, so a pin taken at the same time by another
+    thread is never mistaken for it. ``release`` frees exactly those
+    blocks; without it the async ContextCleaner frees them once the
+    frame is dereferenced.
+
+    Idempotent: a frame returned by ``pin`` comes back unchanged. A
+    frame DERIVED from a pin (a select, a filter) is a new plan and is
+    pinned again.
+
+    Trade-off: localCheckpoint blocks are NON-REPLAYABLE. Once the
+    lineage is truncated, a lost executor's blocks cannot be recomputed
+    and the consuming job fails. Pin small or bounded frames, or frames
+    whose recomputation would cost more than that risk."""
+    if vars(df).get("_pinned_rdd") is not None:
+        return df
+    out = df.localCheckpoint(eager=True)
+    out._pinned_rdd = out._jdf.queryExecution().analyzed().rdd().id()
+    return out
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Unpersist the blocks recorded by ``pin`` on each frame. ``None``,
+    a frame that is not pinned, or one already released is a no-op. A
+    released frame must not be read again (its lineage is gone)."""
+    dfs = [df for df in dfs if df is not None]
+    ids = {vars(df).pop("_pinned_rdd", None) for df in dfs} - {None}
+    if not ids:
+        return
+    live = dict(dfs[0].sparkSession.sparkContext._jsc.getPersistentRDDs())
+    for i in ids:
+        if i in live:
+            live[i].unpersist(False)
+
+
 _TABLE_CACHE: dict[tuple[str, str, str], tuple[object, DataFrame]] = {}
 
 

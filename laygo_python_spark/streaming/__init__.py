@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from laygo_python_spark.session import ensure_session_defaults, pin
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based stream over the events fixture (schema pinned —
@@ -19,8 +21,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros with integer division; naive micros reads as ltz (same
     conventions as session.read_table, so batch and stream agree to the
     microsecond)."""
-    from laygo_python_spark.session import ensure_session_defaults
-
     ensure_session_defaults(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
@@ -169,10 +169,10 @@ def incremental_dedup_processor(
         # feeds BOTH the match and (anti-joined down to the accepted
         # docs) the index append — the pre-r7 shape shingled the batch
         # twice and pinned the raw batch rows a third time.
-        sig = dedup._minhash_sig_keys(
+        sig = pin(dedup._minhash_sig_keys(
             new, "doc_id", "text",
             p["shingle_n"], p["num_hashes"], p["bands"], p["seed"], p["hash_fn"],
-        ).localCheckpoint(eager=True)
+        ))
         # The sink write IS the materialization: the accepted-set
         # anti-join below reads the landed partition back instead of
         # paying a separate checkpoint job per batch (r9). The partition

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from laygo_python_spark.context import Context
 from laygo_python_spark.errors import ErrorHandler, PipelineAbortError
+from laygo_python_spark.session import pin
 
 # A step takes (df, worker_ctx_dict_or_None) and returns a DataFrame.
 Step = Callable[[DataFrame, dict | None], DataFrame]
@@ -743,7 +744,7 @@ class Transformer:
                 df = body(df, context)
                 i += 1
                 if i % checkpoint_every == 0:
-                    df = df.localCheckpoint(eager=True)
+                    df = pin(df)
             return df
 
         return self._with(step)

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
-from laygo_python_spark.operators import dedup
+from laygo_python_spark.operators import dedup, graph
 from laygo_python_spark.session import read_table
 
 
@@ -219,6 +220,69 @@ def test_dedup_queries_leave_no_cached_blocks(spark, planted):
     result.collect()
     # at most the one live checkpoint backing `result` beyond baseline
     assert persistent() <= base + 1
+
+
+def _planted_edges(planted):
+    """A chain-with-chords graph over the planted doc ids: each doc
+    links to the next two ids."""
+    a = planted.select(F.col("doc_id").alias("src"))
+    b = planted.select(F.col("doc_id").alias("dst"))
+    return a.crossJoin(b).filter((F.col("dst") > F.col("src")) & (F.col("dst") - F.col("src") <= 2))
+
+
+# Each graph loop over the planted edge graph. Every one keeps exactly
+# one pin alive: the snapshot its result reads.
+_GRAPH_LOOPS = {
+    "bfs_hops": lambda e, s: graph.bfs_hops(e, s.limit(1).select(F.col("src").alias("node")), max_hops=3),
+    "kcore": lambda e, s: graph.kcore(e, k=2),
+    "label_propagation": lambda e, s: graph.label_propagation(e, rounds=3),
+    "connected_components": lambda e, s: dedup.connected_components(
+        e, src="src", dst="dst", driver_threshold=0
+    ),
+}
+
+
+def _pins(spark) -> set[int]:
+    return {int(k) for k in dict(spark.sparkContext._jsc.getPersistentRDDs())}
+
+
+@pytest.mark.parametrize("op", sorted(_GRAPH_LOOPS))
+def test_graph_loops_leave_no_cached_blocks(spark, planted, op):
+    """Rolling release in the graph loops: every superseded round, and
+    every pin the result does not read, is released before the operator
+    returns, so only the snapshot backing the result stays. (Freeing
+    that one after the caller drops the result is the ContextCleaner's
+    job, which the dedup test above covers.)"""
+    edges = _planted_edges(planted)
+    base = _pins(spark)
+    result = _GRAPH_LOOPS[op](edges, edges.orderBy("src"))
+    assert result.count() > 0
+    assert len(_pins(spark) - base) <= 1
+
+
+@pytest.mark.parametrize("module, op", [("graph", "bfs_hops"), ("dedup", "connected_components")])
+def test_pin_owner_that_raises_releases_its_pins(spark, planted, monkeypatch, module, op):
+    """A loop that fails after its first pin (the visited set, the
+    symmetric edge list) releases that pin on the way out instead of
+    leaving it for the ContextCleaner."""
+    from laygo_python_spark.session import pin as real_pin
+
+    mod = {"graph": graph, "dedup": dedup}[module]
+    calls = []
+
+    def failing_pin(df):
+        calls.append(df)
+        if len(calls) > 1:
+            raise RuntimeError("injected failure after the first pin")
+        return real_pin(df)
+
+    monkeypatch.setattr(mod, "pin", failing_pin)
+    edges = _planted_edges(planted)
+    base = _pins(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        _GRAPH_LOOPS[op](edges, edges.orderBy("src"))
+    assert len(calls) == 2
+    assert not (_pins(spark) - base)
 
 
 def test_simhash_fingerprints_compute_once(spark, planted):

@@ -264,3 +264,59 @@ def test_pq_m_distortion_curve_monotone_and_consistent(spark, sf_dir):
             d2 = ((cb[s] - xs[None, :]) ** 2).sum(axis=1)
             dist += float(d2.min())
         assert abs(got[r.vec_id] - dist) < 1e-9, r.vec_id
+
+
+def _seeded_vectors(spark, n=48, dim=8, seed=7):
+    from laygo_python_spark.session import local_rows_df
+
+    rng = np.random.default_rng(seed)
+    rows = [(i, rng.normal(size=dim).tolist()) for i in range(n)]
+    return local_rows_df(spark, rows, "vec_id long, embedding array<double>"), rng
+
+
+def test_assign_encode_equals_encode_join_assign_cells(spark):
+    """The fused one-pass (codes, cell) equals pq_encode ⋈ _assign_cells
+    bit for bit, including the lowest-cell tiebreak on a duplicated
+    centroid."""
+    from laygo_python_spark.operators.ivf import _assign_cells
+    from laygo_python_spark.operators.pq import _assign_encode
+
+    df, rng = _seeded_vectors(spark)
+    centroids = rng.normal(size=(5, 8))
+    centroids[4] = centroids[1]  # exact d2 tie: must break to cell 1
+    codebooks = rng.normal(size=(2, 4, 4))
+    fused = {r["vec_id"]: (list(r["codes"]), r["cell"]) for r in _assign_encode(df, centroids, codebooks).collect()}
+    codes = pq_encode(df, codebooks)
+    cells = _assign_cells(df, centroids, "vec_id", "v", "vec_id", "embedding", n_probe=1)
+    joined = {
+        r["vec_id"]: (list(r["codes"]), r["cell"])
+        for r in codes.join(cells.select("vec_id", "cell"), "vec_id").collect()
+    }
+    assert len(fused) == 48
+    assert fused == joined
+    assert 4 not in {cell for _, cell in fused.values()}
+
+
+@pytest.mark.parametrize("n_probe", [1, 3, 9])
+def test_assign_cells_driver_equals_assign_cells(spark, n_probe):
+    """The driver-side query assignment equals the distributed one, probe
+    order included (n_probe=9 over-probes the 5 cells)."""
+    from laygo_python_spark.operators.ivf import _assign_cells
+    from laygo_python_spark.operators.pq import _assign_cells_driver
+
+    df, rng = _seeded_vectors(spark, n=20, seed=11)
+    centroids = rng.normal(size=(5, 8))
+    centroids[3] = centroids[0]
+    qrows = df.select("vec_id", "embedding").orderBy("vec_id").collect()
+    driver = _assign_cells_driver(qrows, centroids, n_probe)
+    dist = (
+        _assign_cells(df, centroids, "vec_id", "v", "vec_id", "embedding", n_probe=n_probe, rank_out="rank")
+        .select("vec_id", "cell", "rank")
+        .collect()
+    )
+    expect = np.zeros_like(driver)
+    for r in dist:
+        expect[r["vec_id"], r["rank"] - 1] = r["cell"]
+    assert driver.shape == (20, min(n_probe, 5))
+    assert len(dist) == driver.size
+    assert np.array_equal(driver, expect)
