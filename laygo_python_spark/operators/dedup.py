@@ -33,25 +33,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df, pin, release
+from .. import artifact
+from ..session import concurrent_actions, local_rows_df, pin, release
 
 # Universal-hash constants: h_i(x) = (a_i * x + b_i) mod P over
 # x = xxhash64(shingle) folded into [0, 2^31). P = 2^31 - 1 (prime);
 # a_i*x + b_i < 2^62 so the arithmetic never overflows a signed 64-bit
 # (Spark 4 runs ANSI mode — overflow would raise, not wrap).
-_P = 2_147_483_647
+MINHASH_PRIME = 2_147_483_647
 
 
-def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs — a simple LCG expansion of the seed so
     results are reproducible across runs and engines."""
     params = []
     state = seed
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
-        a = (state % (_P - 1)) + 1
+        a = (state % (MINHASH_PRIME - 1)) + 1
         state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
-        b = state % _P
+        b = state % MINHASH_PRIME
         params.append((a, b))
     return params
 
@@ -78,12 +79,10 @@ def _provably_small_input(df: DataFrame, min_bytes_per_partition: int = 4 << 20)
     if not files or len(files) >= target:
         return False
     try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
         total = 0
         for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            total += p.getFileSystem(conf).getFileStatus(p).getLen()
+            fsys, p = artifact.fs(spark, f)
+            total += fsys.getFileStatus(p).getLen()
     except Exception:  # noqa: BLE001 — metadata probe is best-effort
         return False
     return total < min_bytes_per_partition * target
@@ -189,7 +188,7 @@ def minhash_signatures(
     import numpy as np
     import pandas as pd
 
-    params = _hash_params(num_hashes, seed)
+    params = hash_params(num_hashes, seed)
     A = np.array([a for a, _ in params], dtype=np.int64)[None, :]
     B = np.array([b for _, b in params], dtype=np.int64)[None, :]
     hasher = _shingle_hasher(hash_fn, seed)
@@ -214,7 +213,7 @@ def minhash_signatures(
                     count=len(sh),
                 )[:, None]
                 # a*h < 2^62 — no int64 overflow; % P folds back under 2^31
-                sigs.append(((h * A + B) % _P).min(axis=0).tolist())
+                sigs.append(((h * A + B) % MINHASH_PRIME).min(axis=0).tolist())
                 ids.append(doc_id)
             if ids:
                 yield pd.DataFrame({id_col: ids, "sig": sigs})
@@ -233,7 +232,7 @@ _FOLD_C = 6364136223846793005
 _FOLD_SALT = 0x9E3779B97F4A7C15  # golden-ratio odd constant, salts band index
 
 
-def _minhash_sig_keys(
+def minhash_sig_keys(
     docs: DataFrame,
     id_col: str,
     text_col: str,
@@ -258,7 +257,7 @@ def _minhash_sig_keys(
     import pandas as pd
 
     rows_per_band = num_hashes // bands
-    params = _hash_params(num_hashes, seed)
+    params = hash_params(num_hashes, seed)
     A = np.array([a for a, _ in params], dtype=np.int64)[None, :]
     B = np.array([b for _, b in params], dtype=np.int64)[None, :]
     hasher = _shingle_hasher(hash_fn, seed)
@@ -280,7 +279,7 @@ def _minhash_sig_keys(
                         dtype=np.int64,
                         count=len(sh),
                     )[:, None]
-                    sig = ((h * A + B) % _P).min(axis=0).astype(np.uint64)
+                    sig = ((h * A + B) % MINHASH_PRIME).min(axis=0).astype(np.uint64)
                     k = np.uint64(0)
                     for v in sig:
                         k = k * C + v
@@ -367,7 +366,7 @@ def minhash_lsh_candidates(
     if clique_mode not in ("pairs", "star"):
         raise ValueError(f"unknown clique_mode {clique_mode!r}")
 
-    sig = _minhash_sig_keys(docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn)
+    sig = minhash_sig_keys(docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn)
     # One exchange on the signature key; everything downstream of the
     # Python signature pass stays a single linear chain (a self-join
     # would re-execute the mapInPandas subtree — exchange reuse never
@@ -528,7 +527,7 @@ def minhash_index(
     # caller-side checkpoints in the queries) would re-shingle the whole
     # seen corpus. Blocks release via ContextCleaner once the returned
     # frames are dereferenced.
-    sig = pin(_minhash_sig_keys(
+    sig = pin(minhash_sig_keys(
         docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
     ))
     membership = sig.select(F.col(id_col).alias("doc_id"), "sig_key")
@@ -560,160 +559,25 @@ def minhash_index(
     }
 
 
-_MINHASH_PARAM_SCHEMA = (
-    "shingle_n int, num_hashes int, bands int, seed int, hash_fn string, max_bucket int"
-)
-
-
-def _hadoop_fs(spark, path: str):
-    """(jvm, FileSystem, Path) for ``path``, resolved through Hadoop —
-    scheme-less paths go to ``fs.defaultFS`` (HDFS/object store on a
-    cluster, local FS in local mode), NOT the driver's local disk."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), p
-
-
-# Declared schemas of every stored-index table this module writes. The
-# artifact layout is fixed by the writers below, so parquet footer
-# schema inference on the read side would only rediscover these
-# constants — and each inference is a whole 1-task driver-scheduled job
-# (~3 ms of work under ~0.1 s of job floor; dedup_index_append paid 7
-# such jobs per invocation, measured r13 via the UI REST profile).
-# A column absent from an older artifact's files reads as NULL under an
-# explicit schema (vs absent under inference), so the params readers
-# treat None like a missing key.
-_IDX_TBL_SCHEMAS = {
-    "membership": "doc_id long, sig_key long",
-    "reps": "sig_key long, rep long",
-    "bands": "sig_key long, band_key long",
-    "dropped": "band_key long",
-    "applied_batches": "batch_id long",
-}
-
-
-def _idx_read(spark, path: str, tbl: str) -> DataFrame:
-    """Open a stored MinHash-index table with its declared schema (no
-    footer-inference job)."""
-    return spark.read.schema(_IDX_TBL_SCHEMAS[tbl]).parquet(f"{path}/{tbl}")
-
-
-def _read_params_row(spark, path: str, schema: str) -> dict:
-    """The 1-row params table of a stored artifact, as a dict — read
-    with the declared schema so the collect is the only job."""
-    return spark.read.schema(schema).parquet(f"{path}/params").collect()[0].asDict()
-
-
-def _read_or_empty(spark, path: str, schema: str) -> DataFrame:
-    """A parquet subdir that an older artifact version never wrote reads
-    as an empty frame of the expected schema (not an error) — the
-    append/read paths treat 'no dropped table' as 'no dropped
-    buckets'. Existence is resolved through the Hadoop FileSystem (one
-    cheap metadata RPC), so scheme-less paths hit the CLUSTER's default
-    FS, not the driver's local disk (an os.path probe here read
-    'dropped'/'applied_batches' as empty on any non-local default FS —
-    capped buckets resurrected and replay idempotency silently
-    vanished). Past the existence check, read errors PROPAGATE: a
-    transient/permission failure must raise, not masquerade as an empty
-    table."""
-    _, fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return local_rows_df(spark, [], schema)
-    return spark.read.schema(schema).parquet(path)
-
-
-def _batch_already_applied(spark, path: str, batch_id: int) -> bool:
-    """Replay-marker probe. The marker table is absent until the first
-    marked append, and a filter+count job on a guaranteed-empty frame
-    still pays ~0.3 s of job scheduling — so short-circuit on the FS
-    existence check (one metadata RPC) before paying for a real scan."""
-    _, fs, p = _hadoop_fs(spark, f"{path}/applied_batches")
-    if not fs.exists(p):
-        return False
-    applied = _idx_read(spark, path, "applied_batches")
-    return bool(applied.filter(F.col("batch_id") == int(batch_id)).limit(1).count())
-
-
-def _write_swap(df: DataFrame, path: str) -> None:
-    """Crash-safe table rewrite: write to a sibling temp dir, then
-    checked-rename swap with a backup (the ``sinks.compact_files``
-    discipline). A bare ``mode("overwrite")`` on the SAME directory the
-    data was read from deletes-then-writes — a crash in between
-    destroys the stored table, which is fatal for an index that a
-    long-running foreachBatch loop compacts inline. Every rename is
-    checked (Hadoop returns False instead of raising); the backup is
-    deleted only after the new data is in place, and a leftover backup
-    from a crashed prior run aborts up front."""
-    spark = df.sparkSession
-    jvm, fs, dest = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + "__compacting")
-    backup = jvm.org.apache.hadoop.fs.Path(path + "__precompact")
-    if fs.exists(backup):
-        raise RuntimeError(
-            f"{backup} exists — a previous compaction crashed mid-swap; "
-            "recover it (rename back or delete) before compacting again"
-        )
-    df.write.mode("overwrite").parquet(str(tmp))
-    if fs.exists(dest) and not fs.rename(dest, backup):
-        fs.delete(tmp, True)
-        raise RuntimeError(f"compaction aborted: could not move {path} aside")
-    if not fs.rename(tmp, dest):
-        fs.rename(backup, dest)  # roll back — original data untouched
-        raise RuntimeError(f"compaction aborted: could not move compacted data into {path}")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-
-
-def _concurrent_actions(*thunks) -> None:
-    """Run independent driver actions (writes to DISTINCT directories,
-    whose input frames are checkpoint-pinned) concurrently — Spark's
-    scheduler interleaves their stages across executor slots, so the
-    wall cost is ~max instead of sum. At sf0.1 each parquet write is
-    dominated by fixed job-scheduling floor (~0.3 s), and the index
-    write/append paths issue 4–5 of them; sequential issue billed ~1 s
-    of pure scheduling per operation (measured r6). Same driver-side
-    thread-fanout discipline as ``Pipeline.branch``. Exceptions
-    propagate (first one wins) — a failed write must fail the
-    operation."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
-        for f in futures:
-            f.result()
-
-
 def minhash_index_write(index: dict[str, DataFrame], path: str) -> None:
     """Persist an index as parquet subdirectories INCLUDING its build
     params — a matcher keyed with different params would silently find
     nothing (the keys never collide), so the params ride with the
     artifact and ``minhash_match_incremental`` resolves them from
-    there. The four table writes land in distinct directories from
-    pinned/deterministic inputs, so they are issued concurrently."""
-    spark = index["membership"].sparkSession
-    dropped = index.get("dropped", local_rows_df(spark, [], "band_key long"))
-    _concurrent_actions(
-        lambda: index["membership"].write.mode("overwrite").parquet(f"{path}/membership"),
-        lambda: index["reps"].write.mode("overwrite").parquet(f"{path}/reps"),
-        lambda: index["bands"].write.mode("overwrite").parquet(f"{path}/bands"),
-        lambda: dropped.coalesce(1).write.mode("overwrite").parquet(f"{path}/dropped"),
+    there."""
+    _index_write(index, path, "minhash", ("membership", "reps", "bands"))
+
+
+def _index_write(index: dict, path: str, family: str, tables: tuple[str, ...]) -> None:
+    """Write a MinHash or SimHash index: its tables (distinct directories
+    from pinned/deterministic inputs, so concurrently), then params."""
+    spark = index[tables[0]].sparkSession
+    dropped = index.get("dropped", local_rows_df(spark, [], artifact.SCHEMAS[family]["dropped"]))
+    concurrent_actions(
+        *(lambda t=t: artifact.write(path, t, index[t]) for t in tables),
+        lambda: artifact.write(path, "dropped", dropped.coalesce(1)),
     )
-    p = index["params"]
-    local_rows_df(
-        spark,
-        [
-            (
-                p["shingle_n"],
-                p["num_hashes"],
-                p["bands"],
-                p["seed"],
-                p["hash_fn"],
-                p.get("max_bucket", 1000),
-            )
-        ],
-        _MINHASH_PARAM_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
+    artifact.write_params(spark, path, family, index["params"])
 
 
 def minhash_index_read(spark, path: str, params: dict | None = None) -> dict[str, DataFrame]:
@@ -729,21 +593,14 @@ def minhash_index_read(spark, path: str, params: dict | None = None) -> dict[str
     batch) passes it to skip the parquet-collect job (~0.3 s of driver
     scheduling at small SF). Append never mutates params, so a cached
     row can't go stale."""
-    row = params if params is not None else (
-        _read_params_row(spark, path, _MINHASH_PARAM_SCHEMA)
-    )
-    params = {k: row[k] for k in ("shingle_n", "num_hashes", "bands", "seed", "hash_fn")}
-    # None covers the explicit-schema reading of a pre-max_bucket
-    # artifact (the column reads as NULL rather than being absent).
-    mb = row.get("max_bucket")
-    params["max_bucket"] = 1000 if mb is None else mb
-    dropped = _read_or_empty(spark, f"{path}/dropped", "band_key long")
+    params = dict(params) if params is not None else artifact.read_params(spark, path, "minhash")
+    dropped = artifact.read_or_empty(spark, path, "minhash", "dropped")
     return {
-        "membership": _idx_read(spark, path, "membership"),
-        "reps": _idx_read(spark, path, "reps")
+        "membership": artifact.read(spark, path, "minhash", "membership"),
+        "reps": artifact.read(spark, path, "minhash", "reps")
         .groupBy("sig_key")
         .agg(F.min("rep").alias("rep")),
-        "bands": _idx_read(spark, path, "bands")
+        "bands": artifact.read(spark, path, "minhash", "bands")
         .join(dropped, "band_key", "left_anti")
         .select("sig_key", "band_key"),
         "dropped": dropped,
@@ -797,11 +654,9 @@ def minhash_index_append(
     ``batch_id`` (optional) makes re-delivery a no-op: an id already in
     ``applied_batches`` returns ``{"applied": False}`` without touching
     the index — the exactly-once discipline a ``foreachBatch`` caller
-    needs under Structured Streaming's replay contract. The marker is
-    written LAST, so a crash mid-append can leave a partial batch that a
-    retry re-appends (duplicate membership rows; candidate pairs repeat
-    but verification dedups) — true write atomicity needs a
-    transactional table format underneath, which parquet alone is not.
+    needs under Structured Streaming's replay contract. The batch
+    commits all or nothing (``artifact.append``), so a retry after a
+    crash mid-append equals a rebuild.
 
     Returns appended row counts per table; ``stats=False`` skips that
     counting job for callers that discard the dict (the registered
@@ -809,7 +664,7 @@ def minhash_index_append(
 
     ``precomputed_sig`` + ``params``: a caller that already shingled
     the batch (the streaming ingest loop matches FIRST, then appends
-    the accepted subset) passes the pinned ``_minhash_sig_keys`` frame
+    the accepted subset) passes the pinned ``minhash_sig_keys`` frame
     — restricted to the docs to append — and the index's params dict;
     the append then runs ZERO Python passes (integer joins + writes
     only) and skips the params parquet probe.
@@ -832,13 +687,9 @@ def minhash_index_append(
         raise ValueError("minhash_index_append: background_writes requires stats=False")
     if background_writes and not return_view:
         raise ValueError("minhash_index_append: background_writes requires return_view=True")
-    if params is not None:
-        row = dict(params)
-    else:
-        row = _read_params_row(spark, path, _MINHASH_PARAM_SCHEMA)
-    mb = row.get("max_bucket")
-    max_bucket = 1000 if mb is None else mb
-    if batch_id is not None and _batch_already_applied(spark, path, batch_id):
+    row = dict(params) if params is not None else artifact.read_params(spark, path, "minhash")
+    max_bucket = row["max_bucket"]
+    if artifact.begin(spark, path, batch_id):
         out: dict = {"applied": False, "membership": 0, "reps": 0, "bands": 0, "dropped": 0}
         if return_view:
             out["view"] = minhash_index_read(spark, path, params=row)
@@ -857,7 +708,7 @@ def minhash_index_append(
     sig_pin = None
     sig = precomputed_sig
     if sig is None:
-        sig = _minhash_sig_keys(
+        sig = minhash_sig_keys(
             new_docs,
             id_col,
             text_col,
@@ -896,8 +747,8 @@ def minhash_index_append(
         F.min(id_col).alias("rep"), F.any_value("band_keys").alias("band_keys")
     ))
     reps_add = per_sig.select("sig_key", "rep")
-    existing_sigs = _idx_read(spark, path, "reps").select("sig_key")
-    dropped_cur = _read_or_empty(spark, f"{path}/dropped", "band_key long")
+    existing_sigs = artifact.read(spark, path, "minhash", "reps").select("sig_key")
+    dropped_cur = artifact.read_or_empty(spark, path, "minhash", "dropped")
     # ONE pinned frame carries both the band rows AND each band's cap
     # verdict (r7: the previous shape checkpointed new_band_rows, then
     # a second job checkpointed newly_dropped derived from it — two
@@ -918,7 +769,7 @@ def minhash_index_append(
     )
     new_counts = new_band_rows.groupBy("band_key").agg(F.count(F.lit(1)).alias("add"))
     cur_counts = (
-        _idx_read(spark, path, "bands")
+        artifact.read(spark, path, "minhash", "bands")
         .join(new_counts.select("band_key"), "band_key", "left_semi")
         .groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("cur"))
@@ -943,41 +794,29 @@ def minhash_index_append(
     if return_view:
         all_dropped = dropped_cur.unionByName(newly_dropped)
         view = {
-            "membership": _idx_read(spark, path, "membership").unionByName(
+            "membership": artifact.read(spark, path, "minhash", "membership").unionByName(
                 new_membership
             ),
-            "reps": _idx_read(spark, path, "reps")
+            "reps": artifact.read(spark, path, "minhash", "reps")
             .unionByName(reps_add)
             .groupBy("sig_key")
             .agg(F.min("rep").alias("rep")),
-            "bands": _idx_read(spark, path, "bands")
+            "bands": artifact.read(spark, path, "minhash", "bands")
             .select("sig_key", "band_key")
             .unionByName(band_append)
             .join(all_dropped, "band_key", "left_anti")
             .select("sig_key", "band_key"),
             "dropped": all_dropped,
-            "params": {
-                **{k: row[k] for k in ("shingle_n", "num_hashes", "bands", "seed", "hash_fn")},
-                "max_bucket": max_bucket,
-            },
+            "params": row,
         }
 
-    # Four appends into distinct dirs, all from pinned/cached frames
-    # (sig's cache filled during the combined checkpoint; nothing below
-    # reads a directory being appended) — issued concurrently; the
-    # replay marker stays strictly AFTER them (it is the at-least-once
-    # commit point).
+    # All four appends read pinned/cached frames (sig's cache filled
+    # during the combined checkpoint), so none re-scans a table it lands in.
     def _do_writes() -> None:
-        _concurrent_actions(
-            lambda: new_membership.write.mode("append").parquet(f"{path}/membership"),
-            lambda: reps_add.write.mode("append").parquet(f"{path}/reps"),
-            lambda: band_append.write.mode("append").parquet(f"{path}/bands"),
-            lambda: newly_dropped.write.mode("append").parquet(f"{path}/dropped"),
-        )
-        if batch_id is not None:
-            local_rows_df(spark, [(int(batch_id),)], "batch_id long").coalesce(
-                1
-            ).write.mode("append").parquet(f"{path}/applied_batches")
+        artifact.append(spark, path, {
+            "membership": new_membership, "reps": reps_add,
+            "bands": band_append, "dropped": newly_dropped,
+        }, batch_id)
 
     if background_writes:
         import threading
@@ -1053,28 +892,21 @@ def minhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int
 
     Matching before and after compaction is IDENTICAL (pytest-pinned;
     oracle-gated end-to-end via ``dedup_index_compact``). Every logical
-    table is pinned eagerly BEFORE being rewritten, and each rewrite is
-    a temp-dir + checked-rename swap (``_write_swap``) — a crash never
-    leaves a table half-deleted, so the op is safe to run inline from a
-    long-lived ``foreachBatch`` ingest loop. Per-TABLE atomicity is
-    sufficient for cross-table consistency because compaction only
-    materializes the read-time derivation: a crash BETWEEN table swaps
-    leaves a mix of compacted and raw tables that ``minhash_index_read``
-    still derives the identical logical index from.
+    table is pinned eagerly BEFORE its ``artifact.write`` swap. A crash
+    between two table swaps leaves a mix of compacted and raw tables
+    that ``minhash_index_read`` derives the identical logical index
+    from, so the op is safe to run inline from a ``foreachBatch`` loop.
 
     Returns post-compaction row counts per rewritten table."""
-    idx = minhash_index_read(spark, path)
-    membership = pin(idx["membership"])
-    reps = pin(idx["reps"])
-    bands = pin(idx["bands"])
-    _concurrent_actions(
-        lambda: _write_swap(membership, f"{path}/membership"),
-        lambda: _write_swap(reps, f"{path}/reps"),
-        lambda: _write_swap(bands, f"{path}/bands"),
-    )
-    if not stats:
-        return {}
-    return _appended_counts(membership=membership, reps=reps, bands=bands)
+    return _index_compact(spark, path, minhash_index_read, ("membership", "reps", "bands"), stats)
+
+
+def _index_compact(spark, path: str, read, tables: tuple[str, ...], stats: bool) -> dict[str, int]:
+    artifact.begin(spark, path)
+    idx = read(spark, path)
+    frames = {t: pin(idx[t]) for t in tables}
+    concurrent_actions(*(lambda t=t: artifact.write(path, t, frames[t]) for t in tables))
+    return _appended_counts(**frames) if stats else {}
 
 
 def _appended_counts(**frames: DataFrame) -> dict[str, int]:
@@ -1182,11 +1014,11 @@ def minhash_match_incremental(
     # fires across mapInPandas subtrees; plan-verified 3x without the
     # pin). ``precomputed_sig`` lets a caller that ALSO needs the
     # batch's signatures (the streaming ingest loop: match THEN append)
-    # shingle exactly once — it must be a pinned ``_minhash_sig_keys``
+    # shingle exactly once — it must be a pinned ``minhash_sig_keys``
     # output built with this index's params.
     sig = precomputed_sig
     if sig is None:
-        sig = pin(_minhash_sig_keys(
+        sig = pin(minhash_sig_keys(
             new_docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
         ))
     seen_side = index["membership"] if mode == "pairs" else index["reps"]
@@ -1465,32 +1297,18 @@ def substring_index(
 
 
 def substring_index_write(index: dict, path: str) -> None:
-    """Persist a substring index: postings parquet + 1-row params table
-    (the minhash_index_write shape — checked-rename swap per table)."""
-    from ..session import local_rows_df
-
-    spark = index["postings"].sparkSession
-    _write_swap(index["postings"], f"{path}/postings")
-    p = index["params"]
-    _write_swap(
-        local_rows_df(
-            spark,
-            [(int(p["k"]), -1 if p["max_df"] is None else int(p["max_df"]))],
-            "k int, max_df int",
-        ),
-        f"{path}/params",
-    )
+    """Persist a substring index: postings parquet + 1-row params table."""
+    artifact.write(path, "postings", index["postings"])
+    artifact.write_params(index["postings"].sparkSession, path, "substring", index["params"])
 
 
 def substring_index_read(spark, path: str) -> dict:
     """Load a stored substring index (lazy — the postings scan prunes
     to the fp/doc/pos columns the match join needs)."""
-    row = spark.read.schema("k int, max_df int").parquet(f"{path}/params").first()
+    row = artifact.read_params(spark, path, "substring")
     return {
-        "postings": spark.read.schema("__doc long, pos int, fp long").parquet(
-            f"{path}/postings"
-        ),
-        "params": {"k": int(row["k"]), "max_df": None if row["max_df"] < 0 else int(row["max_df"])},
+        "postings": artifact.read(spark, path, "substring", "postings"),
+        "params": {"k": row["k"], "max_df": None if row["max_df"] < 0 else row["max_df"]},
     }
 
 
@@ -1506,19 +1324,12 @@ def substring_index_append(spark, path: str, new_docs: DataFrame,
     old+new — boilerplate that only becomes hot across batches is
     re-capped at the next full rebuild (documented, same trade as the
     minhash bucket cap)."""
-    from ..session import local_rows_df
-
-    if batch_id is not None and _batch_already_applied(spark, path, batch_id):
+    if artifact.begin(spark, path, batch_id):
         return 0
-    idx = substring_index_read(spark, path)
-    p = idx["params"]
+    p = substring_index_read(spark, path)["params"]
     posts = _substring_postings(new_docs, id_col, text_col, p["k"], p["max_df"])
     n = posts.count()
-    posts.write.mode("append").parquet(f"{path}/postings")
-    if batch_id is not None:
-        local_rows_df(spark, [(int(batch_id),)], "batch_id long").coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{path}/applied_batches")
+    artifact.append(spark, path, {"postings": posts}, batch_id)
     return int(n)
 
 
@@ -2486,56 +2297,24 @@ def simhash_index(
     }
 
 
-_SIMHASH_PARAM_SCHEMA = "max_hamming int, bits int, hash_fn string, max_bucket int"
-_SIMHASH_DROPPED_SCHEMA = "chunk_idx int, chunk_val long"
-
-# Declared table schemas for the stored simhash index (same
-# no-footer-inference-job rationale as _IDX_TBL_SCHEMAS).
-_SIMHASH_TBL_SCHEMAS = {
-    "fingerprints": "doc_id long, sh long",
-    "reps": "sh long, rep long",
-    "chunks": "sh long, chunk_idx int, chunk_val long",
-}
-
-
-def _simhash_read(spark, path: str, tbl: str):
-    return spark.read.schema(_SIMHASH_TBL_SCHEMAS[tbl]).parquet(f"{path}/{tbl}")
-
-
 def simhash_index_write(index: dict[str, DataFrame], path: str) -> None:
-    spark = index["fingerprints"].sparkSession
-    dropped = index.get("dropped", local_rows_df(spark, [], _SIMHASH_DROPPED_SCHEMA))
-    _concurrent_actions(
-        lambda: index["fingerprints"].write.mode("overwrite").parquet(f"{path}/fingerprints"),
-        lambda: index["reps"].write.mode("overwrite").parquet(f"{path}/reps"),
-        lambda: index["chunks"].write.mode("overwrite").parquet(f"{path}/chunks"),
-        lambda: dropped.coalesce(1).write.mode("overwrite").parquet(f"{path}/dropped"),
-    )
-    p = index["params"]
-    local_rows_df(
-        spark,
-        [(p["max_hamming"], p["bits"], p["hash_fn"], p.get("max_bucket", 2000))],
-        _SIMHASH_PARAM_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
+    _index_write(index, path, "simhash", ("fingerprints", "reps", "chunks"))
 
 
 def simhash_index_read(spark, path: str) -> dict[str, DataFrame]:
     """Open a stored simhash index — append-only layout, logical tables
     derived at read time exactly as ``minhash_index_read`` does: reps
     min-reduce, chunk rows anti-join the dropped-bucket list."""
-    row = _read_params_row(spark, path, _SIMHASH_PARAM_SCHEMA)
-    params = {k: row[k] for k in ("max_hamming", "bits", "hash_fn")}
-    mb = row.get("max_bucket")
-    params["max_bucket"] = 2000 if mb is None else mb
-    dropped = _read_or_empty(spark, f"{path}/dropped", _SIMHASH_DROPPED_SCHEMA)
+    dropped = artifact.read_or_empty(spark, path, "simhash", "dropped")
     return {
-        "fingerprints": _simhash_read(spark, path, "fingerprints"),
-        "reps": _simhash_read(spark, path, "reps").groupBy("sh").agg(F.min("rep").alias("rep")),
-        "chunks": _simhash_read(spark, path, "chunks")
+        "fingerprints": artifact.read(spark, path, "simhash", "fingerprints"),
+        "reps": artifact.read(spark, path, "simhash", "reps")
+        .groupBy("sh").agg(F.min("rep").alias("rep")),
+        "chunks": artifact.read(spark, path, "simhash", "chunks")
         .join(dropped, ["chunk_idx", "chunk_val"], "left_anti")
         .select("sh", "chunk_idx", "chunk_val"),
         "dropped": dropped,
-        "params": params,
+        "params": artifact.read_params(spark, path, "simhash"),
     }
 
 
@@ -2543,22 +2322,8 @@ def simhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int
     """SimHash twin of ``minhash_index_compact``: materialize the
     read-time derivation (reps min-reduced, retired pigeonhole-chunk
     rows removed), rewrite fingerprints for file coalescing, keep
-    ``dropped``/``applied_batches`` verbatim. Same pin-then-
-    ``_write_swap`` crash-safety discipline (per-table swap suffices:
-    any mix of compacted/raw tables reads back to the identical logical
-    index)."""
-    idx = simhash_index_read(spark, path)
-    fingerprints = pin(idx["fingerprints"])
-    reps = pin(idx["reps"])
-    chunks = pin(idx["chunks"])
-    _concurrent_actions(
-        lambda: _write_swap(fingerprints, f"{path}/fingerprints"),
-        lambda: _write_swap(reps, f"{path}/reps"),
-        lambda: _write_swap(chunks, f"{path}/chunks"),
-    )
-    if not stats:
-        return {}
-    return _appended_counts(fingerprints=fingerprints, reps=reps, chunks=chunks)
+    ``dropped``/``applied_batches`` verbatim."""
+    return _index_compact(spark, path, simhash_index_read, ("fingerprints", "reps", "chunks"), stats)
 
 
 def simhash_index_append(
@@ -2575,22 +2340,22 @@ def simhash_index_append(
     the (chunk_idx, chunk_val) buckets the batch touches. Same
     append-≡-rebuild contract (pytest-pinned table equality, oracle-gated
     via ``dedup_simhash_index_append``), same append-only layout, same
-    ``batch_id`` replay no-op, same written-last-marker atomicity
-    caveat, same concurrent-append + optional-``stats`` job trim."""
-    row = _read_params_row(spark, path, _SIMHASH_PARAM_SCHEMA)
-    max_bucket = row.get("max_bucket", 2000)
+    ``batch_id`` replay no-op, same all-or-nothing commit, same
+    concurrent-append + optional-``stats`` job trim."""
+    row = artifact.read_params(spark, path, "simhash")
+    max_bucket = row["max_bucket"]
     max_hamming, bits, hash_fn = row["max_hamming"], row["bits"], row["hash_fn"]
     n_chunks = max_hamming + 1
     chunk_bits = bits // n_chunks
-    if batch_id is not None and _batch_already_applied(spark, path, batch_id):
+    if artifact.begin(spark, path, batch_id):
         return {"applied": False, "fingerprints": 0, "reps": 0, "chunks": 0, "dropped": 0}
     fp = pin(
         simhash_fingerprints(new_docs, id_col, text_col, bits, hash_fn)
         .select(F.col(id_col).alias("doc_id"), "sh")
     )
     reps_add = fp.groupBy("sh").agg(F.min("doc_id").alias("rep"))
-    existing = _simhash_read(spark, path, "reps").select("sh")
-    dropped_cur = _read_or_empty(spark, f"{path}/dropped", _SIMHASH_DROPPED_SCHEMA)
+    existing = artifact.read(spark, path, "simhash", "reps").select("sh")
+    dropped_cur = artifact.read_or_empty(spark, path, "simhash", "dropped")
     new_chunk_rows = pin(
         fp.select("sh").distinct()
         .join(existing, "sh", "left_anti")
@@ -2605,7 +2370,7 @@ def simhash_index_append(
         F.count(F.lit(1)).alias("add")
     )
     cur_counts = (
-        _simhash_read(spark, path, "chunks")
+        artifact.read(spark, path, "simhash", "chunks")
         .join(new_counts.select("chunk_idx", "chunk_val"), ["chunk_idx", "chunk_val"], "left_semi")
         .groupBy("chunk_idx", "chunk_val")
         .agg(F.count(F.lit(1)).alias("cur"))
@@ -2618,16 +2383,9 @@ def simhash_index_append(
     chunk_append = new_chunk_rows.join(
         newly_dropped, ["chunk_idx", "chunk_val"], "left_anti"
     ).select("sh", "chunk_idx", "chunk_val")
-    _concurrent_actions(
-        lambda: fp.write.mode("append").parquet(f"{path}/fingerprints"),
-        lambda: reps_add.write.mode("append").parquet(f"{path}/reps"),
-        lambda: chunk_append.write.mode("append").parquet(f"{path}/chunks"),
-        lambda: newly_dropped.write.mode("append").parquet(f"{path}/dropped"),
-    )
-    if batch_id is not None:
-        local_rows_df(spark, [(int(batch_id),)], "batch_id long").coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{path}/applied_batches")
+    artifact.append(spark, path, {
+        "fingerprints": fp, "reps": reps_add, "chunks": chunk_append, "dropped": newly_dropped,
+    }, batch_id)
     if not stats:
         return {"applied": True}
     return {"applied": True, **_appended_counts(

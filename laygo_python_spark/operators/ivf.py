@@ -23,13 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df, pin
-
-# Declared schemas of the stored IVF artifact tables (written by
-# ivf_index_write below) — explicit on every read so no footer
-# schema-inference job is scheduled.
-_IVF_CENTROID_SCHEMA = "cell int, centroid array<double>"
-_IVF_CELLS_SCHEMA = "neighbor_id long, cv array<double>, cell int"
+from .. import artifact
+from ..session import pin
 
 
 def train_centroids(
@@ -278,12 +273,8 @@ def ivf_index_write(
     if centroids is None:
         centroids = train_centroids(corpus, n_centroids, vec_col, seed)
     assigned = _assign_cells(corpus, centroids, "neighbor_id", "cv", id_col, vec_col, n_probe=1)
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
-    spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    local_rows_df(spark, cent_rows, "cell int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
+    artifact.write(path, "cells", assigned, partition_by="cell")
+    artifact.write_matrix(corpus.sparkSession, path, "ivf", "centroids", centroids)
 
 
 def ivf_search_indexed(
@@ -301,12 +292,7 @@ def ivf_search_indexed(
     file-listing level — the corpus bytes of unprobed cells are never
     opened (plan-asserted in tests). Results match ``ivf_topk`` run
     with the same training params (pytest-pinned)."""
-    import numpy as np
-
-    cent_rows = spark.read.schema(_IVF_CENTROID_SCHEMA).parquet(f"{path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])], dtype=np.float64
-    )
+    centroids = artifact.read_matrix(spark, path, "ivf", "centroids")
     from laygo_python_spark.operators.similarity import (
         _score_topk,
         as_double_array,
@@ -322,7 +308,7 @@ def ivf_search_indexed(
     q = pin(q)  # probed twice: cell list + the join
     probed = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
     c = (
-        spark.read.schema(_IVF_CELLS_SCHEMA).parquet(f"{path}/cells")
+        artifact.read(spark, path, "ivf", "cells")
         .filter(F.col("cell").isin(probed))
         .withColumn("nc", l2_norm(F.col("cv")))
     )
@@ -361,14 +347,12 @@ def ivf_index_add(
     erodes the pruning economics.
 
     Returns the number of vectors appended."""
-    cent_rows = spark.read.schema(_IVF_CENTROID_SCHEMA).parquet(f"{path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])], dtype=np.float64
-    )
+    centroids = artifact.read_matrix(spark, path, "ivf", "centroids")
+    artifact.begin(spark, path)
     assigned = pin(_assign_cells(
         new_corpus, centroids, "neighbor_id", "cv", id_col, vec_col, n_probe=1
-    ))  # pin before writing into the dirs a later read scans
-    assigned.write.partitionBy("cell").mode("append").parquet(f"{path}/cells")
+    ))  # one Python pass feeds both the append and the count
+    artifact.append(spark, path, {"cells": assigned}, partition_by="cell")
     return assigned.count()
 
 
@@ -378,13 +362,13 @@ def ivf_index_compact(spark, path: str) -> dict:
     touches, so daily ingest accretes small files until probe-time
     listing/footer costs erode the pruned-scan economics the layout
     exists for. Rewrites each cell directory to ONE file (one hash
-    shuffle, temp-dir + checked-rename swap — crash-safe), preserving
-    the partition layout so ``ivf_search_indexed``'s pruning is
-    untouched. Logical content is IDENTICAL — search before ≡ after
+    shuffle, ``artifact.swap``), preserving the partition layout so
+    ``ivf_search_indexed``'s pruning is untouched. Logical content is IDENTICAL — search before ≡ after
     (pytest-pinned). Centroids are not touched; this is the OPTIMIZE
     half of maintenance, ``ivf_index_write`` (retrain) is the other."""
     from ..sources.sinks import compact_partitioned
 
+    artifact.begin(spark, path)
     return compact_partitioned(spark, f"{path}/cells", "cell")
 
 
@@ -395,7 +379,7 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     dashboard for ``ivf_index_add``'s retrain trigger: alert when skew
     exceeds ~4 and schedule a retraining ``ivf_index_write``."""
     counts = (
-        spark.read.schema(_IVF_CELLS_SCHEMA).parquet(f"{path}/cells")
+        artifact.read(spark, path, "ivf", "cells")
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -28,15 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import artifact
 from ..session import local_rows_df, pin
-
-# Declared schemas of the stored-artifact tables this module reads —
-# written by pq_index_write / ivfpq_index_write below, so footer schema
-# inference would only rediscover constants at the cost of one 1-task
-# driver job per read (measured r13: ~6 such jobs in
-# ann_ivfpq_index_topk's build+add+search path).
-_PQ_CODEBOOK_SCHEMA = "subspace int, code int, centroid array<double>"
-_IVF_CENTROID_SCHEMA = "cell int, centroid array<double>"
 
 _MAX_TRAIN = 200_000  # rows the driver may collect for codebook training
 
@@ -338,8 +331,6 @@ def _adc_probe_topk(
     similarity._score_topk."""
     import pandas as pd
 
-    from ..session import local_rows_df
-
     m, ksub, dsub = codebooks.shape
     if qrows is None:
         qrows = queries.select(id_col, vec_col).collect()
@@ -409,37 +400,27 @@ def pq_index_write(
     next to the cell-partitioned IVF index and the LSH/SimHash tables:
     floats are read once at build; every later search scans codes."""
     codebooks = train_codebooks(corpus, m, ksub, vec_col, seed)
-    pq_encode(corpus, codebooks, id_col, vec_col).write.mode("overwrite").parquet(f"{path}/codes")
-    spark = corpus.sparkSession
-    rows = [
-        (s, c, [float(x) for x in codebooks[s, c]])
-        for s in range(codebooks.shape[0])
-        for c in range(codebooks.shape[1])
-    ]
-    local_rows_df(spark, rows, "subspace int, code int, centroid array<double>").coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    codes = pq_encode(corpus, codebooks, id_col, vec_col).withColumnRenamed(id_col, "vec_id")
+    artifact.write(path, "codes", codes)
+    artifact.write_matrix(corpus.sparkSession, path, "pq", "codebooks", codebooks)
 
 
 def pq_index_read(spark, path: str) -> tuple[DataFrame, np.ndarray]:
-    """(corpus codes DataFrame, codebooks ndarray) from a stored index."""
-    rows = spark.read.schema(_PQ_CODEBOOK_SCHEMA).parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in rows)
-    ksub = 1 + max(r["code"] for r in rows)
-    dsub = len(rows[0]["centroid"])
-    codebooks = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in rows:
-        codebooks[r["subspace"], r["code"]] = r["centroid"]
-    return spark.read.schema("vec_id long, codes array<int>").parquet(f"{path}/codes"), codebooks
+    """(corpus codes DataFrame with ids in ``vec_id``, codebooks ndarray)
+    from a stored index."""
+    codebooks = artifact.read_matrix(spark, path, "pq", "codebooks")
+    return artifact.read(spark, path, "pq", "codes"), codebooks
 
 
 def pq_index_compact(spark, path: str, target_mb: int = 128) -> dict:
     """Maintenance after repeated ``pq_encode_append``: ``codes/`` is a
     flat directory, so appends accrete files linearly in batch count;
     rewrite it to ⌈bytes/target_mb⌉ right-sized files via the generic
-    in-place compactor (``sources.sinks.compact_files`` — bytes from FS
-    metadata, one repartition, temp-dir + checked-rename swap). ADC
+    in-place compactor (``sources.sinks.compact_files``). ADC
     search before ≡ after (pytest-pinned); codebooks untouched."""
     from ..sources.sinks import compact_files
 
+    artifact.begin(spark, path)
     return compact_files(spark, f"{path}/codes", target_mb=target_mb)
 
 
@@ -467,10 +448,11 @@ def pq_encode_append(
     erodes ADC score fidelity.
 
     Returns the number of codes appended."""
-    _, codebooks = pq_index_read(spark, path)
-    # pin before appending into the dir a later read scans
+    codebooks = artifact.read_matrix(spark, path, "pq", "codebooks")
+    artifact.begin(spark, path)
+    # one Python pass feeds both the append and the count
     codes = pin(pq_encode(new_corpus, codebooks, id_col=id_col, vec_col=vec_col))
-    codes.write.mode("append").parquet(f"{path}/codes")
+    artifact.append(spark, path, {"codes": codes.withColumnRenamed(id_col, "vec_id")})
     return codes.count()
 
 
@@ -502,37 +484,19 @@ def ivfpq_index_write(
         codebooks = train_codebooks(corpus, m, ksub, vec_col, seed)
     if centroids is None:
         centroids = train_centroids(corpus, n_centroids, vec_col, seed)
-    _assign_encode(corpus, centroids, codebooks, id_col, vec_col).write.partitionBy(
-        "cell"
-    ).mode("overwrite").parquet(f"{path}/codes")
+    rows = _assign_encode(corpus, centroids, codebooks, id_col, vec_col)
+    artifact.write(path, "codes", rows.withColumnRenamed(id_col, "vec_id"), partition_by="cell")
     spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    local_rows_df(spark, cent_rows, "cell int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
-    cb_rows = [
-        (s, c, [float(x) for x in codebooks[s, c]])
-        for s in range(codebooks.shape[0])
-        for c in range(codebooks.shape[1])
-    ]
-    local_rows_df(spark, cb_rows, "subspace int, code int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    artifact.write_matrix(spark, path, "ivfpq", "centroids", centroids)
+    artifact.write_matrix(spark, path, "ivfpq", "codebooks", codebooks)
 
 
 def _ivfpq_index_params(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     """(centroids, codebooks) from a stored composed index."""
-    cent_rows = spark.read.schema(_IVF_CENTROID_SCHEMA).parquet(f"{path}/centroids").collect()
-    centroids = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])], dtype=np.float64
+    return (
+        artifact.read_matrix(spark, path, "ivfpq", "centroids"),
+        artifact.read_matrix(spark, path, "ivfpq", "codebooks"),
     )
-    cb_rows = spark.read.schema(_PQ_CODEBOOK_SCHEMA).parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in cb_rows)
-    ksub = 1 + max(r["code"] for r in cb_rows)
-    codebooks = np.zeros((m, ksub, len(cb_rows[0]["centroid"])), dtype=np.float64)
-    for r in cb_rows:
-        codebooks[r["subspace"], r["code"]] = r["centroid"]
-    return centroids, codebooks
 
 
 def ivfpq_search_indexed(
@@ -558,9 +522,11 @@ def ivfpq_search_indexed(
     qrows = queries.select(id_col, vec_col).collect()
     order = _assign_cells_driver(qrows, centroids, n_probe)
     probed = sorted({int(c) for c in order.reshape(-1)})
-    corpus_cells = spark.read.schema("vec_id long, codes array<int>, cell int").parquet(
-        f"{path}/codes"
-    ).filter(F.col("cell").isin(probed))
+    corpus_cells = (
+        artifact.read(spark, path, "ivfpq", "codes")
+        .filter(F.col("cell").isin(probed))
+        .withColumnRenamed("vec_id", id_col)
+    )
     return _adc_probe_topk(
         corpus_cells, queries, codebooks, centroids, k, n_probe, id_col, vec_col,
         qrows=qrows,
@@ -585,10 +551,13 @@ def ivfpq_index_add(
     quantization error (``pq_encode_append`` docstring) — the composed
     index inherits both. Returns rows appended."""
     centroids, codebooks = _ivfpq_index_params(spark, path)
+    artifact.begin(spark, path)
     rows = pin(_assign_encode(
         new_corpus, centroids, codebooks, id_col, vec_col
-    ))  # pin before appending into scanned dirs
-    rows.write.partitionBy("cell").mode("append").parquet(f"{path}/codes")
+    ))  # one Python pass feeds both the append and the count
+    artifact.append(
+        spark, path, {"codes": rows.withColumnRenamed(id_col, "vec_id")}, partition_by="cell"
+    )
     if not count_rows:
         return 0
     return rows.count()

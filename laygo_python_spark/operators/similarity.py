@@ -27,7 +27,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_rows_df, pin
+from .. import artifact
+from ..session import pin
 
 
 def as_double_array(col: str | Column) -> Column:
@@ -219,11 +220,6 @@ def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
         )
         sig = sig + F.when(d > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
     return sig
-
-
-# Declared schemas of the stored SRP index tables (srp_index_write) —
-# explicit on every read so no footer schema-inference job is scheduled.
-_SRP_PARAM_SCHEMA = "n_planes int, n_tables int, dim int, seed int"
 
 
 def _with_bucket_keys(
@@ -471,12 +467,10 @@ def srp_index_write(
     c = _with_bucket_keys(
         corpus, "neighbor_id", "cv", dim, n_planes, n_tables, seed, id_col, vec_col
     )
-    c.write.partitionBy("bkey").mode("overwrite").parquet(f"{path}/buckets")
-    local_rows_df(
-        corpus.sparkSession,
-        [(n_planes, n_tables, dim, seed)],
-        "n_planes int, n_tables int, dim int, seed int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
+    artifact.write(path, "buckets", c, partition_by="bkey")
+    artifact.write_params(corpus.sparkSession, path, "srp", {
+        "n_planes": n_planes, "n_tables": n_tables, "dim": dim, "seed": seed,
+    })
 
 
 def srp_index_add(
@@ -498,23 +492,25 @@ def srp_index_add(
     grows past the n_planes design point — re-key with more planes
     when ``buckets``' per-directory row counts exceed the occupancy
     the docstring of ``embedding_near_dups`` sizes for."""
-    p = spark.read.schema(_SRP_PARAM_SCHEMA).parquet(f"{path}/params").collect()[0]
+    p = artifact.read_params(spark, path, "srp")
+    artifact.begin(spark, path)
     c = _with_bucket_keys(
         new_vectors, "neighbor_id", "cv", p["dim"], p["n_planes"], p["n_tables"], p["seed"],
         id_col, vec_col,
     )
-    c.write.partitionBy("bkey").mode("append").parquet(f"{path}/buckets")
+    artifact.append(spark, path, {"buckets": c}, partition_by="bkey")
 
 
 def srp_index_compact(spark, path: str) -> dict:
     """Maintenance after repeated ``srp_index_add``: appends accrete
     files inside the ``buckets/bkey=<t:hash>/`` directories; rewrite
     each bucket directory to ONE file (hash shuffle on ``bkey``,
-    temp-dir + checked-rename swap), preserving the partition layout
+    ``artifact.swap``), preserving the partition layout
     ``srp_search_indexed`` prunes on. Search before ≡ after
     (pytest-pinned); the params row is untouched."""
     from ..sources.sinks import compact_partitioned
 
+    artifact.begin(spark, path)
     return compact_partitioned(spark, f"{path}/buckets", "bkey")
 
 
@@ -530,15 +526,13 @@ def srp_search_indexed(
     STORED params, prune the bucket directories to the queries' bucket
     set (a bounded driver list), score bucket-locally. Matches
     ``lsh_bucketed_topk`` with the same params (pytest-pinned)."""
-    p = spark.read.schema(_SRP_PARAM_SCHEMA).parquet(f"{path}/params").collect()[0]
+    p = artifact.read_params(spark, path, "srp")
     q = pin(_with_bucket_keys(
         queries, "query_id", "qv", p["dim"], p["n_planes"], p["n_tables"], p["seed"], id_col, vec_col
     ))  # read twice: bucket list + join
     probed = [r["bkey"] for r in q.select("bkey").distinct().collect()]
     c = (
-        spark.read.schema("neighbor_id long, cv array<double>, bkey long").parquet(
-            f"{path}/buckets"
-        )
+        artifact.read(spark, path, "srp", "buckets")
         .filter(F.col("bkey").isin(probed))
         .withColumn("nc", l2_norm(F.col("cv")))
     )

@@ -215,19 +215,9 @@ def compact_parquet(
     to ``dest_path`` (caller swaps directories atomically; this
     operator never deletes the source). Returns
     {files_before, files_after, bytes_total, rows}."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = p.getFileSystem(conf)
-    total = 0
-    files_before = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith("_"):
-            total += st.getLen()
-            files_before += 1
+    from .. import artifact
+
+    files_before, total = artifact.parquet_files(spark, src_path)
     if files_before == 0:
         raise ValueError(f"compact_parquet: no parquet files under {src_path}")
     n_out = max(1, -(-total // target_bytes))

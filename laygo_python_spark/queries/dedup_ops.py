@@ -6,7 +6,7 @@ hand-written DuckDB SQL, and the LSH/SimHash discovery queries run with
 crc32 opt-in fast path at sf0.1; both hash choices stay pytest-covered) so the signature,
 banding and pigeonhole pipelines are reproducible in SQL: the oracles
 below are GENERATED — 128 universal-hash min() aggregates, 32 band
-keys, and a 60-bit simhash tally — from the same ``_hash_params`` LCG
+keys, and a 60-bit simhash tally — from the same ``hash_params`` LCG
 the operators use. Any drift in shingling, hashing, banding, grouping
 or expansion breaks the hash match.
 """
@@ -18,11 +18,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from laygo_python_spark import artifact
 from laygo_python_spark.operators import dedup
-from laygo_python_spark.operators.dedup import _P, _hash_params
+from laygo_python_spark.operators.dedup import MINHASH_PRIME, hash_params
 from laygo_python_spark.queries import query
+from laygo_python_spark.session import concurrent_actions, pin
 from laygo_python_spark.session import read_table as _t
-from laygo_python_spark.session import pin
 
 
 def _minhash_sig_cte(num_hashes: int, seed: int = 42, doc_filter: str = "") -> str:
@@ -31,9 +32,9 @@ def _minhash_sig_cte(num_hashes: int, seed: int = 42, doc_filter: str = "") -> s
     does — ``('0x'||substr(md5(g),1,8))::BIGINT % 2^31``. MATERIALIZED:
     DuckDB inlines CTEs by default, and the band unpivot below reads
     this 32 times."""
-    params = _hash_params(num_hashes, seed)
+    params = hash_params(num_hashes, seed)
     slots = ",\n           ".join(
-        f"min(({a}*hv+{b})%{_P}) AS s{i}" for i, (a, b) in enumerate(params)
+        f"min(({a}*hv+{b})%{MINHASH_PRIME}) AS s{i}" for i, (a, b) in enumerate(params)
     )
     # regexp_split_to_array('\\s+'), not string_split(' '): the Python
     # hashers tokenize with str.split(), which collapses whitespace RUNS
@@ -600,7 +601,7 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # commit on a worker thread — the match never needed the new
         # FILES, only the new ROWS, and those are checkpoint-pinned.
         # wait() joins the commit before the scratch dir is removed.
-        prow = dedup._read_params_row(spark, path, dedup._MINHASH_PARAM_SCHEMA)
+        prow = artifact.read_params(spark, path, "minhash")
         # The day-2 (append) and day-3 (probe match) signature passes
         # are the two Python stages of this query and are independent —
         # build both pins concurrently (guide §2.6: overlap independent
@@ -609,12 +610,12 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
-            sig_box[tag] = pin(dedup._minhash_sig_keys(
+            sig_box[tag] = pin(dedup.minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
                 prow["bands"], prow["seed"], prow["hash_fn"],
             ))
 
-        dedup._concurrent_actions(
+        concurrent_actions(
             lambda: _mk_sig("day2", day2), lambda: _mk_sig("probe", probe)
         )
         res = dedup.minhash_index_append(
@@ -657,7 +658,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copytree(tmpl, path)
         day2 = docs.filter(F.col("doc_id") % 3 == 1)
         probe = docs.filter(F.col("doc_id") % 3 == 2)
-        prow = dedup._read_params_row(spark, path, dedup._MINHASH_PARAM_SCHEMA)
+        prow = artifact.read_params(spark, path, "minhash")
         # Same concurrent-signature discipline as dedup_index_append:
         # the probe's Python pass is independent of the append, so its
         # wall rides the append's tail instead of serializing after
@@ -665,12 +666,12 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
-            sig_box[tag] = pin(dedup._minhash_sig_keys(
+            sig_box[tag] = pin(dedup.minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
                 prow["bands"], prow["seed"], prow["hash_fn"],
             ))
 
-        dedup._concurrent_actions(
+        concurrent_actions(
             lambda: _mk_sig("day2", day2), lambda: _mk_sig("probe", probe)
         )
         dedup.minhash_index_append(
@@ -868,7 +869,7 @@ def lsh_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id_a", "doc_id_b", F.lit(1).alias("__t"))
         )
 
-    dedup._concurrent_actions(_mk_cands, _mk_truth)
+    concurrent_actions(_mk_cands, _mk_truth)
     cands, truth = box["cands"], box["truth"]
     marked = cands.join(truth, ["doc_id_a", "doc_id_b"], "left")
     grid = local_rows_df(
@@ -1149,7 +1150,7 @@ def simhash_radius_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id_a", "doc_id_b", F.lit(1).alias("__t"))
         )
 
-    dedup._concurrent_actions(_mk_pairs, _mk_truth)
+    concurrent_actions(_mk_pairs, _mk_truth)
     pairs, truth = box["pairs"], box["truth"]
     marked = pairs.join(truth, ["doc_id_a", "doc_id_b"], "left")
     grid = local_rows_df(spark, [(r,) for r in range(6)], "radius int")

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .. import artifact
+
 
 def to_parquet(
     df: DataFrame,
@@ -98,56 +100,24 @@ def compact_files(
     and lose row-group-level skipping. This rewrites the directory to
     ~``target_mb`` files: file count derives from the directory's actual
     bytes (Hadoop FS metadata — no data read), the rewrite is one
-    repartition, and the swap is write-to-temp + atomic-ish rename so a
-    crash never leaves the table half-deleted. Returns before/after file
+    repartition through ``artifact.swap``. Returns before/after file
     counts.
 
     At real scale run per-partition (pass the partition directory as
     ``path``) so compaction parallelizes across partitions and touches
     only hot ones.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(conf)
-
-    def _parquet_files(p):
-        return [
-            f for f in fs.listStatus(p)
-            if f.getPath().getName().endswith(".parquet")
-        ]
-
-    before = _parquet_files(fs_path)
-    total_bytes = sum(f.getLen() for f in before)
+    files_before, total_bytes = artifact.parquet_files(spark, path)
     n_files = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
-
-    tmp = jvm.org.apache.hadoop.fs.Path(path + "__compacting")
-    (
+    artifact.swap(spark, path, lambda tmp: (
         spark.read.parquet(path)
         .repartition(int(n_files))
         .write.mode("overwrite")
         .option("compression", compression)
-        .parquet(str(tmp))
-    )
-    # Hadoop rename returns False instead of raising — every step is
-    # checked, and the backup is deleted ONLY after the new data is in
-    # place, so no failure mode loses the table. A leftover backup from
-    # a crashed prior run aborts up front rather than being silently
-    # swallowed into a nested rename.
-    backup = jvm.org.apache.hadoop.fs.Path(path + "__precompact")
-    if fs.exists(backup):
-        raise RuntimeError(
-            f"{backup} exists — a previous compaction crashed mid-swap; "
-            "recover it (rename back or delete) before compacting again"
-        )
-    if not fs.rename(fs_path, backup):
-        fs.delete(tmp, True)
-        raise RuntimeError(f"compaction aborted: could not move {path} aside")
-    if not fs.rename(tmp, fs_path):
-        fs.rename(backup, fs_path)  # roll back — original data untouched
-        raise RuntimeError(f"compaction aborted: could not move compacted data into {path}")
-    fs.delete(backup, True)
-    return {"files_before": len(before), "files_after": len(_parquet_files(fs_path)), "bytes": int(total_bytes)}
+        .parquet(tmp)
+    ))
+    files_after, _ = artifact.parquet_files(spark, path)
+    return {"files_before": files_before, "files_after": files_after, "bytes": int(total_bytes)}
 
 
 def compact_partitioned(
@@ -167,9 +137,8 @@ def compact_partitioned(
     ingest pipeline accretes files until probe-time listing and
     per-file footer costs dominate the pruned scan the layout exists to
     provide. One hash shuffle on ``key`` (each value lands in exactly
-    one task, so each directory gets exactly one output file), written
-    to a temp dir and swapped with the same checked-rename discipline
-    as ``compact_files`` — a crash never leaves the index half-deleted.
+    one task, so each directory gets exactly one output file), through
+    ``artifact.swap``.
 
     At 100 TB scale, one file per value is right while per-value data
     fits a single right-sized file (LSH buckets and IVF cells are
@@ -178,46 +147,16 @@ def compact_partitioned(
     is a layout problem, not a compaction problem.
 
     Returns {files_before, files_after, bytes}."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(conf)
-
-    def _count_files(p):
-        n, total = 0, 0
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.endswith(".parquet") and not name.startswith("_"):
-                n += 1
-                total += st.getLen()
-        return n, total
-
     from pyspark.sql import functions as F
 
-    files_before, total_bytes = _count_files(fs_path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + "__compacting")
-    (
+    files_before, total_bytes = artifact.parquet_files(spark, path)
+    artifact.swap(spark, path, lambda tmp: (
         spark.read.parquet(path)
         .repartition(F.col(key))
         .write.mode("overwrite")
         .partitionBy(key)
         .option("compression", compression)
-        .parquet(str(tmp))
-    )
-    backup = jvm.org.apache.hadoop.fs.Path(path + "__precompact")
-    if fs.exists(backup):
-        raise RuntimeError(
-            f"{backup} exists — a previous compaction crashed mid-swap; "
-            "recover it (rename back or delete) before compacting again"
-        )
-    if not fs.rename(fs_path, backup):
-        fs.delete(tmp, True)
-        raise RuntimeError(f"compaction aborted: could not move {path} aside")
-    if not fs.rename(tmp, fs_path):
-        fs.rename(backup, fs_path)  # roll back — original data untouched
-        raise RuntimeError(f"compaction aborted: could not move compacted data into {path}")
-    fs.delete(backup, True)
-    files_after, _ = _count_files(fs_path)
+        .parquet(tmp)
+    ))
+    files_after, _ = artifact.parquet_files(spark, path)
     return {"files_before": files_before, "files_after": files_after, "bytes": int(total_bytes)}

@@ -169,7 +169,7 @@ def incremental_dedup_processor(
         # feeds BOTH the match and (anti-joined down to the accepted
         # docs) the index append — the pre-r7 shape shingled the batch
         # twice and pinned the raw batch rows a third time.
-        sig = pin(dedup._minhash_sig_keys(
+        sig = pin(dedup.minhash_sig_keys(
             new, "doc_id", "text",
             p["shingle_n"], p["num_hashes"], p["bands"], p["seed"], p["hash_fn"],
         ))

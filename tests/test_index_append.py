@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from laygo_python_spark import artifact
 from laygo_python_spark.operators import dedup
 
 
@@ -162,6 +163,36 @@ def test_simhash_append_batch_id_replay_is_noop(spark, tmp_path):
     s2 = dedup.simhash_index_append(spark, path, day2, batch_id=3)
     assert s1["applied"] is True and s2["applied"] is False
     assert dedup.simhash_index_read(spark, path)["fingerprints"].count() == 20
+
+
+def test_simhash_append_caps_bucket_of_artifact_without_max_bucket(spark, tmp_path):
+    """An artifact written before ``max_bucket`` existed has a params
+    table without that column; it reads as NULL and must mean the
+    default cap (2000). 2000 stored fingerprints share one chunk bucket;
+    one appended doc landing in it must drop the bucket."""
+    from laygo_python_spark.session import local_rows_df
+
+    path = str(tmp_path / "idx")
+    doc = _docs(spark, [(9000, "one new document lands in the crowded chunk bucket")])
+    sh = dedup.simhash_fingerprints(doc, "doc_id", "text", 60, "md5").first()["sh"]
+    chunk_bits = 60 // 4
+    low = sh & ((1 << chunk_bits) - 1)
+    assert not 1 <= sh >> chunk_bits <= 2000  # the doc's fingerprint is new
+    fps = spark.range(1, 2001).select(
+        F.col("id").alias("doc_id"), (F.col("id") * (1 << chunk_bits) + F.lit(low)).alias("sh")
+    )
+    fps.write.parquet(f"{path}/fingerprints")
+    fps.select("sh", F.col("doc_id").alias("rep")).write.parquet(f"{path}/reps")
+    fps.select("sh", F.lit(0).alias("chunk_idx"), F.lit(low).alias("chunk_val")).write.parquet(
+        f"{path}/chunks"
+    )
+    local_rows_df(spark, [(3, 60, "md5")], "max_hamming int, bits int, hash_fn string").write.parquet(
+        f"{path}/params"
+    )
+    assert dedup.simhash_index_append(spark, path, doc, stats=False)["applied"]
+    idx = dedup.simhash_index_read(spark, path)
+    assert idx["params"]["max_bucket"] == 2000
+    assert _sorted_rows(idx["dropped"]) == [(0, low)]
 
 
 def test_minhash_pre_dropped_bucket_stays_dropped(spark, tmp_path):
@@ -357,40 +388,87 @@ def test_srp_index_add_equals_rebuild(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_compact_swap_is_crash_safe(spark, tmp_path):
+def _minhash_compact_case(spark, path):
+    day1 = _docs(spark, _uniq(20))
+    dedup.minhash_index_write(dedup.minhash_index(day1, num_hashes=8, bands=4), path)
+    return (
+        "membership",
+        lambda: dedup.minhash_index_compact(spark, path),
+        lambda: _sorted_rows(dedup.minhash_index_read(spark, path)["membership"]),
+    )
+
+
+def _vectors(spark):
+    import numpy as np
+
+    from laygo_python_spark.session import local_rows_df
+
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.normal(size=8).tolist()) for i in range(40)]
+    return local_rows_df(spark, rows, "vec_id long, embedding array<double>"), rng
+
+
+def _pq_compact_case(spark, path):
+    from laygo_python_spark.operators import pq
+
+    pq.pq_index_write(_vectors(spark)[0], path, m=2, ksub=4)
+    return (
+        "codes",
+        lambda: pq.pq_index_compact(spark, path),
+        lambda: _sorted_rows(pq.pq_index_read(spark, path)[0]),
+    )
+
+
+def _ivf_compact_case(spark, path):
+    from laygo_python_spark.operators import ivf
+
+    corpus, rng = _vectors(spark)
+    ivf.ivf_index_write(corpus, path, centroids=rng.normal(size=(4, 8)))
+    return (
+        "cells",
+        lambda: ivf.ivf_index_compact(spark, path),
+        lambda: _sorted_rows(artifact.read(spark, path, "ivf", "cells")),
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_minhash_compact_case, _pq_compact_case, _ivf_compact_case],
+    ids=["minhash", "pq", "ivf"],
+)
+def test_compact_swap_is_crash_safe(spark, tmp_path, case):
     # Compaction rewrites via temp-dir + checked-rename swap: a leftover
-    # backup dir from a crashed prior run must ABORT (not nest-rename
-    # into it), and a clean compaction must leave no temp/backup debris
-    # next to the tables. Guards the exactly-once story of the
-    # streaming ingest loop that runs compaction inline.
+    # backup dir from a crashed prior run must ABORT before writing
+    # anything (not nest-rename into it), and a clean compaction must
+    # leave no temp/backup debris next to the tables. Guards the
+    # exactly-once story of the streaming ingest loop that runs
+    # compaction inline.
     import os
 
-    day1 = _docs(spark, _uniq(20))
     path = str(tmp_path / "idx")
-    dedup.minhash_index_write(dedup.minhash_index(day1, num_hashes=8, bands=4), path)
-    os.makedirs(f"{path}/membership__precompact")
+    table, compact, rows = case(spark, path)
+    os.makedirs(f"{path}/{table}__precompact")
     with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        dedup.minhash_index_compact(spark, path)
-    os.rmdir(f"{path}/membership__precompact")
-    before = dedup.minhash_index_read(spark, path)
-    kept = _sorted_rows(before["membership"])
-    dedup.minhash_index_compact(spark, path)
+        compact()
+    assert not [d for d in os.listdir(path) if "__compacting" in d]
+    os.rmdir(f"{path}/{table}__precompact")
+    kept = rows()
+    compact()
     leftovers = [d for d in os.listdir(path) if "__compacting" in d or "__precompact" in d]
     assert leftovers == []
-    assert _sorted_rows(dedup.minhash_index_read(spark, path)["membership"]) == kept
+    assert rows() == kept
 
 
 def test_read_or_empty_propagates_real_read_errors(spark, tmp_path):
     # Missing path -> typed empty frame; an EXISTING but unreadable path
     # must raise (a transient/corrupt read that silently read as empty
     # resurrected capped buckets and broke replay idempotency).
-    empty = dedup._read_or_empty(spark, str(tmp_path / "nope"), "band_key long")
+    empty = artifact.read_or_empty(spark, str(tmp_path), "minhash", "dropped")
     assert empty.columns == ["band_key"] and empty.count() == 0
-    bad = tmp_path / "corrupt"
+    bad = tmp_path / "dropped"
     bad.mkdir()
     (bad / "part-0.parquet").write_text("this is not parquet")
     with pytest.raises(Exception):
-        dedup._read_or_empty(spark, str(bad), "band_key long").collect()
+        artifact.read_or_empty(spark, str(tmp_path), "minhash", "dropped").collect()
 
 
 def test_index_template_cached_and_mutation_isolated(spark, tmp_path, monkeypatch):

@@ -8,11 +8,10 @@ import threading
 
 from pyspark.sql import functions as F
 
-from laygo_python_spark.operators import dedup
 from laygo_python_spark.operators.cms import cms_build, cms_estimate
 from laygo_python_spark.operators.hll import hll_build_sharded, hll_estimate_by
 from laygo_python_spark.operators.qsketch import qsketch_build, qsketch_quantiles
-from laygo_python_spark.session import local_rows_df, pin, release
+from laygo_python_spark.session import concurrent_actions, local_rows_df, pin, release
 
 
 def _ids(spark) -> set[int]:
@@ -36,7 +35,7 @@ def test_pin_is_idempotent_and_release_is_scoped(spark):
 
 
 def test_concurrent_pins_release_only_their_own(spark):
-    """Two threads pin at the same moment through the dedup write
+    """Two threads pin at the same moment through the index write
     fan-out. Releasing one pin must leave the other readable: a release
     that found "its" pin by diffing the global persistent-RDD map around
     the checkpoint could pick up the sibling's pin instead."""
@@ -52,7 +51,7 @@ def test_concurrent_pins_release_only_their_own(spark):
 
         return run
 
-    dedup._concurrent_actions(_pin("a", 7), _pin("b", 11))
+    concurrent_actions(_pin("a", 7), _pin("b", 11))
     a, b = box["a"], box["b"]
     a_id, b_id = a._pinned_rdd, b._pinned_rdd
     ours = {a_id, b_id}
