@@ -21,6 +21,9 @@ ivfpq      codes/cell=<c> (vec_id, codes), centroids,       none
 srp        buckets/bkey=<k> (neighbor_id, cv)               n_planes, n_tables, dim, seed
 =========  ===============================================  ==========================
 
+``hash_fn`` is written as ``"md5"`` and simhash ``bits`` as 60;
+``read_params`` rejects a row labelled with any other hash family.
+
 The id column has one fixed name per table (doc_id, __doc, neighbor_id
 or vec_id) whatever ``id_col`` the caller builds with; the search
 functions name it back. ``centroids`` (cell, centroid) and
@@ -58,6 +61,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from .functions import require_md5
 from .session import concurrent_actions, local_rows_df
 
 _CENTROIDS = "cell int, centroid array<double>"
@@ -207,10 +211,14 @@ def write_params(spark, path: str, family: str, params: dict) -> None:
 
 
 def read_params(spark, path: str, family: str) -> dict:
-    """The params row as a dict; a NULL column takes the family default."""
+    """The params row as a dict; a NULL column takes the family default.
+    A row whose ``hash_fn`` is not md5 (or NULL) is rejected."""
     schema, defaults = PARAMS[family]
     row = _scan(spark, f"{path}/params", schema).collect()[0].asDict()
-    return {k: defaults.get(k) if v is None else v for k, v in row.items()}
+    params = {k: defaults.get(k) if v is None else v for k, v in row.items()}
+    if "hash_fn" in params:
+        require_md5(f"{family} index {path}", params["hash_fn"])
+    return params
 
 
 def write_matrix(spark, path: str, family: str, table: str, mat: np.ndarray) -> None:

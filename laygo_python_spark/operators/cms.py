@@ -32,71 +32,52 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_long, sketch_constants
 from ..session import pin
 
 
-def _probes(key: Column, d: int, w: int, hash_fn: str = "xxhash64") -> Column:
-    """Array of d (i, bucket) structs for one key.
-
-    ``hash_fn="xxhash64"`` (production default): xxhash64 seeded by the
-    row index i — d independent hash functions, all JVM-side, fastest.
-    ``hash_fn="md5"`` (oracle twin, d ≤ 4): ONE md5 per key, its 128
-    bits sliced into d disjoint 32-bit fields — probe i is hex chars
-    [8i+1, 8i+8] — reproducible in DuckDB SQL
+def _probes(key: Column, d: int, w: int) -> Column:
+    """Array of d (i, bucket) structs for one key: ONE md5 per key, its
+    128 bits sliced into d ≤ 4 disjoint 32-bit fields — probe i is hex
+    chars [8i+1, 8i+8] — reproducible in DuckDB SQL
     (``('0x'||substr(md5(key),8*i+1,8))::BIGINT % w``), which lets a
-    SQL oracle recompute the ENTIRE counter matrix and every estimate.
-    One hash call instead of d keeps the md5 variant within ~1.2× of
-    xxhash64 (measured sf0.1)."""
-    if hash_fn == "xxhash64":
-        bucket = lambda i: F.pmod(F.xxhash64(key, F.lit(i)), F.lit(w))  # noqa: E731
-        return F.array(
-            *[F.struct(F.lit(i).alias("i"), bucket(i).alias("bucket")) for i in range(d)]
-        )
-    if hash_fn == "md5":
-        if d > 4:
-            raise ValueError(f"hash_fn='md5' slices one 128-bit md5 into d<=4 probes, got d={d}")
-        h = F.md5(key.cast("string"))
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("i"),
-                    F.pmod(
-                        F.conv(F.substring(h, 8 * i + 1, 8), 16, 10).cast("long"), F.lit(w)
-                    ).alias("bucket"),
-                )
-                for i in range(d)
-            ]
-        )
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    SQL oracle recompute the ENTIRE counter matrix and every estimate."""
+    if not 1 <= d <= 4:
+        raise ValueError(f"cms: one 128-bit md5 slices into 1..4 probes, got d={d}")
+    k = key.cast("string")
+    return F.array(
+        *[
+            F.struct(F.lit(i).alias("i"), F.pmod(md5_long(k, 8, 8 * i), F.lit(w)).alias("bucket"))
+            for i in range(d)
+        ]
+    )
 
 
-def cms_build(df: DataFrame, key: str, d: int = 4, w: int = 8192, weight: str | None = None, hash_fn: str = "xxhash64") -> DataFrame:
+def cms_build(df: DataFrame, key: str, d: int = 4, w: int = 8192, weight: str | None = None) -> DataFrame:
     """Sketch the frequency distribution of ``df[key]``.
 
     Returns the sparse counter table ``(i int, bucket bigint, cnt
-    bigint, d int, w int)`` — at most d×w rows however large df is. The
-    (d, w) geometry rides along as constant columns (free under parquet
-    RLE) so merge/estimate can verify they operate on compatible
-    sketches instead of silently undercounting. ``weight`` optionally
+    bigint, d int, w int, hash_fn string)`` — at most d×w rows however
+    large df is. The (d, w) geometry and the hash family (always
+    ``"md5"``) ride along as constant columns (free under parquet RLE)
+    so merge/estimate can verify they operate on compatible sketches
+    instead of silently undercounting. ``weight`` optionally
     counts each row with a column's weight instead of 1 (e.g.
     pre-aggregated (key, n) pairs).
 
     NULL keys are filtered (mirroring bloom_build / hll_build):
-    ``xxhash64(NULL, i)`` is a seed-derived value, not NULL, so an
-    unfiltered NULL would increment d real counters and over-count any
-    colliding key; frequency-of-NULL is not a question a key sketch
-    answers."""
+    frequency-of-NULL is not a question a key sketch answers."""
     wcol = F.col(weight) if weight else F.lit(1)
     return (
         df.filter(F.col(key).isNotNull())
-        .select(F.explode(_probes(F.col(key), d, w, hash_fn)).alias("p"), wcol.alias("wt"))
+        .select(F.explode(_probes(F.col(key), d, w)).alias("p"), wcol.alias("wt"))
         .groupBy(F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
         .agg(F.sum("wt").alias("cnt"))
-        .withColumns({"d": F.lit(d), "w": F.lit(w), "hash_fn": F.lit(hash_fn)})
+        .withColumns({"d": F.lit(d), "w": F.lit(w), "hash_fn": F.lit("md5")})
     )
 
 
-def cms_build_sharded(df: DataFrame, key: str, shard, d: int = 4, w: int = 8192, weight: str | None = None, hash_fn: str = "xxhash64") -> DataFrame:
+def cms_build_sharded(df: DataFrame, key: str, shard, d: int = 4, w: int = 8192, weight: str | None = None) -> DataFrame:
     """Per-shard sketches in ONE pass: ``(shard, i, bucket, cnt, d, w)``.
 
     The backfill shape — when the shards are partitions of one table
@@ -112,87 +93,59 @@ def cms_build_sharded(df: DataFrame, key: str, shard, d: int = 4, w: int = 8192,
         df.filter(F.col(key).isNotNull())
         .select(
             shard_col.alias("shard"),
-            F.explode(_probes(F.col(key), d, w, hash_fn)).alias("p"),
+            F.explode(_probes(F.col(key), d, w)).alias("p"),
             wcol.alias("wt"),
         )
         .groupBy("shard", F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
         .agg(F.sum("wt").alias("cnt"))
-        .withColumns({"d": F.lit(d), "w": F.lit(w), "hash_fn": F.lit(hash_fn)})
+        .withColumns({"d": F.lit(d), "w": F.lit(w), "hash_fn": F.lit("md5")})
     )
 
 
-def _geometry(sketch: DataFrame, what: str) -> tuple[int, int, str]:
-    """Read the (d, w, hash_fn) constants a sketch carries; one tiny
-    driver action (the sketch is ≤ d×w rows). Loud failure beats a
-    silent undercount: mixing geometries OR hash families is the misuse
-    that breaks the CMS never-undercount guarantee without any visible
-    error — probing an md5-built sketch with xxhash64 probes finds no
-    matching counters and estimates near-zero. Sketches persisted
-    before hash_fn rode along are read as the then-default xxhash64."""
-    has_hf = "hash_fn" in sketch.columns
-    cols = [F.col("d"), F.col("w")] + (
-        # NULL hash_fn = a pre-hash_fn sketch row that arrived through
-        # unionByName(allowMissingColumns=True) — the documented
-        # backcompat reading is the then-default xxhash64, so coalesce
-        # BEFORE the distinct check (a literal NULL here rejected every
-        # legacy-merge despite the promise).
-        [F.coalesce(F.col("hash_fn"), F.lit("xxhash64")).alias("hash_fn")] if has_hf else []
-    )
-    rows = sketch.select(*cols).distinct().collect()
+def _geometry(sketch: DataFrame, what: str) -> tuple[int, int]:
+    """Read the (d, w) constants a sketch carries; one tiny driver
+    action (the sketch is ≤ d×w rows). Loud failure beats a silent
+    undercount: mixing geometries, or probing a sketch hashed some other
+    way (``require_md5``), breaks the CMS never-undercount guarantee
+    without any visible error."""
+    rows = sketch_constants(sketch, what, "d", "w")
     if len(rows) != 1:
-        raise ValueError(
-            f"{what}: mixed sketch geometries "
-            f"{sorted((tuple(r) for r in rows), key=lambda t: tuple(map(str, t)))}"
-        )
-    return rows[0]["d"], rows[0]["w"], (rows[0]["hash_fn"] if has_hf else "xxhash64")
+        raise ValueError(f"{what}: mixed sketch geometries {sorted((r['d'], r['w']) for r in rows)}")
+    return rows[0]["d"], rows[0]["w"]
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union counter tables built with the SAME (d, w, hash_fn) —
-    linearity of counters makes merge a sum, which is what lets
-    per-day/per-shard sketches roll up without touching raw data.
-    Raises on geometry or hash-family mismatch rather than summing
-    misaligned counters."""
+    """Union counter tables built with the SAME (d, w) — linearity of
+    counters makes merge a sum, which is what lets per-day/per-shard
+    sketches roll up without touching raw data. Raises on geometry
+    mismatch rather than summing misaligned counters."""
     out = sketches[0]
     for s in sketches[1:]:
         out = out.unionByName(s, allowMissingColumns=True)
-    if "hash_fn" in out.columns:
-        # Pre-hash_fn rows union in as NULL — materialize the documented
-        # xxhash64 backcompat default so the groupBy below actually
-        # merges them with same-family counters instead of keeping a
-        # parallel NULL-keyed counter set.
-        out = out.withColumn("hash_fn", F.coalesce(F.col("hash_fn"), F.lit("xxhash64")))
     out = pin(out)  # read twice: geometry guard + the merge agg
     _geometry(out, "cms_merge")
-    keys = ["i", "bucket", "d", "w"] + (["hash_fn"] if "hash_fn" in out.columns else [])
+    keys = ["i", "bucket", "d", "w", "hash_fn"]
     return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt")).select(
         "i", "bucket", "cnt", *keys[2:]
     )
 
 
-def cms_estimate(sketch: DataFrame, keys: DataFrame, key: str, d: int | None = None, w: int | None = None, hash_fn: str | None = None) -> DataFrame:
+def cms_estimate(sketch: DataFrame, keys: DataFrame, key: str, d: int | None = None, w: int | None = None) -> DataFrame:
     """Point-frequency estimates for each distinct key in ``keys[key]``.
 
     min over the d probed counters; a probe absent from the sparse table
-    is 0 (only possible for keys never inserted). The probe geometry AND
-    hash family are read from the sketch itself (pass d/w/hash_fn only
-    to assert expectations — a mismatch raises instead of silently
+    is 0 (only possible for keys never inserted). The probe geometry is
+    read from the sketch itself (pass d/w only to assert expectations — a mismatch raises instead of silently
     estimating near-zero from never-colliding probes, the same
     stored-params-win contract as dedup._resolve_index_params). The
     sketch side is ≤ d×w rows, so it broadcasts — estimation is a
     map-side join however many query keys stream through."""
     sketch = pin(sketch)  # read twice: geometry guard + broadcast
-    sd, sw, shf = _geometry(sketch, "cms_estimate")
+    sd, sw = _geometry(sketch, "cms_estimate")
     if (d is not None and d != sd) or (w is not None and w != sw):
         raise ValueError(f"cms_estimate: sketch was built with (d={sd}, w={sw}), caller expected (d={d}, w={w})")
-    if hash_fn is not None and hash_fn != shf:
-        raise ValueError(
-            f"cms_estimate: sketch was built with hash_fn={shf!r}, caller probed with "
-            f"{hash_fn!r} — probes would never hit the stored counters; drop the "
-            "override or rebuild the sketch"
-        )
     probes = keys.select(
-        F.col(key), F.explode(_probes(F.col(key), sd, sw, shf)).alias("p")
+        F.col(key), F.explode(_probes(F.col(key), sd, sw)).alias("p")
     ).select(key, F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
     return (
         probes.join(F.broadcast(sketch.select("i", "bucket", "cnt")), ["i", "bucket"], "left")
@@ -213,18 +166,15 @@ def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
     (cms_build_sharded + cms_merge) and the estimate costs a
     KB-scale join.
 
-    Geometries must match (d, w, hash_fn ride on the sketches and are
+    Geometries must match (d and w ride on the sketches and are
     verified, same contract as cms_merge). Returns one row
     ``(est bigint)``. Buckets present in only one sketch contribute 0
     (inner join drops them — their product is 0)."""
     a, b = pin(a), pin(b)  # each read twice: guard + product
-    da, wa, ha = _geometry(a, "cms_inner_product(a)")
-    db, wb, hb = _geometry(b, "cms_inner_product(b)")
-    if (da, wa, ha) != (db, wb, hb):
-        raise ValueError(
-            f"cms_inner_product: incompatible sketch geometries "
-            f"({da},{wa},{ha}) vs ({db},{wb},{hb})"
-        )
+    da, wa = _geometry(a, "cms_inner_product(a)")
+    db, wb = _geometry(b, "cms_inner_product(b)")
+    if (da, wa) != (db, wb):
+        raise ValueError(f"cms_inner_product: incompatible sketch geometries ({da},{wa}) vs ({db},{wb})")
     # Accumulate in DECIMAL(38,0), not BIGINT (r9 advice): the inner
     # product is bounded by N_A·N_B — two 1e12-count sketches already
     # exceed int64, and Spark's non-ANSI bigint sum would wrap silently

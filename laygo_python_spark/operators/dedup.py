@@ -9,13 +9,17 @@ Four tiers, all JVM-side (no Python in any hot path):
    Quadratic in corpus size per shared token: the *verification*
    primitive, not the discovery path at scale.
 3. **MinHash + LSH banding** — the discovery path: shingle → minhash
-   signature (H universal hashes over xxhash64) → band → bucket join.
+   signature (H universal hashes over a 31-bit md5 prefix) → band →
+   bucket join.
    Only documents sharing a band bucket are compared; cost is
    O(candidates), not O(n²). Collision prob for Jaccard s:
    1 - (1 - s^R)^B with H = B*R signatures.
-4. **SimHash** — 64-bit locality-sensitive fingerprint; near-dups are
+4. **SimHash** — 60-bit locality-sensitive fingerprint; near-dups are
    pairs within Hamming distance k, found by pigeonhole banding on
-   16-bit chunks (hamming <= 3 → at least one of 4 chunks equal).
+   15-bit chunks (hamming <= 3 → at least one of 4 chunks equal).
+
+MinHash and SimHash hash keys with md5 prefixes only (``_shingle_hasher``,
+``_token_hasher``), which DuckDB computes too: the oracle replays them.
 
 At 100 TB: every stage is explode/groupBy/join on short keys — the
 shuffles move hashes and ids, never document text. Skewed buckets
@@ -30,16 +34,20 @@ near-dup recall is 900/900, and the sweep finishes in ~60 s.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import artifact
+from ..functions import md5_long, require_md5
 from ..session import concurrent_actions, local_rows_df, pin, release
 
 # Universal-hash constants: h_i(x) = (a_i * x + b_i) mod P over
-# x = xxhash64(shingle) folded into [0, 2^31). P = 2^31 - 1 (prime);
-# a_i*x + b_i < 2^62 so the arithmetic never overflows a signed 64-bit
-# (Spark 4 runs ANSI mode — overflow would raise, not wrap).
+# x = the 31-bit md5 prefix of the shingle (``_shingle_hasher``).
+# P = 2^31 - 1 (prime); a_i*x + b_i < 2^62 so the arithmetic never
+# overflows a signed 64-bit (Spark 4 runs ANSI mode — overflow would
+# raise, not wrap).
 MINHASH_PRIME = 2_147_483_647
 
 
@@ -132,33 +140,16 @@ def shingles(text_col: str = "text", n: int = 3) -> Column:
     )
 
 
-def _shingle_hasher(hash_fn: str, seed: int):
-    """Per-shingle 31-bit hash, chosen for the trade the caller needs:
+def _shingle_hasher():
+    """A shingle's 31-bit hash: the first 4 md5 bytes folded to 31 bits,
+    the Python twin of ``md5_long(s, 8) % 2^31``. DuckDB computes it as
+    ``('0x'||substr(md5(s),1,8))::BIGINT % 2^31``, which makes the whole
+    signature/banding pipeline hash-matchable against a SQL oracle. The
+    seed varies the universal-hash (a, b) params, not this hash.
 
-    * ``"md5"`` (DEFAULT since r5): the oracle-proven family — the
-      shipped default is the path the DuckDB gate hash-checks, so a
-      user inherits the verified behavior; measured ~1.05× crc32 at
-      sf0.1 (one md5 per shingle, not per probe).
-    * ``"crc32"`` (opt-in fast path): ``(crc32(s) ^ seed) & 0x7FFFFFFF``
-      — ~4× faster per hash call on short strings, but NOT expressible
-      in DuckDB SQL (no crc32), so crc32-hashed outputs are covered by
-      planted-dup structure-equivalence pytest, not the hash oracle.
-    * ``"md5"`` mechanics: first 4 md5 bytes folded to 31 bits —
-      ``int(md5(s).hexdigest()[:8], 16) & 0x7FFFFFFF``, which BOTH
-      engines can compute (``conv(substr(md5(s),1,8),16,10) % 2^31`` in
-      Spark SQL, ``('0x'||substr(md5(s),1,8))::BIGINT % 2^31`` in
-      DuckDB), making the whole signature/banding pipeline
-      hash-matchable against a SQL oracle. The seed still varies the
-      universal-hash (a, b) params, just not the base hash.
-    """
-    import hashlib
-    import zlib
-
-    if hash_fn == "crc32":
-        return lambda s: (zlib.crc32(s.encode()) ^ seed) & 0x7FFFFFFF
-    if hash_fn == "md5":
-        return lambda s: int(hashlib.md5(s.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    Returned as a closure so workers unpickle it by value; a module
+    function would make every Python worker import this package."""
+    return lambda s: int(hashlib.md5(s.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF
 
 
 def minhash_signatures(
@@ -168,12 +159,10 @@ def minhash_signatures(
     shingle_n: int = 3,
     num_hashes: int = 128,
     seed: int = 42,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(id, sig array<long>) — one minhash signature per document.
 
-    MAP-ONLY: shingling, hashing (crc32 or md5 — see ``_shingle_hasher``
-    for the speed-vs-oracle-expressibility trade) and the
+    MAP-ONLY: shingling, hashing (``_shingle_hasher``) and the
     (n_shingles × H) int64 matrix minimization all happen in one
     Arrow-batched mapInPandas pass per document — ZERO shuffle. Docs
     shorter than the shingle width produce no signature (dropped, as the
@@ -191,7 +180,7 @@ def minhash_signatures(
     params = hash_params(num_hashes, seed)
     A = np.array([a for a, _ in params], dtype=np.int64)[None, :]
     B = np.array([b for _, b in params], dtype=np.int64)[None, :]
-    hasher = _shingle_hasher(hash_fn, seed)
+    hasher = _shingle_hasher()
 
     # Per-DOC numpy ops, deliberately: a batch-vectorized variant (one
     # (S × H) permute matrix + np.minimum.reduceat over doc boundaries)
@@ -240,7 +229,6 @@ def minhash_sig_keys(
     num_hashes: int,
     bands: int,
     seed: int,
-    hash_fn: str,
 ) -> DataFrame:
     """(id, sig_key long, band_keys array<long>) — the LSH-ready shape.
 
@@ -260,7 +248,7 @@ def minhash_sig_keys(
     params = hash_params(num_hashes, seed)
     A = np.array([a for a, _ in params], dtype=np.int64)[None, :]
     B = np.array([b for _, b in params], dtype=np.int64)[None, :]
-    hasher = _shingle_hasher(hash_fn, seed)
+    hasher = _shingle_hasher()
     C = np.uint64(_FOLD_C)
     band_salt = (np.arange(bands, dtype=np.uint64) * np.uint64(_FOLD_SALT)) + np.uint64(1)
 
@@ -313,7 +301,6 @@ def minhash_lsh_candidates(
     seed: int = 42,
     max_bucket: int = 1000,
     clique_mode: str = "pairs",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
@@ -366,7 +353,7 @@ def minhash_lsh_candidates(
     if clique_mode not in ("pairs", "star"):
         raise ValueError(f"unknown clique_mode {clique_mode!r}")
 
-    sig = minhash_sig_keys(docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn)
+    sig = minhash_sig_keys(docs, id_col, text_col, shingle_n, num_hashes, bands, seed)
     # One exchange on the signature key; everything downstream of the
     # Python signature pass stays a single linear chain (a self-join
     # would re-execute the mapInPandas subtree — exchange reuse never
@@ -519,7 +506,10 @@ def minhash_index(
       (bucket populations only grow — once over the cap, forever over).
 
     Index size: |docs| membership rows + ≤ bands × |distinct sigs| band
-    rows — hashes and ids only, no text."""
+    rows — hashes and ids only, no text.
+
+    ``hash_fn`` accepts only ``"md5"``, the one key hash."""
+    require_md5("minhash_index", hash_fn)
     # Pin the signature pass ONCE: membership/reps/bands are three
     # derived frames, and exchange reuse never fires across mapInPandas
     # subtrees (module-established, measured) — unpinned, every derived
@@ -527,9 +517,7 @@ def minhash_index(
     # caller-side checkpoints in the queries) would re-shingle the whole
     # seen corpus. Blocks release via ContextCleaner once the returned
     # frames are dereferenced.
-    sig = pin(minhash_sig_keys(
-        docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
-    ))
+    sig = pin(minhash_sig_keys(docs, id_col, text_col, shingle_n, num_hashes, bands, seed))
     membership = sig.select(F.col(id_col).alias("doc_id"), "sig_key")
     reps = membership.groupBy("sig_key").agg(F.min("doc_id").alias("rep"))
     band_all = (
@@ -716,7 +704,6 @@ def minhash_index_append(
             row["num_hashes"],
             row["bands"],
             row["seed"],
-            row["hash_fn"],
         )
         if return_view:
             # View mode: the batch frames must outlive this call (the
@@ -957,7 +944,6 @@ def minhash_match_incremental(
     num_hashes: int | None = None,
     bands: int | None = None,
     seed: int | None = None,
-    hash_fn: str | None = None,
     mode: str = "pairs",
     precomputed_sig: DataFrame | None = None,
 ) -> DataFrame:
@@ -992,22 +978,10 @@ def minhash_match_incremental(
         raise ValueError(f"unknown mode {mode!r}")
     p = _resolve_index_params(
         index,
-        {
-            "shingle_n": shingle_n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "seed": seed,
-            "hash_fn": hash_fn,
-        },
-        {"shingle_n": 3, "num_hashes": 128, "bands": 32, "seed": 42, "hash_fn": "md5"},
+        {"shingle_n": shingle_n, "num_hashes": num_hashes, "bands": bands, "seed": seed},
+        {"shingle_n": 3, "num_hashes": 128, "bands": 32, "seed": 42},
     )
-    shingle_n, num_hashes, bands, seed, hash_fn = (
-        p["shingle_n"],
-        p["num_hashes"],
-        p["bands"],
-        p["seed"],
-        p["hash_fn"],
-    )
+    shingle_n, num_hashes, bands, seed = p["shingle_n"], p["num_hashes"], p["bands"], p["seed"]
     # Pin the new batch's signature pass ONCE: it feeds the same-sig
     # join, the cross-sig join, and the band explode — three subtrees
     # that would each re-run the Python pass (exchange reuse never
@@ -1018,9 +992,7 @@ def minhash_match_incremental(
     # output built with this index's params.
     sig = precomputed_sig
     if sig is None:
-        sig = pin(minhash_sig_keys(
-            new_docs, id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn
-        ))
+        sig = pin(minhash_sig_keys(new_docs, id_col, text_col, shingle_n, num_hashes, bands, seed))
     seen_side = index["membership"] if mode == "pairs" else index["reps"]
     seen_cols = {"sig_key": "nsig", "doc_id": "doc_id_seen"} if mode == "pairs" else {
         "sig_key": "nsig",
@@ -1982,46 +1954,43 @@ def connected_components(
         release(sym)
 
 
+# SimHash fingerprint width: the first 15 md5 hex chars. 60 bits stay
+# inside a signed int64 in both engines and tile as 4×15-bit chunks.
+SIMHASH_BITS = 60
+
+
+def _token_hasher():
+    """A token's 60-bit hash, the Python twin of ``md5_long(t, 15)``
+    (``('0x'||substr(md5(t),1,15))::BIGINT`` in DuckDB); a closure for
+    the reason ``_shingle_hasher`` gives."""
+    return lambda t: int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+
+
+def _chunk_bits(max_hamming: int) -> int:
+    """Width of each of the max_hamming+1 pigeonhole chunks."""
+    if SIMHASH_BITS % (max_hamming + 1) != 0:
+        raise ValueError("max_hamming+1 must divide the 60 fingerprint bits so chunks tile them")
+    return SIMHASH_BITS // (max_hamming + 1)
+
+
 def simhash_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 60,
-    hash_fn: str = "md5",
 ) -> DataFrame:
-    """(id, sh bigint) — ``bits``-wide SimHash per document: hash each
-    token to ``bits`` bits, sum +1/-1 per bit position across tokens,
-    set bits where the tally is positive.
-
-    ``hash_fn``: ``"md5"`` (DEFAULT since r5 — 60-bit from the first 15
-    md5 hex chars, requires ``bits=60``): the oracle-proven family, so
-    the shipped default is the path the DuckDB gate hash-checks — BOTH
-    engines compute it (``('0x'||substr(md5(t),1,15))::BIGINT`` in
-    DuckDB), 60 bits keeps the value inside a signed int64 in both, and
-    4 pigeonhole chunks tile it as 4×15 bits. ``"crc32"`` (opt-in fast
-    path, 64-bit via two salted crc32s — pair with ``bits=64``) stays
-    pytest-covered via planted-dup structure equivalence.
+    """(id, sh bigint) — 60-bit SimHash per document: hash each token
+    (``_token_hasher``), sum +1/-1 per bit position across tokens, set
+    bits where the tally is positive.
 
     MAP-ONLY like minhash_signatures (and for the same measured reason:
     64 interpreted sum() aggregates + explode were ~10 s at sf0.1, this
     is ~1 s with zero shuffle): per batch, tokens hash → a
-    (n_tokens × bits) ±1 matrix → column sum → sign → fingerprint."""
-    import hashlib
-    import zlib
-
+    (n_tokens × 60) ±1 matrix → column sum → sign → fingerprint."""
     import numpy as np
     import pandas as pd
 
-    if hash_fn == "crc32":
-        tok_hash = lambda t: (zlib.crc32(t.encode()) << 32) | zlib.crc32(t.encode(), 0xBEEF)  # noqa: E731
-    elif hash_fn == "md5":
-        if bits != 60:
-            raise ValueError("hash_fn='md5' produces a 60-bit hash; pass bits=60")
-        tok_hash = lambda t: int(hashlib.md5(t.encode()).hexdigest()[:15], 16)  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-    bit_idx = np.arange(bits, dtype=np.uint64)[None, :]
+    tok_hash = _token_hasher()
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)[None, :]
 
     def run(batches):
         for pdf in batches:
@@ -2038,7 +2007,7 @@ def simhash_fingerprints(
                 signs = (((h >> bit_idx) & 1) * 2).astype(np.int64) - 1  # ±1
                 tally = signs.sum(axis=0)
                 fp = int(((tally > 0).astype(np.uint64) << bit_idx[0]).sum(dtype=np.uint64))
-                fps.append(fp - (1 << 64) if fp >= (1 << 63) else fp)  # to signed long
+                fps.append(fp)  # < 2^60: fits a signed long
                 ids.append(doc_id)
             if ids:
                 yield pd.DataFrame({id_col: ids, "sh": pd.array(fps, dtype="int64")})
@@ -2056,13 +2025,11 @@ def simhash_near_dups(
     max_bucket: int = 2000,
     expand_threshold: int = 200_000,
     clique_mode: str = "pairs",
-    bits: int = 60,
-    hash_fn: str = "md5",
     n_fingerprints: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance, via pigeonhole
-    banding: split the ``bits``-wide fingerprint into max_hamming+1
-    equal chunks (default: 60-bit md5 → 4×15 bits) — any pair within
+    banding: split the 60-bit fingerprint into max_hamming+1 equal
+    chunks (default: 4×15 bits) — any pair within
     Hamming distance 3 must agree on >= 1 chunk, so the candidate join
     is equi on (chunk_index, chunk_value), never O(n²).
     Returns (doc_id_a, doc_id_b, hamming).
@@ -2098,11 +2065,9 @@ def simhash_near_dups(
     frame is checkpointed for the join's double read anyway — but it
     IS an eager action inside what looks like pure plan building)."""
     n_chunks = max_hamming + 1
-    if bits % n_chunks != 0:
-        raise ValueError("max_hamming+1 must divide bits so chunks tile the fingerprint")
+    chunk_bits = _chunk_bits(max_hamming)
     if clique_mode not in ("pairs", "star"):
         raise ValueError(f"unknown clique_mode {clique_mode!r}")
-    chunk_bits = bits // n_chunks
     # The distinct-fingerprint frame is pinned so the pair self-join
     # (which reads it twice) and the member/rep expansion joins don't
     # re-run the Python fingerprint pass — exchange reuse never fires
@@ -2118,7 +2083,7 @@ def simhash_near_dups(
     #   compose time). First execution populates the cache; parallel
     #   stages may race the first fill (recompute, not wrong results).
     fp = (
-        simhash_fingerprints(docs, id_col, text_col, bits, hash_fn)
+        simhash_fingerprints(docs, id_col, text_col)
         .groupBy("sh")
         .agg(F.collect_list(F.col(id_col)).alias("members"), F.min(F.col(id_col)).alias("rep"))
     )
@@ -2240,8 +2205,6 @@ def simhash_index(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket: int = 2000,
-    bits: int = 60,
-    hash_fn: str = "md5",
 ) -> dict[str, DataFrame]:
     """SimHash twin of ``minhash_index``: the stored incremental state —
 
@@ -2258,14 +2221,12 @@ def simhash_index(
     Integer-only parquet-able artifacts; matching a new batch never
     re-reads the seen corpus."""
     n_chunks = max_hamming + 1
-    if bits % n_chunks != 0:
-        raise ValueError("max_hamming+1 must divide bits so chunks tile the fingerprint")
-    chunk_bits = bits // n_chunks
+    chunk_bits = _chunk_bits(max_hamming)
     # Pinned once: fingerprints/reps/chunks are three derived frames
     # (same rationale as minhash_index — unpinned, each derived table's
     # action re-fingerprints the whole seen corpus).
     fp = pin(
-        simhash_fingerprints(docs, id_col, text_col, bits, hash_fn)
+        simhash_fingerprints(docs, id_col, text_col)
         .select(F.col(id_col).alias("doc_id"), "sh")
     )
     from pyspark.sql import Window
@@ -2284,8 +2245,8 @@ def simhash_index(
     reps = fp.groupBy("sh").agg(F.min("doc_id").alias("rep"))
     params = {
         "max_hamming": max_hamming,
-        "bits": bits,
-        "hash_fn": hash_fn,
+        "bits": SIMHASH_BITS,
+        "hash_fn": "md5",
         "max_bucket": max_bucket,
     }
     return {
@@ -2344,13 +2305,13 @@ def simhash_index_append(
     concurrent-append + optional-``stats`` job trim."""
     row = artifact.read_params(spark, path, "simhash")
     max_bucket = row["max_bucket"]
-    max_hamming, bits, hash_fn = row["max_hamming"], row["bits"], row["hash_fn"]
+    max_hamming = row["max_hamming"]
     n_chunks = max_hamming + 1
-    chunk_bits = bits // n_chunks
+    chunk_bits = _chunk_bits(max_hamming)
     if artifact.begin(spark, path, batch_id):
         return {"applied": False, "fingerprints": 0, "reps": 0, "chunks": 0, "dropped": 0}
     fp = pin(
-        simhash_fingerprints(new_docs, id_col, text_col, bits, hash_fn)
+        simhash_fingerprints(new_docs, id_col, text_col)
         .select(F.col(id_col).alias("doc_id"), "sh")
     )
     reps_add = fp.groupBy("sh").agg(F.min("doc_id").alias("rep"))
@@ -2399,8 +2360,6 @@ def simhash_match_incremental(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int | None = None,
-    bits: int | None = None,
-    hash_fn: str | None = None,
     mode: str = "pairs",
 ) -> DataFrame:
     """(doc_id_new, doc_id_seen, hamming) — today's batch against the
@@ -2415,20 +2374,14 @@ def simhash_match_incremental(
     under identical-doc floods."""
     if mode not in ("pairs", "rep"):
         raise ValueError(f"unknown mode {mode!r}")
-    p = _resolve_index_params(
-        index,
-        {"max_hamming": max_hamming, "bits": bits, "hash_fn": hash_fn},
-        {"max_hamming": 3, "bits": 60, "hash_fn": "md5"},
-    )
-    max_hamming, bits, hash_fn = p["max_hamming"], p["bits"], p["hash_fn"]
+    p = _resolve_index_params(index, {"max_hamming": max_hamming}, {"max_hamming": 3})
+    max_hamming = p["max_hamming"]
     n_chunks = max_hamming + 1
-    if bits % n_chunks != 0:
-        raise ValueError("max_hamming+1 must divide bits so chunks tile the fingerprint")
-    chunk_bits = bits // n_chunks
+    chunk_bits = _chunk_bits(max_hamming)
     # Pinned once — feeds the same-fp join, chunk explode, and cross
     # join (3x Python fingerprint pass otherwise; see minhash twin).
     new_fp = pin(
-        simhash_fingerprints(new_docs, id_col, text_col, bits, hash_fn)
+        simhash_fingerprints(new_docs, id_col, text_col)
         .select(F.col(id_col).alias("doc_id_new"), F.col("sh").alias("nsh"))
     )
     if mode == "pairs":
@@ -2505,12 +2458,7 @@ def cluster_split(
             F.coalesce(F.col("cluster"), F.col(id_col)).alias("cluster"),
         )
     )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("cluster").cast("string")), 1, 6), 16, 10).cast(
-            "long"
-        ),
-        F.lit(100),
-    )
+    bucket = F.pmod(md5_long(F.col("cluster").cast("string"), 6), F.lit(100))
     return labeled.select(
         id_col,
         "cluster",

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_long
 from ..session import pin
 
 
@@ -54,10 +55,7 @@ def hashed_token_buckets(
         *extra_cols,
         F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
     )
-    b = F.pmod(
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"),
-        F.lit(buckets),
-    )
+    b = F.pmod(md5_long(F.col("tok"), 8), F.lit(buckets))
     return tok.select(id_col, *extra_cols, b.alias("bucket"))
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_long
+
 
 def _qi_cols(quasi_cols: list[str | Column]) -> list[Column]:
     if not quasi_cols:
@@ -233,7 +235,7 @@ def dp_laplace_release(
             for k in keys
         ],
     )
-    h = F.conv(F.substring(F.md5(key_str), 1, 8), 16, 10).cast("long") % F.lit(1000000)
+    h = md5_long(key_str, 8) % F.lit(1000000)
     u = (h.cast("double") + F.lit(0.5)) / F.lit(1000000.0)
     t = u - F.lit(0.5)
     noise = (

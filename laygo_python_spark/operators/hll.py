@@ -11,7 +11,7 @@ which buys three things the binary cannot give:
 - **engine-neutral artifacts**: a parquet of integers any system can
   read, merge, or audit — the same artifact-reuse story as the bloom
   word table and the CMS counter table;
-- **determinism**: xxhash64 is seeded and the register update is max()
+- **determinism**: the md5 hash is fixed and the register update is max()
   — order-free, so the sketch is bit-identical under ANY partitioning
   or merge order (the engine binary varies with internal buffering);
 - **relational everything**: build = groupBy max (map-side partial agg
@@ -20,8 +20,10 @@ which buys three things the binary cannot give:
   aggregate row.
 
 Algorithm (Flajolet et al. 2007, with the standard small-range linear
-counting correction): register index = top p bits of the 64-bit hash,
-rho = 1 + count of leading zeros in the remaining 64−p bits, estimate
+counting correction): register index = top p bits of the 60-bit md5
+prefix hash (``md5_long(key, 15)``, which DuckDB replays as
+``('0x'||substr(md5(k),1,15))::BIGINT``), rho = 1 + count of leading
+zeros in the remaining 60−p bits, estimate
 = alpha_m · m² / Σ 2^−rho (absent registers count 2⁰ each). The
 leading-zero count is EXACT integer Column algebra — a 6-step binary
 search on bit masks — not a float log2, which silently miscounts above
@@ -35,63 +37,52 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_long, sketch_constants
 from ..session import pin
 
-
-def _hash_exprs(p: int, hash_fn: str) -> tuple[str, str]:
-    """(idx_sql, rho_sql) over the ``__hll_key`` column.
-
-    ``"xxhash64"`` (production default): seeded 64-bit JVM hash — idx =
-    top p bits, rho over the low 64−p bits. ``"md5"`` (oracle twin):
-    the 60-bit md5-prefix family — ``conv(substr(md5(key),1,15),16,10)``
-    — which DuckDB replays as ``('0x'||substr(md5(k),1,15))::BIGINT``,
-    making register tables AND estimates SQL-reproducible; idx = top p
-    of 60 bits, rho over the remaining 60−p."""
-    if hash_fn == "xxhash64":
-        h, bits = "xxhash64(__hll_key, 42)", 64
-    elif hash_fn == "md5":
-        h = "CAST(conv(substr(md5(CAST(__hll_key AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-        bits = 60
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    tail = bits - p
-    idx_sql = f"CAST(shiftrightunsigned({h}, {tail}) AS INT)"
-    # rho = leading zeros of the LOW bits−p bits viewed as a tail-bit
-    # word, + 1 = tail + 1 − bit_length(tailbits), capped at tail+1 when
-    # all zero. bit_length via length(bin(x)): x is masked positive so
-    # bin() is its minimal binary representation. The earlier iterative
-    # mask-narrowing CLZ duplicated the (md5-conv) hash expression ~65×
-    # into a 46 KB expression string — measured as a ~1 MB task binary
-    # and 15 s cold analysis/codegen in the r7 verdict; this form keeps
-    # the hash expression at 2 occurrences and the whole rho under 300
-    # bytes, with bit-identical registers (pinned in tests/test_hll.py).
-    x = f"({h} & {(1 << tail) - 1})"
-    rho_sql = (
-        f"CAST(CASE WHEN {x} = 0 THEN {tail + 1} "
-        f"ELSE {tail + 1} - length(bin({x})) END AS INT)"
-    )
-    return idx_sql, rho_sql
+_BITS = 60  # md5_long(key, 15)
 
 
-def hll_build(df: DataFrame, key: str, p: int = 12, hash_fn: str = "xxhash64") -> DataFrame:
+def _registers(key: Column, p: int) -> tuple[Column, Column]:
+    """(idx, rho) of ``key``: idx = top p of the 60 hash bits, rho over
+    the remaining 60−p.
+
+    rho = leading zeros of the low tail bits + 1 = tail + 1 −
+    bit_length(tailbits), capped at tail+1 when all zero. bit_length
+    via length(bin(x)): x is masked positive so bin() is its minimal
+    binary representation. The earlier iterative mask-narrowing CLZ
+    duplicated the hash expression ~65× into a 46 KB expression string
+    — measured as a ~1 MB task binary and 15 s cold analysis/codegen in
+    the r7 verdict; this form keeps the hash expression at 2 occurrences
+    and the whole rho small, with bit-identical registers (pinned in
+    tests/test_hll.py)."""
+    h = md5_long(key.cast("string"), 15)
+    tail = _BITS - p
+    x = h.bitwiseAND(F.lit((1 << tail) - 1))
+    rho = F.when(x == 0, F.lit(tail + 1)).otherwise(F.lit(tail + 1) - F.length(F.bin(x)))
+    return F.shiftrightunsigned(h, tail).cast("int"), rho.cast("int")
+
+
+def hll_build(df: DataFrame, key: str, p: int = 12) -> DataFrame:
     """Sketch the distinct count of ``df[key]``.
 
-    Returns the register table ``(idx int, rho int, p int)`` — at most
+    Returns the register table ``(idx int, rho int, p int, hash_fn
+    string)``, hash_fn always ``"md5"`` — at most
     2^p rows however large df is, only registers that were ever hit
     (absent = 0). NULL keys are ignored (SQL COUNT DISTINCT
     semantics)."""
     if not (4 <= p <= 18):
         raise ValueError(f"hll_build: p must be in [4, 18], got {p}")
-    idx_sql, rho_sql = _hash_exprs(p, hash_fn)
+    idx, rho = _registers(F.col("__hll_key"), p)
     keyed = df.select(F.col(key).alias("__hll_key")).filter(F.col(key).isNotNull())
-    reg = keyed.select(F.expr(idx_sql).alias("idx"), F.expr(rho_sql).alias("rho"))
+    reg = keyed.select(idx.alias("idx"), rho.alias("rho"))
     return (
         reg.groupBy("idx")
         .agg(F.max("rho").alias("rho"))
-        .withColumns({"p": F.lit(p), "hash_fn": F.lit(hash_fn)})
+        .withColumns({"p": F.lit(p), "hash_fn": F.lit("md5")})
     )
 
 
@@ -99,29 +90,11 @@ def _p_of(sketch: DataFrame, what: str) -> int | None:
     """The sketch's precision, or None for an EMPTY register table — a
     sketch over zero (or all-NULL) keys has no registers to carry its p
     (a legitimate shard state, mirroring bloom._geometry's None path):
-    estimate 0, merge identity. Also rejects mixed HASH FAMILIES —
-    xxhash64 and md5-60 register tables overlap enough in rho range to
-    merge undetected into a meaningless combined estimate, so the
-    family rides in the table like p does (register tables persisted
-    before hash_fn rode along are read as the then-default
-    xxhash64)."""
-    has_hf = "hash_fn" in sketch.columns
-    cols = [F.col("p")] + (
-        # NULL hash_fn = pre-hash_fn rows through allowMissingColumns
-        # union; the documented backcompat reading is xxhash64, so
-        # coalesce before the mixed-family check (and so the error path
-        # below never compares None with str).
-        [F.coalesce(F.col("hash_fn"), F.lit("xxhash64")).alias("hash_fn")] if has_hf else []
-    )
-    rows = sketch.select(*cols).distinct().collect()
+    estimate 0, merge identity. A sketch hashed some other way is
+    rejected (``require_md5``)."""
+    rows = sketch_constants(sketch, what, "p")
     if len({r["p"] for r in rows}) > 1:
         raise ValueError(f"{what}: mixed HLL precisions {sorted(r['p'] for r in rows)}")
-    if has_hf and len({r["hash_fn"] for r in rows}) > 1:
-        raise ValueError(
-            f"{what}: mixed HLL hash families "
-            f"{sorted({r['hash_fn'] for r in rows}, key=str)} — "
-            "their rho ranges differ (64-p vs 60-p); rebuild one side"
-        )
     if not rows:
         return None
     return rows[0]["p"]
@@ -136,15 +109,16 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     out = sketches[0]
     for s in sketches[1:]:
         out = out.unionByName(s, allowMissingColumns=True)
-    if "hash_fn" in out.columns:
-        # Pre-hash_fn rows union in as NULL — materialize the xxhash64
-        # backcompat default so max-merge actually combines them with
-        # same-family registers.
-        out = out.withColumn("hash_fn", F.coalesce(F.col("hash_fn"), F.lit("xxhash64")))
     out = pin(out)  # read twice: guard + max-merge agg
     _p_of(out, "hll_merge")
-    keys = ["idx", "p"] + (["hash_fn"] if "hash_fn" in out.columns else [])
-    return out.groupBy(*keys).agg(F.max("rho").alias("rho")).select("idx", "rho", *keys[1:])
+    return out.groupBy("idx", "p", "hash_fn").agg(F.max("rho").alias("rho")).select(
+        "idx", "rho", "p", "hash_fn"
+    )
+
+
+def _alpha(m: int) -> float:
+    """HLL's bias-correction constant for m registers."""
+    return {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
 
 
 def hll_estimate(sketch: DataFrame) -> float:
@@ -166,21 +140,13 @@ def hll_estimate(sketch: DataFrame) -> float:
     nz = int(row["nz"])
     zeros = m - nz
     s += zeros  # absent registers contribute 2^0 each
-    if m == 16:
-        alpha = 0.673
-    elif m == 32:
-        alpha = 0.697
-    elif m == 64:
-        alpha = 0.709
-    else:
-        alpha = 0.7213 / (1 + 1.079 / m)
-    est = alpha * m * m / s
+    est = _alpha(m) * m * m / s
     if est <= 2.5 * m and zeros > 0:
         est = m * math.log(m / zeros)  # linear counting
     return est
 
 
-def hll_build_sharded(df: DataFrame, key: str, shard, p: int = 12, hash_fn: str = "xxhash64") -> DataFrame:
+def hll_build_sharded(df: DataFrame, key: str, shard, p: int = 12) -> DataFrame:
     """Per-shard register tables in ONE pass: ``(shard, idx, rho, p)``
     — the backfill/per-group shape (cms_build_sharded's twin): distinct
     users per day, per source, per tenant, each ≤ 2^p rows of state,
@@ -190,19 +156,15 @@ def hll_build_sharded(df: DataFrame, key: str, shard, p: int = 12, hash_fn: str 
     if not (4 <= p <= 18):
         raise ValueError(f"hll_build_sharded: p must be in [4, 18], got {p}")
     shard_col = F.col(shard) if isinstance(shard, str) else shard
-    idx_sql, rho_sql = _hash_exprs(p, hash_fn)
+    idx, rho = _registers(F.col("__hll_key"), p)
     keyed = df.select(shard_col.alias("shard"), F.col(key).alias("__hll_key")).filter(
         F.col(key).isNotNull()
     )
-    reg = keyed.select(
-        "shard",
-        F.expr(idx_sql).alias("idx"),
-        F.expr(rho_sql).alias("rho"),
-    )
+    reg = keyed.select("shard", idx.alias("idx"), rho.alias("rho"))
     return (
         reg.groupBy("shard", "idx")
         .agg(F.max("rho").alias("rho"))
-        .withColumns({"p": F.lit(p), "hash_fn": F.lit(hash_fn)})
+        .withColumns({"p": F.lit(p), "hash_fn": F.lit("md5")})
     )
 
 
@@ -220,14 +182,7 @@ def hll_estimate_by(sketch: DataFrame, group_cols: list[str] | None = None) -> D
         gcols = group_cols or ["shard"]
         return sketch.groupBy(*gcols).agg(F.lit(0.0).alias("est"))
     m = 1 << p
-    if m == 16:
-        alpha = 0.673
-    elif m == 32:
-        alpha = 0.697
-    elif m == 64:
-        alpha = 0.709
-    else:
-        alpha = 0.7213 / (1 + 1.079 / m)
+    alpha = _alpha(m)
     gcols = group_cols or ["shard"]
     s = F.sum(F.pow(F.lit(2.0), -F.col("rho")))
     nz = F.count(F.lit(1))

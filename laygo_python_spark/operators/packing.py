@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_long
+
 
 def pack_sequences(
     df: DataFrame,
@@ -106,11 +108,7 @@ def pack_sequences_grouped(
     shape is what the oracle-gated query emits (the driver's compare
     needs scalar columns).
     """
-    grp = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 6), 16, 10)
-        .cast("long")
-        % n_groups
-    ).alias("grp")
+    grp = (md5_long(F.col(id_col).cast("string"), 6) % n_groups).alias("grp")
     # A NULL id would md5 to a NULL group and reach pack_group as a
     # NaN grp (int() crash inside the executor); packing has no sane
     # placement for an unidentifiable document, so drop NULL ids up

@@ -29,11 +29,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_long
+
 
 def _bucket(col: Column, buckets: int) -> Column:
-    return F.pmod(
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long"), F.lit(buckets)
-    )
+    return F.pmod(md5_long(col, 8), F.lit(buckets))
 
 
 def hashed_tfidf(

@@ -10,7 +10,7 @@ This module implements that loop Spark-first:
 
 * **Features**: hashed bag-of-words. Each token buckets to
   ``md5_31(token) % dim`` — the same 31-bit md5 fold the dedup family
-  proved cross-engine (operators/dedup.py ``_shingle_hasher('md5')``),
+  proved cross-engine (operators/dedup.py ``_shingle_hasher``),
   so DuckDB can replay feature extraction exactly.
 * **Training** (``tools/train_quality_clf.py``): pyspark.ml
   ``LogisticRegression`` over the hashed count vectors — distributed
@@ -41,6 +41,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_long
+
 ARTIFACT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "artifacts",
@@ -66,12 +68,10 @@ def tokens_col(text: Column) -> Column:
 
 def bucket_col(tok: Column, dim: int = DIM) -> Column:
     """md5_31(token) % dim — first 4 md5 bytes folded to 31 bits then
-    bucketed, the dedup family's oracle-proven hash (dedup.py:141-144).
+    bucketed, the dedup family's oracle-proven hash (``dedup._shingle_hasher``).
     DuckDB replay: ``('0x'||substr(md5(t),1,8))::BIGINT % 2147483648 %
     {dim}``."""
-    h31 = F.conv(F.substring(F.md5(tok.cast("binary")), 1, 8), 16, 10).cast("long") % F.lit(
-        2147483648
-    )
+    h31 = md5_long(tok.cast("binary"), 8) % F.lit(2147483648)
     return h31 % F.lit(dim)
 
 

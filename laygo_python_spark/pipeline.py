@@ -279,10 +279,7 @@ class Pipeline:
         """Drain for side effects only (reference: laygo/pipeline.py:346-365).
         Uses the noop sink — a full distributed execution with zero
         collection to the driver."""
-        try:
-            self.df.write.format("noop").mode("overwrite").save()
-        except Exception:
-            self.df.foreachPartition(lambda rows: None)
+        self.df.write.format("noop").mode("overwrite").save()
         return None, self._snapshot()
 
     def count(self) -> tuple[int, dict]:
@@ -401,11 +398,11 @@ class Pipeline:
         for that branch; others are unaffected (laygo/pipeline.py:613-618).
         """
         conditional = any(isinstance(v, tuple) for v in branches.values())
-        cached = self.df.persist()
-        plans: dict[str, DataFrame] = {}
+        # name -> (route: source -> the branch's input, transformer);
+        # routes are Column/predicate values, so no plan is built yet.
+        routes: dict[str, tuple[Callable, Any]] = {}
         if not conditional:
-            for name, t in branches.items():
-                plans[name] = t(cached, self._context) if isinstance(t, Transformer) else t(cached)
+            routes = {name: (lambda d: d, t) for name, t in branches.items()}
         else:
             specs = list(branches.items())
             for _, spec in specs:
@@ -434,7 +431,7 @@ class Pipeline:
                     pred = _exclusive_pred(cond, tuple(prior_fns)) if first_match else cond
                     if first_match:
                         prior_fns.append(cond)
-                    base = Transformer().filter_rows(pred)(cached, self._context)
+                    routes[name] = (lambda d, pred=pred: Transformer().filter_rows(pred)(d, self._context), t)
                 else:
                     sel = c = _as_condition(cond)
                     if first_match:
@@ -445,19 +442,25 @@ class Pipeline:
                             # would silently drop the row).
                             sel = sel & ~F.coalesce(p, F.lit(False))
                         prior_cols.append(c)
-                    base = cached.filter(sel)
-                plans[name] = t(base, self._context) if isinstance(t, Transformer) else t(base)
+                    routes[name] = (lambda d, sel=sel: d.filter(sel), t)
 
         def run(name: str) -> tuple[str, list[Any]]:
+            # The plan is built here, inside the branch's own try: an
+            # analysis error fails only its branch.
+            route, t = routes[name]
             try:
-                d = plans[name]
+                base = route(cached)
+                d = t(base, self._context) if isinstance(t, Transformer) else t(base)
                 return name, _rows_to_python(d.collect(), d.columns)
             except Exception:  # noqa: BLE001 — branch isolation (pipeline.py:613-618)
                 return name, []
 
-        with ThreadPoolExecutor(max_workers=max_workers or len(plans)) as pool:
-            results = dict(pool.map(run, plans))
-        cached.unpersist()
+        cached = self.df.persist()
+        try:
+            with ThreadPoolExecutor(max_workers=max_workers or len(routes)) as pool:
+                results = dict(pool.map(run, routes))
+        finally:
+            cached.unpersist()
         return results, self._snapshot()
 
     # -- misc -------------------------------------------------------------------

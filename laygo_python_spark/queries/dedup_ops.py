@@ -1,9 +1,8 @@
 """Deduplication queries over ``documents`` (see operators/dedup.py for
 the scale rationale). EVERY query here is oracle-gated as of round 4:
 the exact n-gram Jaccard family and ``dedup_minhash_verified`` carry
-hand-written DuckDB SQL, and the LSH/SimHash discovery queries run with
-``hash_fn="md5"`` (the SHIPPED DEFAULT since r5 — measured ~1.05× the
-crc32 opt-in fast path at sf0.1; both hash choices stay pytest-covered) so the signature,
+hand-written DuckDB SQL, and the LSH/SimHash discovery queries hash
+keys with md5 prefixes (the only key hash) so the signature,
 banding and pigeonhole pipelines are reproducible in SQL: the oracles
 below are GENERATED — 128 universal-hash min() aggregates, 32 band
 keys, and a 60-bit simhash tally — from the same ``hash_params`` LCG
@@ -28,7 +27,7 @@ from laygo_python_spark.session import read_table as _t
 
 def _minhash_sig_cte(num_hashes: int, seed: int = 42, doc_filter: str = "") -> str:
     """Shared oracle scaffolding: (doc_id, s0..s{H-1}) minhash slots over
-    3-gram shingles, md5-hashed exactly as ``_shingle_hasher('md5')``
+    3-gram shingles, md5-hashed exactly as ``_shingle_hasher``
     does — ``('0x'||substr(md5(g),1,8))::BIGINT % 2^31``. MATERIALIZED:
     DuckDB inlines CTEs by default, and the band unpivot below reads
     this 32 times."""
@@ -221,14 +220,14 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(128) + LSH(32 bands × 4 rows) candidate pairs on 3-gram
     shingles — the O(candidates) discovery path for near-dup detection
-    at 100 TB. md5 shingle hashing (~1.05× crc32, measured) makes the
+    at 100 TB. md5 shingle hashing makes the
     ENTIRE discovery output SQL-reproducible: the generated oracle
     recomputes all 128 signature slots and all 32 band keys per doc and
     counts matching bands per pair — signature dedup, banding, bucket
     grouping and member expansion are all hash-checked, not just
     pinned by pytest."""
     return dedup.minhash_lsh_candidates(
-        _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=128, bands=32, hash_fn="md5"
+        _t(spark, sf_dir, "documents"), shingle_n=3, num_hashes=128, bands=32
     )
 
 
@@ -236,14 +235,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs within Hamming distance 3, found via
     pigeonhole chunk banding (4-chunk equi-join, never O(n²)). The
-    md5-60 variant is registered (4×15-bit chunks) because a 60-bit
-    hash is SQL-reproducible in both engines; the oracle brute-forces
-    ALL-PAIRS Hamming distance, so the match also certifies pigeonhole
-    completeness — any pair the banding misses breaks the gate. The
-    64-bit crc32 production default stays pytest-covered."""
-    return dedup.simhash_near_dups(
-        _t(spark, sf_dir, "documents"), max_hamming=3, bits=60, hash_fn="md5"
-    )
+    md5-60 fingerprint (4×15-bit chunks) is SQL-reproducible in both
+    engines; the oracle brute-forces ALL-PAIRS Hamming distance, so the
+    match also certifies pigeonhole completeness — any pair the banding
+    misses breaks the gate."""
+    return dedup.simhash_near_dups(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
 @query(
@@ -294,9 +290,7 @@ def minhash_signature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exploded to scalar (doc_id, slot, value) rows: the driver's
     canonicalizer sorts the pandas frame across all columns, and raw
     array columns are unhashable there (r2's one red row)."""
-    sig = dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), num_hashes=8, hash_fn="md5"
-    )
+    sig = dedup.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8)
     return sig.filter(F.col("doc_id") < 20).select(
         "doc_id", F.posexplode(F.slice("sig", 1, 8)).alias("slot", "value")
     )
@@ -426,8 +420,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = dedup.minhash_index(seen, hash_fn="md5")
-    return dedup.minhash_match_incremental(new, idx, hash_fn="md5")
+    idx = dedup.minhash_index(seen)
+    return dedup.minhash_match_incremental(new, idx)
 
 
 @query(
@@ -585,7 +579,7 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmpl = _index_template(
         spark, sf_dir, "day1_mod3",
         lambda p: dedup.minhash_index_write(
-            dedup.minhash_index(docs.filter(F.col("doc_id") % 3 == 0), hash_fn="md5"), p
+            dedup.minhash_index(docs.filter(F.col("doc_id") % 3 == 0)), p
         ),
     )
     scratch = tempfile.mkdtemp(prefix="mh_idx_append_")
@@ -612,7 +606,7 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _mk_sig(tag: str, part) -> None:
             sig_box[tag] = pin(dedup.minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
-                prow["bands"], prow["seed"], prow["hash_fn"],
+                prow["bands"], prow["seed"],
             ))
 
         concurrent_actions(
@@ -649,7 +643,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmpl = _index_template(
         spark, sf_dir, "day1_mod3",
         lambda p: dedup.minhash_index_write(
-            dedup.minhash_index(docs.filter(F.col("doc_id") % 3 == 0), hash_fn="md5"), p
+            dedup.minhash_index(docs.filter(F.col("doc_id") % 3 == 0)), p
         ),
     )
     scratch = tempfile.mkdtemp(prefix="mh_idx_compact_")
@@ -668,7 +662,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _mk_sig(tag: str, part) -> None:
             sig_box[tag] = pin(dedup.minhash_sig_keys(
                 part, "doc_id", "text", prow["shingle_n"], prow["num_hashes"],
-                prow["bands"], prow["seed"], prow["hash_fn"],
+                prow["bands"], prow["seed"],
             ))
 
         concurrent_actions(
@@ -708,7 +702,7 @@ def dedup_simhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         day1 = docs.filter(F.col("doc_id") % 3 == 0)
         day2 = docs.filter(F.col("doc_id") % 3 == 1)
         probe = docs.filter(F.col("doc_id") % 3 == 2)
-        dedup.simhash_index_write(dedup.simhash_index(day1, bits=60, hash_fn="md5"), path)
+        dedup.simhash_index_write(dedup.simhash_index(day1), path)
         dedup.simhash_index_append(spark, path, day2, batch_id=1, stats=False)
         stored = dedup.simhash_index_read(spark, path)
         return pin(dedup.simhash_match_incremental(probe, stored))
@@ -854,7 +848,7 @@ def lsh_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _mk_cands() -> None:
         box["cands"] = dedup.minhash_lsh_candidates(
-            docs, shingle_n=3, num_hashes=128, bands=32, hash_fn="md5"
+            docs, shingle_n=3, num_hashes=128, bands=32
         )
 
     def _mk_truth() -> None:
@@ -1137,7 +1131,7 @@ def simhash_radius_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     box: dict = {}
 
     def _mk_pairs() -> None:
-        box["pairs"] = dedup.simhash_near_dups(docs, max_hamming=5, hash_fn="md5")
+        box["pairs"] = dedup.simhash_near_dups(docs, max_hamming=5)
 
     def _mk_truth() -> None:
         box["truth"] = pin(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from laygo_python_spark.functions import md5_long
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
 
@@ -145,10 +146,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     u = (
         1.0
-        + F.pmod(
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"),
-            F.lit(1000000),
-        )
+        + F.pmod(md5_long(F.col("doc_id").cast("string"), 8), F.lit(1000000))
     ) / 1000001.0
     keyed = docs.select(
         "doc_id",

@@ -172,11 +172,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 by estimate with user_id tiebreak so the output is deterministic
     however the error lands.
 
-    md5-probe variant registered (``hash_fn="md5"``) so the DuckDB
-    oracle recomputes the ENTIRE d×w counter matrix, every point
-    estimate, and the top-20 — sharded build, merge linearity and
-    estimate join are all hash-checked; the xxhash64 production default
-    stays pytest-covered."""
+    The md5 probes let the DuckDB oracle recompute the ENTIRE d×w
+    counter matrix, every point estimate, and the top-20 — sharded
+    build, merge linearity and estimate join are all hash-checked."""
     from laygo_python_spark.operators.cms import cms_build_sharded, cms_estimate, cms_merge
 
     ev = _t(spark, sf_dir, "events")
@@ -185,9 +183,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One scan builds ALL the daily sketches (shard = day); the merge
     # collapses the shard axis. Separate per-day cms_build calls would
     # rescan the table once per day.
-    daily = cms_build_sharded(in_days, "user_id", F.dayofmonth("ts"), d, w, hash_fn="md5")
+    daily = cms_build_sharded(in_days, "user_id", F.dayofmonth("ts"), d, w)
     merged = cms_merge(daily)
-    est = cms_estimate(merged, in_days.select("user_id").distinct(), "user_id", d, w, hash_fn="md5")
+    est = cms_estimate(merged, in_days.select("user_id").distinct(), "user_id", d, w)
     exact = in_days.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact"))
     return (
         est.join(exact, "user_id")
@@ -367,13 +365,13 @@ def hll_relational_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     days = [r["day"] for r in ev.select("day").distinct().orderBy("day").limit(3).collect()]
     sharded = pin(hll_build_sharded(
-        ev.filter(F.col("day").isin(days)), "user_id", shard="day", p=12, hash_fn="md5"
+        ev.filter(F.col("day").isin(days)), "user_id", shard="day", p=12
     ))
     per_day = hll_estimate_by(sharded, ["shard"]).select(
         F.col("shard").cast("string").alias("day"), F.round("est", 1).alias("est_distinct")
     )
     merged_regs = (
-        sharded.groupBy("idx", "p")
+        sharded.groupBy("idx", "p", "hash_fn")
         .agg(F.max("rho").alias("rho"))
         .withColumn("shard", F.lit("merged"))
     )
@@ -435,8 +433,8 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("l_shipdate").cast("string").alias("k"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    sk_o = cms_build(o, "k", d=4, w=8192, weight="n", hash_fn="md5")
-    sk_l = cms_build(li, "k", d=4, w=8192, weight="n", hash_fn="md5")
+    sk_o = cms_build(o, "k", d=4, w=8192, weight="n")
+    sk_l = cms_build(li, "k", d=4, w=8192, weight="n")
     est = cms_inner_product(sk_o, sk_l).select(F.col("est").alias("est_join_size"))
     exact = (
         o.join(li.withColumnRenamed("n", "nl"), "k")
@@ -510,8 +508,8 @@ def hll_key_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     b = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    ska = hll_build(a, "k", p=12, hash_fn="md5").withColumn("side", F.lit("a"))
-    skb = hll_build(b, "k", p=12, hash_fn="md5").withColumn("side", F.lit("b"))
+    ska = hll_build(a, "k", p=12).withColumn("side", F.lit("a"))
+    skb = hll_build(b, "k", p=12).withColumn("side", F.lit("b"))
     both = ska.unionByName(skb)
     merged = (
         both.groupBy("idx")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from laygo_python_spark.functions import md5_long
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
 
@@ -17,7 +18,7 @@ from laygo_python_spark.session import read_table as _t
 def hash_bucket(key: F.Column, buckets: int = 100) -> F.Column:
     """Stable bucket in [0, buckets) from the md5 of the key — identical
     in any engine with md5, independent of partitioning/run/engine."""
-    return F.pmod(F.conv(F.substring(F.md5(key.cast("string")), 1, 6), 16, 10).cast("long"), F.lit(buckets))
+    return F.pmod(md5_long(key.cast("string"), 6), F.lit(buckets))
 
 
 @query(

@@ -278,7 +278,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmpl = _index_template(
         spark, sf_dir, "seen_even",
         lambda p: dedup.minhash_index_write(
-            dedup.minhash_index(docs.filter(F.col("doc_id") % 2 == 0), hash_fn="md5"), p
+            dedup.minhash_index(docs.filter(F.col("doc_id") % 2 == 0)), p
         ),
     )
     scratch = tempfile.mkdtemp(prefix="stream_incdedup_")
@@ -695,7 +695,7 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch = tempfile.mkdtemp(prefix="stream_hll_")
     try:
         process = hll_summary_processor(
-            "user_id", "event_type", f"{scratch}/summaries", p=12, hash_fn="md5"
+            "user_id", "event_type", f"{scratch}/summaries", p=12
         )
         q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
         try:
@@ -703,7 +703,7 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
         partials = spark.read.parquet(f"{scratch}/summaries")
-        merged = partials.groupBy("shard", "idx", "p").agg(F.max("rho").alias("rho"))
+        merged = partials.groupBy("shard", "idx", "p", "hash_fn").agg(F.max("rho").alias("rho"))
         return pin(
             hll_estimate_by(merged, ["shard"])
             .select(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from laygo_python_spark.functions import md5_long
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
 
@@ -268,9 +269,7 @@ def rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     P, B = 2_147_483_647, 1_000_003
     toks = F.split(F.trim(F.col("text")), r"\s+")
-    md5_31 = lambda t: F.pmod(  # noqa: E731
-        F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"), F.lit(1 << 31)
-    )
+    md5_31 = lambda t: F.pmod(md5_long(t, 8), F.lit(1 << 31))  # noqa: E731
     h = F.aggregate(
         toks,
         F.lit(0).cast("long"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from laygo_python_spark.functions import md5_long
 from laygo_python_spark.queries import query
 from laygo_python_spark.session import read_table as _t
 
@@ -102,9 +103,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts xxhash64(gram) int64s instead — 26% faster at 200k docs
     and collisions only over-flag (tools/text_scale_smoke.py)."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10).cast("long"), F.lit(100)
-    )
+    bucket = F.pmod(md5_long(F.col("doc_id").cast("string"), 6), F.lit(100))
     grams = _grams(docs.withColumn("b", bucket), 3, "b")
     eval_grams = grams.filter(F.col("b") >= 90).select("g").distinct()
     return (

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from laygo_python_spark.functions import md5_long
 from laygo_python_spark.session import ensure_session_defaults, pin
 
 
@@ -171,7 +172,7 @@ def incremental_dedup_processor(
         # twice and pinned the raw batch rows a third time.
         sig = pin(dedup.minhash_sig_keys(
             new, "doc_id", "text",
-            p["shingle_n"], p["num_hashes"], p["bands"], p["seed"], p["hash_fn"],
+            p["shingle_n"], p["num_hashes"], p["bands"], p["seed"],
         ))
         # The sink write IS the materialization: the accepted-set
         # anti-join below reads the landed partition back instead of
@@ -280,9 +281,7 @@ def moments_summary_processor(value: str, keys: list[str], summary_path: str):
     return process
 
 
-def hll_summary_processor(
-    key: str, shard, summary_path: str, p: int = 12, hash_fn: str = "md5"
-):
+def hll_summary_processor(key: str, shard, summary_path: str, p: int = 12):
     """``foreachBatch`` body for streaming distinct-count monitoring:
     per micro-batch, reduce the batch to its per-shard HyperLogLog
     register table (operators/hll.hll_build_sharded — ≤ |shards|·2^p
@@ -296,7 +295,7 @@ def hll_summary_processor(
     from laygo_python_spark.operators.hll import hll_build_sharded
 
     def process(batch_df, batch_id: int) -> None:
-        hll_build_sharded(batch_df, key, shard, p=p, hash_fn=hash_fn).write.mode(
+        hll_build_sharded(batch_df, key, shard, p=p).write.mode(
             "overwrite"
         ).parquet(f"{summary_path}/batch_id={batch_id}")
 
@@ -322,17 +321,7 @@ def es_sample_summary_processor(
     id_col = keep_cols[0]
 
     def process(batch_df, batch_id: int) -> None:
-        import pyspark.sql.functions as F
-
-        u = (
-            1.0
-            + F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-                ).cast("long"),
-                F.lit(1000000),
-            )
-        ) / 1000001.0
+        u = (1.0 + F.pmod(md5_long(F.col(id_col).cast("string"), 8), F.lit(1000000))) / 1000001.0
         keyed = batch_df.filter(F.col(weight_col) > 0).select(
             *keep_cols, F.round(-F.log(u) / F.col(weight_col), 9).alias("es_key")
         )

@@ -33,7 +33,7 @@ def test_cms_never_undercounts(spark):
 
 def test_cms_exact_when_wide(spark):
     # w >> distinct keys → collision-free with overwhelming probability →
-    # estimates are exact (and deterministic: xxhash64 is seeded).
+    # estimates are exact (and deterministic: the md5 probes are fixed).
     data = [f"u{i % 20}" for i in range(1000)]
     df = _freq_table(spark, data)
     sk = cms_build(df, "k", d=4, w=4096)
@@ -89,7 +89,7 @@ def test_cms_estimate_reads_geometry_from_sketch(spark):
     # No (d, w) passed at estimate time: the sketch's own geometry is
     # used, so build/estimate can never disagree silently.
     df = _freq_table(spark, [f"u{i % 10}" for i in range(300)])
-    sk = cms_build(df, "k", d=5, w=2048)
+    sk = cms_build(df, "k", d=3, w=2048)
     est = cms_estimate(sk, df.select("k").distinct(), "k")
     exact = df.groupBy("k").agg(F.count(F.lit(1)).alias("exact"))
     assert all(r["est"] == r["exact"] for r in est.join(exact, "k").collect())
@@ -126,40 +126,17 @@ def test_cms_parquet_roundtrip(spark, tmp_path):
 
 
 def test_cms_hash_family_rides_in_sketch(spark):
-    """ADVICE r4: an md5-built sketch probed with the xxhash64 default
-    used to silently estimate near-zero. Now the family rides in the
-    sketch: estimate with no hash_fn resolves the stored family, an
-    explicit contradiction raises, and mixed-family merges raise."""
+    """The hash family rides in the sketch and md5 is the only one: a
+    sketch labelled xxhash64, or one without a hash_fn column (built
+    before the label existed), is rejected by estimate and merge."""
     df = _freq_table(spark, [f"u{i % 10}" for i in range(200)])
-    sk_md5 = cms_build(df, "k", d=3, w=1024, hash_fn="md5")
-    # default resolves to the stored md5 — never-undercount holds
-    est = cms_estimate(sk_md5, df.select("k").distinct(), "k")
-    exact = {r["k"]: r["n"] for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(r["est"] >= exact[r["k"]] for r in est.collect())
-    with pytest.raises(ValueError, match="hash_fn"):
-        cms_estimate(sk_md5, df.select("k").distinct(), "k", hash_fn="xxhash64")
-    sk_xx = cms_build(df, "k", d=3, w=1024, hash_fn="xxhash64")
-    with pytest.raises(ValueError, match="mixed"):
-        cms_merge(sk_md5, sk_xx)
-
-
-def test_cms_merge_pre_hash_fn_sketch_backcompat(spark):
-    # A sketch persisted before hash_fn rode in the table (simulated by
-    # dropping the column) merges under the documented then-default
-    # xxhash64 reading: geometry check passes AND the legacy counters
-    # actually combine with same-family ones (no parallel NULL-keyed
-    # counter set, no None-vs-str TypeError from the error formatter).
-    a = _freq_table(spark, ["x"] * 5 + ["y"] * 2)
-    b = _freq_table(spark, ["x"] * 3)
-    legacy = cms_build(a, "k", d=3, w=64).drop("hash_fn")
-    merged = cms_merge(legacy, cms_build(b, "k", d=3, w=64))
-    assert set(merged.select("hash_fn").distinct().toPandas()["hash_fn"]) == {"xxhash64"}
-    est = cms_estimate(merged, _freq_table(spark, ["x"]), "k").collect()[0]["est"]
-    assert est >= 8  # 5 + 3 actually summed, not split across NULL/xxhash64
-
-    # Genuinely mixed families still raise — with a readable message.
-    with pytest.raises(ValueError, match="mixed sketch geometries"):
-        cms_merge(cms_build(a, "k", d=3, w=64), cms_build(b, "k", d=3, w=64, hash_fn="md5"))
+    sk = cms_build(df, "k", d=3, w=1024)
+    assert [r["hash_fn"] for r in sk.select("hash_fn").distinct().collect()] == ["md5"]
+    for old in (sk.withColumn("hash_fn", F.lit("xxhash64")), sk.drop("hash_fn")):
+        with pytest.raises(ValueError, match="rebuild"):
+            cms_estimate(old, df.select("k").distinct(), "k")
+        with pytest.raises(ValueError, match="rebuild"):
+            cms_merge(sk, old)
 
 
 def test_inner_product_bounds_and_geometry(spark):
@@ -167,8 +144,8 @@ def test_inner_product_bounds_and_geometry(spark):
 
     a = spark.createDataFrame([(f"k{i % 7}",) for i in range(140)], "key string")
     b = spark.createDataFrame([(f"k{i % 5}",) for i in range(50)], "key string")
-    sa = cms_build(a, "key", d=4, w=4096, hash_fn="md5")
-    sb = cms_build(b, "key", d=4, w=4096, hash_fn="md5")
+    sa = cms_build(a, "key", d=4, w=4096)
+    sb = cms_build(b, "key", d=4, w=4096)
     est = cms_inner_product(sa, sb).collect()[0]["est"]
     # exact: keys k0..k4 shared, 20 per key in a, 10 per key in b
     exact = 5 * 20 * 10
@@ -177,7 +154,7 @@ def test_inner_product_bounds_and_geometry(spark):
 
     import pytest as _pytest
 
-    sc = cms_build(b, "key", d=4, w=8192, hash_fn="md5")
+    sc = cms_build(b, "key", d=4, w=8192)
     with _pytest.raises(ValueError, match="incompatible sketch geometries"):
         cms_inner_product(sa, sc)
 
@@ -187,8 +164,8 @@ def test_inner_product_disjoint_keys_near_zero(spark):
 
     a = spark.createDataFrame([(f"a{i}",) for i in range(50)], "key string")
     b = spark.createDataFrame([(f"b{i}",) for i in range(50)], "key string")
-    sa = cms_build(a, "key", d=4, w=8192, hash_fn="md5")
-    sb = cms_build(b, "key", d=4, w=8192, hash_fn="md5")
+    sa = cms_build(a, "key", d=4, w=8192)
+    sb = cms_build(b, "key", d=4, w=8192)
     est = cms_inner_product(sa, sb).collect()[0]["est"]
     # true inner product is 0; only hash collisions contribute
     assert 0 <= est <= 5
@@ -204,7 +181,7 @@ def test_inner_product_accumulates_past_int64(spark):
 
     big = 1 << 33
     df = spark.createDataFrame([("k", big)], "key string, n long")
-    sk = cms_build(df, "key", d=2, w=64, weight="n", hash_fn="md5")
+    sk = cms_build(df, "key", d=2, w=64, weight="n")
     # est bigint would overflow -> the decimal path must raise loudly on
     # the final contract cast rather than wrap silently.
     import pyspark.errors
@@ -219,7 +196,7 @@ def test_inner_product_decimal_matches_small_values(spark):
 
     a = spark.createDataFrame([("x",), ("x",), ("y",)], "key string")
     b = spark.createDataFrame([("x",), ("y",), ("y",)], "key string")
-    sa = cms_build(a, "key", d=4, w=4096, hash_fn="md5")
-    sb = cms_build(b, "key", d=4, w=4096, hash_fn="md5")
+    sa = cms_build(a, "key", d=4, w=4096)
+    sb = cms_build(b, "key", d=4, w=4096)
     # wide sketch, no collisions: estimate == exact inner product 2*1 + 1*2 = 4
     assert cms_inner_product(sa, sb).collect()[0]["est"] == 4

@@ -132,11 +132,9 @@ def test_minhash_partitioning_invariance(planted):
 
 
 def test_simhash_rejects_untileable_hamming(planted):
-    # 7 chunks don't tile 60 bits (default) — and 5 don't tile 64
+    # 7 chunks don't tile the 60 fingerprint bits
     with pytest.raises(ValueError):
         dedup.simhash_near_dups(planted, max_hamming=6)
-    with pytest.raises(ValueError):
-        dedup.simhash_near_dups(planted, max_hamming=4, bits=64, hash_fn="crc32")
 
 
 def test_shingles_short_doc(spark):
@@ -316,26 +314,6 @@ def test_simhash_compose_zero_jobs_with_hint(spark, planted):
     assert pairs.get((1, 2)) == 0
 
 
-def test_crc32_hash_paths_match_md5_structure(spark, planted):
-    """Defaults flipped in r5: md5 (the oracle-proven family) is now
-    what a no-args caller gets, and crc32 is the opt-in fast path —
-    this test keeps the crc32 VARIANT honest by pinning the same
-    planted structure the md5 default finds: exact dups at full band
-    agreement / hamming 0, unrelated docs unpaired."""
-    lsh = {
-        (r.doc_id_a, r.doc_id_b): r.n_bands
-        for r in dedup.minhash_lsh_candidates(planted, shingle_n=3, hash_fn="crc32").collect()
-    }
-    assert lsh.get((1, 2)) == 32
-    assert (4, 5) not in lsh
-    sim = {
-        (r.doc_id_a, r.doc_id_b): r.hamming
-        for r in dedup.simhash_near_dups(planted, bits=64, hash_fn="crc32").collect()
-    }
-    assert sim.get((1, 2)) == 0
-    assert (4, 5) not in sim
-
-
 def test_lsh_and_simhash_oracle_cap_semantics_differential(spark):
     """The generated DuckDB oracles replicate the max_bucket skew guard
     — differential check ON A CORPUS THAT TRIPS THE CAP (the standard
@@ -360,7 +338,7 @@ def test_lsh_and_simhash_oracle_cap_semantics_differential(spark):
     got = sorted(
         (r.doc_id_a, r.doc_id_b, r.n_bands)
         for r in dedup.minhash_lsh_candidates(
-            docs, shingle_n=3, num_hashes=128, bands=32, max_bucket=2, hash_fn="md5"
+            docs, shingle_n=3, num_hashes=128, bands=32, max_bucket=2
         ).collect()
     )
     want = sorted(map(tuple, con.execute(_minhash_lsh_oracle(max_bucket=2)).fetchall()))
@@ -371,7 +349,7 @@ def test_lsh_and_simhash_oracle_cap_semantics_differential(spark):
     got_sh = sorted(
         (r.doc_id_a, r.doc_id_b, r.hamming)
         for r in dedup.simhash_near_dups(
-            docs, max_hamming=3, bits=60, hash_fn="md5", max_bucket=1
+            docs, max_hamming=3, max_bucket=1
         ).collect()
     )
     want_sh = sorted(map(tuple, con.execute(_simhash_oracle(max_bucket=1)).fetchall()))
@@ -758,7 +736,7 @@ def test_simhash_radius_tuning_monotone_and_consistent(spark, sf_dir):
     # simhash_near_dups run at the same parameters — the curve measures
     # the real discovery path
     docs = read_table(spark, sf_dir, "documents").filter("doc_id % 2 = 0")
-    direct = dedup.simhash_near_dups(docs, max_hamming=5, hash_fn="md5").count()
+    direct = dedup.simhash_near_dups(docs, max_hamming=5).count()
     assert rows[5].n_candidates == direct
 
 

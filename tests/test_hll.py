@@ -132,33 +132,20 @@ def test_empty_sketch_estimates_zero_and_merges_as_identity(spark):
 
 
 def test_hll_hash_family_rides_in_register_table(spark):
-    """ADVICE r4: xxhash64 and md5-60 register tables overlap enough in
-    rho range to merge undetected; the family now rides in the table and
-    mixed-family merges raise."""
-    a = hll_build(_keys(spark, 0, 1000), "k", p=10, hash_fn="xxhash64")
-    b = hll_build(_keys(spark, 500, 1500), "k", p=10, hash_fn="md5")
-    with pytest.raises(ValueError, match="hash famil"):
-        hll_merge(a, b)
-    # same-family merge still bit-identical to whole-build
-    c = hll_build(_keys(spark, 500, 1500), "k", p=10, hash_fn="xxhash64")
+    """The hash family rides in the register table and md5 is the only
+    one: a table labelled xxhash64, or one without a hash_fn column,
+    is rejected by merge and estimate; md5 merges stay bit-identical
+    to a whole build."""
+    a = hll_build(_keys(spark, 0, 1000), "k", p=10)
+    for old in (a.withColumn("hash_fn", F.lit("xxhash64")), a.drop("hash_fn")):
+        with pytest.raises(ValueError, match="rebuild"):
+            hll_merge(a, old)
+        with pytest.raises(ValueError, match="rebuild"):
+            hll_estimate(old)
+    c = hll_build(_keys(spark, 500, 1500), "k", p=10)
     merged = hll_merge(a, c)
-    whole = hll_build(_keys(spark, 0, 1500), "k", p=10, hash_fn="xxhash64")
+    whole = hll_build(_keys(spark, 0, 1500), "k", p=10)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
-
-
-def test_hll_merge_pre_hash_fn_sketch_backcompat(spark):
-    # Legacy register table (no hash_fn column) merges under the
-    # documented xxhash64 default: registers max-combine with the new
-    # sketch's rather than surviving as a parallel NULL-keyed set, and
-    # the estimate matches a single build over the unioned keys.
-    a, b = _keys(spark, 0, 300), _keys(spark, 150, 450)
-    legacy = hll_build(a, "k", p=10).drop("hash_fn")
-    merged = hll_merge(legacy, hll_build(b, "k", p=10))
-    whole = hll_build(a.unionByName(b), "k", p=10)
-    assert abs(hll_estimate(merged) - hll_estimate(whole)) < 1e-9
-    # Mixed genuine families still raise, None-safely formatted.
-    with pytest.raises(ValueError, match="mixed HLL hash families"):
-        hll_merge(legacy, hll_build(b, "k", p=10, hash_fn="md5"))
 
 
 def test_key_overlap_inclusion_exclusion(spark):
@@ -170,8 +157,8 @@ def test_key_overlap_inclusion_exclusion(spark):
 
     a = spark.range(0, 3000).select(F.col("id").alias("k"))        # 0..2999
     b = spark.range(2000, 6000).select(F.col("id").alias("k"))     # 2000..5999
-    ska = hll_build(a, "k", p=12, hash_fn="md5").withColumn("side", F.lit("a"))
-    skb = hll_build(b, "k", p=12, hash_fn="md5").withColumn("side", F.lit("b"))
+    ska = hll_build(a, "k", p=12).withColumn("side", F.lit("a"))
+    skb = hll_build(b, "k", p=12).withColumn("side", F.lit("b"))
     both = ska.unionByName(skb)
     merged = (
         both.groupBy("idx")

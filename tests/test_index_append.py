@@ -54,6 +54,14 @@ def test_minhash_append_equals_rebuild(spark, tmp_path):
     assert stats["applied"] and stats["membership"] == 38
     rebuilt = dedup.minhash_index(day1.unionByName(day2), num_hashes=16, bands=4)
     _assert_minhash_index_equal(dedup.minhash_index_read(spark, path), rebuilt)
+    # A params row labelled with another hash family (an index from an
+    # older release): append and opening it for a match both refuse.
+    row = artifact.read_params(spark, path, "minhash")
+    artifact.write_params(spark, path, "minhash", {**row, "hash_fn": "crc32"})
+    with pytest.raises(ValueError, match="rebuild"):
+        dedup.minhash_index_append(spark, path, day2)
+    with pytest.raises(ValueError, match="rebuild"):
+        dedup.minhash_match_incremental(day2, dedup.minhash_index_read(spark, path))
 
 
 def test_minhash_append_cap_crossing_on_touched_bucket(spark, tmp_path):
@@ -174,7 +182,7 @@ def test_simhash_append_caps_bucket_of_artifact_without_max_bucket(spark, tmp_pa
 
     path = str(tmp_path / "idx")
     doc = _docs(spark, [(9000, "one new document lands in the crowded chunk bucket")])
-    sh = dedup.simhash_fingerprints(doc, "doc_id", "text", 60, "md5").first()["sh"]
+    sh = dedup.simhash_fingerprints(doc, "doc_id", "text").first()["sh"]
     chunk_bits = 60 // 4
     low = sh & ((1 << chunk_bits) - 1)
     assert not 1 <= sh >> chunk_bits <= 2000  # the doc's fingerprint is new
@@ -238,7 +246,7 @@ def test_stream_ingest_appends_accepted(spark, tmp_path):
     seen = _docs(spark, seen_rows)
     idx_dir = str(tmp_path / "idx")
     dedup.minhash_index_write(
-        dedup.minhash_index(seen, num_hashes=16, bands=4, hash_fn="md5"), idx_dir
+        dedup.minhash_index(seen, num_hashes=16, bands=4), idx_dir
     )
 
     # three stream files: each has 4 unique (accepted) docs + 1 dup of a
@@ -280,7 +288,7 @@ def test_stream_ingest_appends_accepted(spark, tmp_path):
     ]
     accepted_rows = [r for rows in batches for r in rows if r[0] < 9000]
     rebuilt = dedup.minhash_index(
-        seen.unionByName(_docs(spark, accepted_rows)), num_hashes=16, bands=4, hash_fn="md5"
+        seen.unionByName(_docs(spark, accepted_rows)), num_hashes=16, bands=4
     )
     _assert_minhash_index_equal(dedup.minhash_index_read(spark, idx_dir), rebuilt)
 

@@ -83,6 +83,24 @@ def test_consume(spark):
     assert result is None
 
 
+def test_consume_failure_raises_after_one_job(spark):
+    """A failing pipeline fails its one noop write; it is not run a
+    second time through another action."""
+    import pytest
+
+    def boom(x):
+        raise RuntimeError("row down")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("consume_fails_once", "consume a failing map_rows")
+    try:
+        with pytest.raises(Exception, match="row down"):
+            Pipeline([1, 2, 3], spark=spark).apply(Transformer().map_rows(boom)).consume()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("consume_fails_once")) == 1
+
+
 def test_count(spark):
     n, _ = Pipeline(range(42), spark=spark).count()
     assert n == 42
@@ -204,14 +222,19 @@ def test_branch_failure_isolation(spark):
     def explode_batch(pdf):
         raise RuntimeError("branch down")
 
-    results, _ = Pipeline([1, 2], spark=spark).branch(
+    from pyspark import StorageLevel
+
+    p = Pipeline([1, 2], spark=spark)
+    results, _ = p.branch(
         {
             "ok": Transformer().map(value=F.col("value") + 1),
             "bad": Transformer().map_batches(explode_batch),
+            "unresolved": Transformer().select("missing"),  # fails at analysis
         }
     )
     assert sorted(results["ok"]) == [2, 3]
-    assert results["bad"] == []
+    assert results["bad"] == [] and results["unresolved"] == []
+    assert p.df.storageLevel == StorageLevel.NONE  # the source was released
 
 
 def test_branch_python_predicate(spark):
@@ -294,15 +317,18 @@ def test_branch_router_rejects_mixed_condition_kinds(spark):
     """first_match exclusivity cannot compose across the Column/Python
     boundary — mixing kinds must fail loudly, not silently duplicate."""
     import pytest
+    from pyspark import StorageLevel
 
+    p = Pipeline([1, 2], spark=spark)
     with pytest.raises(ValueError, match="cannot mix"):
-        Pipeline([1, 2], spark=spark).branch(
+        p.branch(
             {
                 "a": (F.col("value") > 1, Transformer()),
                 "b": (lambda x: x < 2, Transformer()),
             },
             first_match=True,
         )
+    assert p.df.storageLevel == StorageLevel.NONE
 
 
 def test_branch_broadcast_python_conditions_not_exclusive(spark):

@@ -340,8 +340,8 @@ def test_cms_inner_product_one_sided_and_bounded(spark, ka, kb, parts):
 
     a = spark.createDataFrame([(f"k{v}",) for v in ka], "key string").repartition(parts)
     b = spark.createDataFrame([(f"k{v}",) for v in kb], "key string").repartition(parts)
-    sa = cms_build(a, "key", d=4, w=2048, hash_fn="md5")
-    sb = cms_build(b, "key", d=4, w=2048, hash_fn="md5")
+    sa = cms_build(a, "key", d=4, w=2048)
+    sb = cms_build(b, "key", d=4, w=2048)
     est = cms_inner_product(sa, sb).collect()[0]["est"]
     from collections import Counter
 

@@ -347,7 +347,7 @@ def test_stream_hll_multibatch_equals_single_pass(spark, tmp_path):
         )
         q = (
             stream.writeStream.foreachBatch(
-                hll_summary_processor("user_id", "event_type", summaries, p=12, hash_fn="md5")
+                hll_summary_processor("user_id", "event_type", summaries, p=12)
             )
             .trigger(availableNow=True)
             .start()
@@ -355,7 +355,7 @@ def test_stream_hll_multibatch_equals_single_pass(spark, tmp_path):
         q.awaitTermination()
         merged = (
             spark.read.parquet(summaries)
-            .groupBy("shard", "idx", "p")
+            .groupBy("shard", "idx", "p", "hash_fn")
             .agg(F.max("rho").alias("rho"))
         )
         results[tag] = {
@@ -366,7 +366,7 @@ def test_stream_hll_multibatch_equals_single_pass(spark, tmp_path):
     one_pass = {
         r["shard"]: round(r["est"], 6)
         for r in hll_estimate_by(
-            hll_build_sharded(df, "user_id", "event_type", p=12, hash_fn="md5"),
+            hll_build_sharded(df, "user_id", "event_type", p=12),
             ["shard"],
         ).collect()
     }
@@ -443,13 +443,13 @@ def test_stream_hll_replayed_batch_overwrites_partition(spark, tmp_path):
     rows = [(i, f"t{i % 3}", (i * 13) % 97) for i in range(500)]
     df = spark.createDataFrame(rows, "event_id long, event_type string, user_id long")
     summaries = str(tmp_path / "s")
-    process = hll_summary_processor("user_id", "event_type", summaries, p=12, hash_fn="md5")
+    process = hll_summary_processor("user_id", "event_type", summaries, p=12)
     process(df, 0)
 
     def fold():
         merged = (
             spark.read.parquet(summaries)
-            .groupBy("shard", "idx", "p")
+            .groupBy("shard", "idx", "p", "hash_fn")
             .agg(F.max("rho").alias("rho"))
         )
         return sorted(

@@ -88,12 +88,8 @@ def main() -> None:
     spark = get_spark("index_append_smoke")
     path = tempfile.mkdtemp(prefix="idx_append_smoke_")
     try:
-        # crc32 fast path: the smoke measures the scaling shape, and at
-        # 10^7 docs the hash family only scales the constant (~1.05×).
         t0 = time.perf_counter()
-        minhash_index_write(
-            minhash_index(synth_docs(spark, 0, n_seen), hash_fn="crc32"), path
-        )
+        minhash_index_write(minhash_index(synth_docs(spark, 0, n_seen)), path)
         build_wall = time.perf_counter() - t0
         size_after_build = du(path)
 
