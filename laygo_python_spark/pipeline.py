@@ -20,7 +20,8 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from laygo_python_spark.context import Context
-from laygo_python_spark.transformer import Transformer, _as_condition, is_context_aware
+from laygo_python_spark.transformer import MIXED_SCHEMA, ORDER_COL, Transformer, encode_mixed
+from laygo_python_spark.transformer import _as_condition, _Codec, _with_ctx, _worker_ctx
 
 
 def _coerce_source(spark: SparkSession, source: Any, allow_mixed: bool = False) -> DataFrame:
@@ -42,8 +43,6 @@ def _coerce_source(spark: SparkSession, source: Any, allow_mixed: bool = False) 
     # dict records with inconsistent schemas must not fall into the
     # Row(**d) schema-merge path below.
     if allow_mixed:
-        from laygo_python_spark.transformer import MIXED_SCHEMA, encode_mixed
-
         return spark.createDataFrame([encode_mixed(x) for x in items], MIXED_SCHEMA)
     if isinstance(items[0], dict):
         return spark.createDataFrame([Row(**d) for d in items])
@@ -69,47 +68,10 @@ def _coerce_source(spark: SparkSession, source: Any, allow_mixed: bool = False) 
 
 def _exclusive_pred(cond: Callable, earlier: tuple[Callable, ...]) -> Callable:
     """First-match router predicate for Python conditions: matches
-    ``cond`` AND no earlier branch's condition. Preserves context-arity
-    (a 2-arg condition receives the worker ctx, like filter_rows)."""
-    infos = [(f, is_context_aware(f)) for f in (cond, *earlier)]
-    any_ctx = any(a for _, a in infos)
-
-    def run(row: Any, ctx: Any = None) -> bool:
-        (c, c_aware), *rest = infos
-        if not (c(row, ctx) if c_aware else c(row)):
-            return False
-        return not any((f(row, ctx) if aware else f(row)) for f, aware in rest)
-
-    if any_ctx:
-        return lambda row, ctx: run(row, ctx)
-    return lambda row: run(row)
-
-
-def _rows_to_python(rows: list[Row], columns: list[str]) -> list[Any]:
-    """Single ``value`` column → bare scalars (laygo element parity);
-    tagged-union frames → decoded Python values; otherwise dict records.
-    The source-order id (ORDER_COL) is internal — always stripped."""
-    extract = _item_extractor(columns)
-    return [extract(r) for r in rows]
-
-
-def _item_extractor(columns: list[str]) -> Callable[[Row], Any]:
-    """Per-row element extractor: single ``value`` column → bare scalar,
-    tagged-union frame → decoded Python value, otherwise dict record —
-    for to_list and the streaming paths (each/__iter__/reduce). The
-    source-order id (ORDER_COL) is internal and never reaches elements."""
-    from laygo_python_spark.transformer import MIXED_COLS, ORDER_COL, decode_mixed
-
-    data_cols = [c for c in columns if c != ORDER_COL]
-    if data_cols == MIXED_COLS:
-        ti, vi = columns.index("__tag"), columns.index("__v")
-        return lambda r: decode_mixed(r[ti], r[vi])
-    if data_cols == ["value"]:
-        vi = columns.index("value")
-        return lambda r: r[vi]
-    return lambda r: {
-        k: v for k, v in r.asDict(recursive=True).items() if k != ORDER_COL
-    }
+    ``cond`` AND no earlier branch's condition. A 2-arg condition
+    receives the worker ctx, like filter_rows."""
+    (first, _), *rest = [_with_ctx(f) for f in (cond, *earlier)]
+    return lambda row, ctx: first(row, ctx) and not any(f(row, ctx) for f, _ in rest)
 
 
 class Pipeline:
@@ -143,8 +105,6 @@ class Pipeline:
         # here until the terminal sort, and narrow plans never lose
         # order anyway — the id protects across repartition/coalesce.
         if ordered:
-            from laygo_python_spark.transformer import ORDER_COL
-
             self.df = self.df.withColumn(ORDER_COL, F.monotonically_increasing_id())
         if isinstance(context, Context):
             self._context = context
@@ -238,8 +198,6 @@ class Pipeline:
         cols = self.df.columns
         rows = self.df.collect()
         if ordered:
-            from laygo_python_spark.transformer import ORDER_COL
-
             if ORDER_COL not in cols:
                 raise ValueError(
                     "to_list(ordered=True) needs the source-order id: construct the "
@@ -247,7 +205,7 @@ class Pipeline:
                 )
             idx = cols.index(ORDER_COL)
             rows = sorted(rows, key=lambda r: r[idx])
-        return _rows_to_python(rows, cols), self._snapshot()
+        return list(_Codec(self.df.schema).rows(rows)), self._snapshot()
 
     def first(self, n: int = 1) -> tuple[list[Any], dict]:
         """Take first n (reference: laygo/pipeline.py:321-344; the
@@ -255,22 +213,18 @@ class Pipeline:
         re-usable instead). Spark plans a CollectLimit: upstream work
         beyond n partitions is not executed."""
         rows = self.df.limit(n).collect()
-        return _rows_to_python(rows, self.df.columns), self._snapshot()
+        return list(_Codec(self.df.schema).rows(rows)), self._snapshot()
 
     def each(self, fn: Callable) -> tuple[None, dict]:
         """Apply a side-effect per element, discard results
         (reference: laygo/pipeline.py:297-319)."""
-        cols = self.df.columns
-        ctx_aware = is_context_aware(fn)
-        from laygo_python_spark.transformer import _worker_ctx
-
-        wctx = _worker_ctx(self._context) if ctx_aware else None
-        extract = _item_extractor(cols)
+        fn, aware = _with_ctx(fn)
+        wctx = _worker_ctx(self._context, aware)
+        codec = _Codec(self.df.schema)
 
         def run_partition(rows: Iterator[Row]) -> None:
-            for r in rows:
-                item = extract(r)
-                fn(item, wctx) if ctx_aware else fn(item)
+            for x in codec.rows(rows):
+                fn(x, wctx)
 
         self.df.foreachPartition(run_partition)
         return None, self._snapshot()
@@ -296,20 +250,17 @@ class Pipeline:
         sequential for non-associative ``fn`` — exactly what the reference
         does, just with Spark streaming partitions to the driver one at a
         time. Rewrite to ``Transformer.agg`` for anything associative."""
-        extract = _item_extractor(self.df.columns)
-        ctx_aware = is_context_aware(fn, threshold=2)
+        fn, _ = _with_ctx(fn, threshold=2)
         acc = initial
         snap = dict(self._context.to_dict())
-        for r in self.df.toLocalIterator():
-            acc = fn(acc, extract(r), snap) if ctx_aware else fn(acc, extract(r))
+        for x in _Codec(self.df.schema).rows(self.df.toLocalIterator()):
+            acc = fn(acc, x, snap)
         return acc, self._snapshot()
 
     def __iter__(self) -> Iterator[Any]:
         """Stream results to the driver one partition at a time
         (reference: laygo/pipeline.py:264-278 → toLocalIterator)."""
-        extract = _item_extractor(self.df.columns)
-        for r in self.df.toLocalIterator():
-            yield extract(r)
+        yield from _Codec(self.df.schema).rows(self.df.toLocalIterator())
 
     def iter_unordered(self, max_workers: int = 4) -> Iterator[Any]:
         """Stream results in partition-COMPLETION order — the reference's
@@ -328,7 +279,7 @@ class Pipeline:
         import uuid
         from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-        extract = _item_extractor(self.df.columns)
+        codec = _Codec(self.df.schema)
         rdd = self.df.rdd
         sc = self.df.sparkSession.sparkContext
         n = rdd.getNumPartitions()
@@ -355,8 +306,7 @@ class Pipeline:
                     if nxt < n:
                         pending.add(ex.submit(fetch, nxt))
                         nxt += 1
-                    for r in rows:
-                        yield extract(r)
+                    yield from codec.rows(rows)
         finally:
             # Abandoned mid-stream (consumer break / error): drop the tail
             # instead of scheduling OR finishing it — reference
@@ -451,7 +401,7 @@ class Pipeline:
             try:
                 base = route(cached)
                 d = t(base, self._context) if isinstance(t, Transformer) else t(base)
-                return name, _rows_to_python(d.collect(), d.columns)
+                return name, list(_Codec(d.schema).rows(d.collect()))
             except Exception:  # noqa: BLE001 — branch isolation (pipeline.py:613-618)
                 return name, []
 

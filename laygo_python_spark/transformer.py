@@ -7,34 +7,45 @@ a list of plan-building steps over a DataFrame; Catalyst's whole-stage
 codegen performs the operator fusion that laygo's closure composition
 hand-rolled (SURVEY.md §4).
 
-Fast path vs slow path (decided at *build* time, mirroring laygo's
-build-time arity dispatch, laygo/helpers.py:28-41):
+Fast path vs slow path (decided at *build* time):
 
 - Column expressions / SQL strings compile to native Catalyst operators —
   predicate pushdown, column pruning and codegen apply.
 - Arbitrary Python goes through Arrow-batched ``mapInPandas``
   (the closest match to laygo's ``(list[T], ctx) -> list[U]`` chunk
   contract, SURVEY.md §2.12) — never row-at-a-time Python UDFs.
+
+Each Python stage is a ``_Stage`` record run by one ``mapInPandas``
+helper; catch/tap/loop_chunks fuse sub-Transformers from those records.
+A user callable's context arity is worked out once, where its stage is
+built (``_with_ctx``, as laygo/helpers.py:28-41). Row stages and every
+``Pipeline`` terminal see elements through one codec, ``_Codec``.
 """
 
 from __future__ import annotations
 
+import functools
 import inspect
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from dataclasses import dataclass
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructType
 
 from laygo_python_spark.context import Context
 from laygo_python_spark.errors import ErrorHandler, PipelineAbortError
-from laygo_python_spark.session import pin
+from laygo_python_spark.session import pin, release
 
 # A step takes (df, worker_ctx_dict_or_None) and returns a DataFrame.
 Step = Callable[[DataFrame, dict | None], DataFrame]
 
 DEFAULT_MAX_LOOP_ITERATIONS = 100
+# Transformer.loop pins its frame every this many iterations, so the plan
+# does not grow without bound (SURVEY.md §7.4.3).
+LOOP_PIN_EVERY = 10
 
 
 def is_context_aware(fn: Callable, threshold: int = 1) -> bool:
@@ -54,6 +65,15 @@ def is_context_aware(fn: Callable, threshold: int = 1) -> bool:
         return False
 
 
+def _with_ctx(fn: Callable, threshold: int = 1) -> tuple[Callable, bool]:
+    """``fn`` as a callable that always takes the context last, and
+    whether ``fn`` itself reads it (only then does its stage snapshot
+    the context)."""
+    if is_context_aware(fn, threshold):
+        return fn, True
+    return (lambda *args: fn(*args[:-1])), False
+
+
 def _as_condition(cond: Column | str) -> Column:
     return F.expr(cond) if isinstance(cond, str) else cond
 
@@ -65,14 +85,11 @@ def _as_condition(cond: Column | str) -> Column:
 # get an explicit variant encoding instead of silent stringification.
 # Scalars carry their repr; dicts/lists carry JSON (when it round-trips
 # exactly); anything else carries base64(pickle).
-# map_rows/filter_rows decode to real Python values (the element
-# convention), and terminal ops decode back, so lambdas never see tags.
 MIXED_COLS = ["__tag", "__v"]
 MIXED_SCHEMA = "__tag string, __v string"
 
 # Source-order id column, attached by Pipeline(..., ordered=True) and
-# consumed by Pipeline.to_list(ordered=True). Row-path operators strip
-# it before applying the element convention and carry it through.
+# consumed by Pipeline.to_list(ordered=True).
 ORDER_COL = "__seq"
 
 
@@ -135,19 +152,198 @@ def decode_mixed(tag: str, v: str | None) -> Any:
     return v
 
 
-def _worker_ctx(context: Context | None) -> dict[str, Any]:
-    """Snapshot the context for executor-side closures.
+def _worker_ctx(context: Context | None, aware: bool = True) -> dict[str, Any] | None:
+    """Snapshot the context for executor-side closures; None for a
+    stage whose callable does not read it.
 
     Plain values are read-only copies (broadcast-style); registered
     accumulators pass through so ``ctx["n"] += 1`` works in workers
     (parity with laygo/context/parallel.py:71-92 lock-protected writes —
     accumulators are race-free without the lock).
     """
+    if not aware:
+        return None
     if context is None:
         return {}
     snap = dict(context._data)
     snap.update(context._accumulators)
     return snap
+
+
+class _Codec:
+    """The element convention: how a frame's columns become laygo
+    elements and back. Python stages decode their pandas batches here
+    and ``Pipeline`` terminals their Rows, so both see the same elements:
+
+    - a lone ``value`` column gives bare scalars;
+    - the ``allow_mixed`` tagged union gives its decoded values;
+    - any other frame gives dicts;
+    - the order id is never part of an element;
+    - NULL is None and an integral column gives int. pandas turns an
+      integral column that holds a NULL into floats, so a batch decodes
+      against the frame's Spark schema. In a float column pandas cannot
+      tell NaN from NULL: a Python stage sees both as None.
+    """
+
+    def __init__(self, schema: StructType):
+        self.columns = schema.names
+        self.integral = {f.name for f in schema.fields if isinstance(f.dataType, IntegralType)}
+
+    @staticmethod
+    def _kind(names: list[str]) -> str:
+        return "mixed" if names == MIXED_COLS else "value" if names == ["value"] else "dict"
+
+    @staticmethod
+    def _elements(kind: str, names: list[str], values: Iterable[Sequence]) -> Iterator[Any]:
+        if kind == "mixed":
+            return (decode_mixed(t, v) for t, v in values)
+        if kind == "value":
+            return (v for (v,) in values)
+        return (dict(zip(names, vals)) for vals in values)
+
+    @staticmethod
+    def _column(s: pd.Series, integral: bool) -> list:
+        values = s.tolist()
+        if integral and s.dtype.kind == "f":
+            return [None if v != v else int(v) for v in values]
+        if s.dtype.kind in "fmM" and s.hasnans:
+            return [None if v != v else v for v in values]
+        return values
+
+    def decode(self, pdf: pd.DataFrame, records: bool = False) -> list[Any]:
+        """A pandas batch to its elements; ``records`` gives dicts
+        whatever the frame's shape."""
+        names = [c for c in pdf.columns if c != ORDER_COL]
+        cols = [self._column(pdf[c], c in self.integral) for c in names]
+        values = zip(*cols) if cols else [()] * len(pdf)
+        return list(self._elements("dict" if records else self._kind(names), names, values))
+
+    def rows(self, rows: Iterable[Row]) -> Iterator[Any]:
+        """Collected or streamed Rows to their elements, lazily."""
+        names = [c for c in self.columns if c != ORDER_COL]
+        kind = self._kind(names)
+        if kind == "dict":  # asDict also turns nested Rows into dicts
+            values = ([d[c] for c in names] for d in (r.asDict(recursive=True) for r in rows))
+        else:
+            idx = [self.columns.index(c) for c in names]
+            values = ([r[i] for i in idx] for r in rows)
+        return self._elements(kind, names, values)
+
+    @staticmethod
+    def encode(out: list[Any], pdf: pd.DataFrame) -> pd.DataFrame:
+        """``map_rows`` results for batch ``pdf`` back to a frame: a
+        tagged-union input re-encodes, other non-dict results fill a
+        ``value`` column, and ``pdf``'s order id rides along."""
+        if _Codec._kind([c for c in pdf.columns if c != ORDER_COL]) == "mixed":
+            res = pd.DataFrame([encode_mixed(o) for o in out], columns=MIXED_COLS)
+        elif out and not isinstance(out[0], dict):
+            res = pd.DataFrame({"value": out})
+        else:
+            res = pd.DataFrame(out)
+        if ORDER_COL in pdf.columns:
+            res[ORDER_COL] = pdf[ORDER_COL].tolist()
+        return res
+
+
+def _rechunk_frames(batches: Iterable[pd.DataFrame], size: int) -> Iterator[pd.DataFrame]:
+    """Re-cut a stream of pandas batches to ``size`` rows each (tail excepted)."""
+    buf: list[pd.DataFrame] = []
+    have = 0
+    for pdf in batches:
+        buf.append(pdf)
+        have += len(pdf)
+        while have >= size:
+            cat = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+            yield cat.iloc[:size]
+            rest = cat.iloc[size:]
+            buf, have = ([rest], len(rest)) if len(rest) else ([], 0)
+    if have:
+        yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+
+
+def _rechunk_arrow(batches: Iterable, size: int) -> Iterator:
+    """Re-slice a stream of Arrow record batches to ``size`` rows each
+    (tail excepted), zero-copy."""
+    import pyarrow as pa
+
+    buf, have = [], 0
+    for rb in batches:
+        buf.append(rb)
+        have += rb.num_rows
+        while have >= size:
+            tbl = pa.Table.from_batches(buf)
+            head = tbl.slice(0, size).combine_chunks()
+            rest = tbl.slice(size)
+            yield from head.to_batches(max_chunksize=size)
+            buf = rest.to_batches()
+            have = rest.num_rows
+    if have:
+        tail = pa.Table.from_batches(buf).combine_chunks()
+        yield from tail.to_batches(max_chunksize=size)
+
+
+def _pandas_chunker(chunker: Callable | int | None) -> Callable | None:
+    """A ``set_chunker`` value as a pandas-batch chunker."""
+    if isinstance(chunker, int):
+        return functools.partial(_rechunk_frames, size=chunker)
+    return chunker
+
+
+def _map_in_pandas(df: DataFrame, run: Callable, schema: Any, chunker: Callable | int | None) -> DataFrame:
+    """The module's one ``mapInPandas``: ``run`` gets each partition's
+    pandas batches, re-cut by ``chunker``; ``schema=None`` keeps the
+    input schema."""
+    chunk = _pandas_chunker(chunker)
+
+    def partition(batches: Iterable[pd.DataFrame]):
+        return run(chunk(batches) if chunk is not None else batches)
+
+    return df.mapInPandas(partition, schema=df.schema if schema is None else schema)
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """A Python stage as data: ``build(in_schema)`` gives its batch
+    function ``(pdf, wctx) -> pdf | None``; ``schema`` is its declared
+    output (None keeps the input's); ``chunker`` is the ``set_chunker``
+    value in force when it was added."""
+
+    build: Callable[[StructType], Callable]
+    schema: Any
+    aware: bool
+    chunker: Callable | int | None
+
+    def __call__(self, df: DataFrame, context: Context | None) -> DataFrame:
+        fn = self.build(df.schema)
+        wctx = _worker_ctx(context, self.aware)
+
+        def run(batches: Iterable[pd.DataFrame]):
+            for pdf in batches:
+                out = fn(pdf, wctx)
+                if out is not None and len(out):
+                    yield out
+
+        return _map_in_pandas(df, run, self.schema, self.chunker)
+
+
+def _fuse(stages: Sequence[_Stage], schema: StructType) -> Callable:
+    """``stages`` as one ``(pdf, wctx) -> pdf | None`` function over input
+    of Spark schema ``schema``. Each stage decodes against the schema the
+    stage before it declared, or its input's when none is declared."""
+    fns = []
+    for s in stages:
+        fns.append(s.build(schema))
+        if s.schema is not None:
+            schema = StructType.fromDDL(s.schema) if isinstance(s.schema, str) else s.schema
+
+    def chain(pdf: pd.DataFrame, wctx: dict | None):
+        for fn in fns:
+            if pdf is None or not len(pdf):
+                return None
+            pdf = fn(pdf, wctx)
+        return pdf
+
+    return chain
 
 
 class Transformer:
@@ -158,15 +354,30 @@ class Transformer:
     deliberate upgrade: a Transformer is a value, like a logical plan.)
     """
 
-    def __init__(
-        self, steps: tuple[Step, ...] = (), chunker: Callable | None = None
-    ):  # noqa: D107
+    def __init__(self, steps: tuple[Step, ...] = (), chunker: Callable | int | None = None):  # noqa: D107
         self._steps = tuple(steps)
         self._chunker = chunker
 
     # -- composition core (parity: _pipe, transformer.py:215-227) ----------
     def _with(self, step: Step) -> "Transformer":
         return Transformer(self._steps + (step,), self._chunker)
+
+    def _python_stage(self, build: Callable, schema: Any | None, aware: bool) -> "Transformer":
+        return self._with(_Stage(build, schema, aware, self._chunker))
+
+    def _python_stages(self) -> tuple[_Stage, ...]:
+        """This transformer's steps, for fusion into one batch function.
+        A Column/SQL stage is a Catalyst plan node with no per-batch form,
+        so a sub-pipeline containing one raises here, naming the
+        alternatives."""
+        if not all(isinstance(s, _Stage) for s in self._steps):
+            raise TypeError(
+                "this sub-pipeline contains a Column/SQL (Catalyst-plan) stage, which "
+                "cannot run inside a per-batch scope. Use Python stages (map_batches/"
+                "map_rows/filter with a callable) in the sub-pipeline, or apply the "
+                "Transformer directly and use observe() for metrics."
+            )
+        return self._steps
 
     def __call__(self, df: DataFrame, context: Context | None = None) -> DataFrame:
         for step in self._steps:
@@ -216,30 +427,8 @@ class Transformer:
         (laygo/transformers/types.py:13). ``fn(pdf)`` or ``fn(pdf, ctx)``
         returns a pandas DataFrame; ``schema=None`` keeps the input schema.
         """
-        ctx_aware = is_context_aware(fn)
-        chunker = self._chunker
-
-        def step(df: DataFrame, context: Context | None) -> DataFrame:
-            out_schema = schema if schema is not None else df.schema
-            wctx = _worker_ctx(context) if ctx_aware else None
-
-            def run(batches: Iterable[pd.DataFrame]):
-                stream = chunker(batches) if chunker is not None else batches
-                for pdf in stream:
-                    out = fn(pdf, wctx) if ctx_aware else fn(pdf)
-                    if out is not None and len(out):
-                        yield out
-
-            return df.mapInPandas(run, schema=out_schema)
-
-        # Metadata for sub-pipeline fusion: catch/tap/loop_chunks compile
-        # a Transformer made of such steps into ONE Arrow-batch function
-        # (one error domain / one fixpoint body), mirroring the
-        # reference's composed chunk closures (transformer.py:215-227).
-        step._batch_fn = fn  # type: ignore[attr-defined]
-        step._batch_ctx_aware = ctx_aware  # type: ignore[attr-defined]
-        step._batch_schema = schema  # type: ignore[attr-defined]
-        return self._with(step)
+        fn, aware = _with_ctx(fn)
+        return self._python_stage(lambda _in: fn, schema, aware)
 
     def map_batches_http(
         self,
@@ -265,7 +454,7 @@ class Transformer:
         controls REQUEST size (one custom chunk = one POST)."""
         from laygo_python_spark.operators.http import post_batches
 
-        chunker = self._chunker
+        chunker = _pandas_chunker(self._chunker)
 
         def step(df: DataFrame, context: Context | None) -> DataFrame:
             out_schema = schema if schema is not None else df.schema
@@ -299,9 +488,8 @@ class Transformer:
         rather than silently ignoring the chunker (which would hand
         ``fn`` engine-default batches the pipeline explicitly opted out
         of) — use ``map_batches`` for that stage, or the int form."""
-        chunker = self._chunker
-        size = getattr(chunker, "_chunk_size", None)
-        if chunker is not None and size is None:
+        size = self._chunker
+        if size is not None and not isinstance(size, int):
             raise TypeError(
                 "map_batches_arrow: a callable set_chunker has the pandas chunk "
                 "contract and cannot re-chunk an arrow stage — use set_chunker(n) "
@@ -311,26 +499,8 @@ class Transformer:
         def step(df: DataFrame, context: Context | None) -> DataFrame:
             out_schema = schema if schema is not None else df.schema
 
-            def rechunk(batches):
-                import pyarrow as pa
-
-                buf, have = [], 0
-                for rb in batches:
-                    buf.append(rb)
-                    have += rb.num_rows
-                    while have >= size:
-                        tbl = pa.Table.from_batches(buf)
-                        head = tbl.slice(0, size).combine_chunks()
-                        rest = tbl.slice(size)
-                        yield from head.to_batches(max_chunksize=size)
-                        buf = rest.to_batches()
-                        have = rest.num_rows
-                if have:
-                    tail = pa.Table.from_batches(buf).combine_chunks()
-                    yield from tail.to_batches(max_chunksize=size)
-
             def run(batches):
-                stream = rechunk(batches) if size is not None else batches
+                stream = _rechunk_arrow(batches, size) if size is not None else batches
                 for rb in stream:
                     out = fn(rb)
                     if out is not None and out.num_rows:
@@ -349,84 +519,19 @@ class Transformer:
         exchange on top."""
         return self._with(lambda df, ctx: df.sortWithinPartitions(*cols))
 
-    def _compile_batch_chain(self) -> tuple[Callable, Any | None]:
-        """Fuse this transformer's steps into one ``(pdf, wctx) -> pdf``
-        function + the declared output schema (None = input schema).
-
-        Only Python stages (map_batches and everything built on it:
-        map_rows, filter via callable, tap) fuse — a Column/SQL stage is
-        a Catalyst plan node with no per-batch form, so a sub-pipeline
-        containing one cannot run inside a single batch-level error
-        domain. That boundary raises here with the alternatives named.
-        """
-        stages: list[tuple[Callable, bool]] = []
-        out_schema: Any | None = None
-        for s in self._steps:
-            fn = getattr(s, "_batch_fn", None)
-            if fn is None:
-                raise TypeError(
-                    "this sub-pipeline contains a Column/SQL (Catalyst-plan) stage, which "
-                    "cannot run inside a per-batch scope. Use Python stages (map_batches/"
-                    "map_rows/filter with a callable) in the sub-pipeline, or apply the "
-                    "Transformer directly and use observe() for metrics."
-                )
-            stages.append((fn, s._batch_ctx_aware))
-            if s._batch_schema is not None:
-                out_schema = s._batch_schema
-
-        def chain(pdf: pd.DataFrame, wctx: dict | None):
-            for fn, aware in stages:
-                if pdf is None or not len(pdf):
-                    return None
-                pdf = fn(pdf, wctx) if aware else fn(pdf)
-            return pdf
-
-        return chain, out_schema
-
     def map_rows(self, fn: Callable, schema: Any | None = None) -> "Transformer":
         """Per-row Python map (slowest path; parity with laygo map over
-        elements, transformer.py:229-243). ``fn(elem[, ctx])`` where
-        ``elem`` follows the element convention: a bare scalar for
-        single-``value``-column frames (laygo scalar pipelines), a dict
-        otherwise; non-dict returns wrap back into ``value``.
-        Prefer ``map``/``map_batches``.
+        elements, transformer.py:229-243). ``fn(elem[, ctx])`` gets the
+        element ``to_list`` would return (see ``_Codec``); non-dict
+        returns wrap back into ``value``. Prefer ``map``/``map_batches``.
         """
-        ctx_aware = is_context_aware(fn)
+        fn, aware = _with_ctx(fn)
 
-        def batch_fn(pdf: pd.DataFrame, ctx: dict | None = None) -> pd.DataFrame:
-            # The order id rides along OUTSIDE the element convention:
-            # lambdas never see it, and a 1:1 map re-attaches it.
-            seq = pdf[ORDER_COL].tolist() if ORDER_COL in pdf.columns else None
-            if seq is not None:
-                pdf = pdf.drop(columns=[ORDER_COL])
-            cols = list(pdf.columns)
-            tagged = cols == MIXED_COLS
-            if tagged:
-                records: list[Any] = [
-                    decode_mixed(t, v) for t, v in zip(pdf["__tag"], pdf["__v"])
-                ]
-            elif cols == ["value"]:
-                records = pdf["value"].tolist()
-            else:
-                records = pdf.to_dict("records")
-            out = [fn(r, ctx) if ctx_aware else fn(r) for r in records]
-            if tagged:
-                enc = [encode_mixed(o) for o in out]
-                res = pd.DataFrame(
-                    {"__tag": [t for t, _ in enc], "__v": [v for _, v in enc]}
-                )
-            elif out and not isinstance(out[0], dict):
-                res = pd.DataFrame({"value": out})
-            else:
-                res = pd.DataFrame(out)
-            if seq is not None:
-                res[ORDER_COL] = seq
-            return res
+        def build(in_schema: StructType) -> Callable:
+            codec = _Codec(in_schema)
+            return lambda pdf, ctx: codec.encode([fn(x, ctx) for x in codec.decode(pdf)], pdf)
 
-        # Re-expose the right arity so map_batches dispatches ctx correctly.
-        if ctx_aware:
-            return self.map_batches(lambda pdf, ctx: batch_fn(pdf, ctx), schema)
-        return self.map_batches(lambda pdf: batch_fn(pdf), schema)
+        return self._python_stage(build, schema, aware)
 
     # -- filters ------------------------------------------------------------
     def filter(self, cond: Column | str | Callable) -> "Transformer":
@@ -440,40 +545,26 @@ class Transformer:
         return self._with(lambda df, ctx: df.filter(c))
 
     def filter_rows(self, pred: Callable) -> "Transformer":
-        """Python predicate filter. ``pred(elem[, ctx])`` receives the
-        element convention: a bare scalar for single-``value``-column
-        frames (laygo scalar pipelines, tests/test_pipeline.py:507-538
-        route with ``lambda x: x > 100``), a dict otherwise.
+        """Python predicate filter. ``pred(elem[, ctx])`` gets the
+        element ``to_list`` would return: a bare scalar for
+        single-``value``-column frames (laygo scalar pipelines,
+        tests/test_pipeline.py:507-538 route with ``lambda x: x > 100``),
+        a dict otherwise.
 
-        Built on map_batches so it participates in sub-pipeline fusion
+        A Python stage, so it participates in sub-pipeline fusion
         (catch/tap/loop_chunks)."""
-        ctx_aware = is_context_aware(pred)
+        pred, aware = _with_ctx(pred)
 
-        def batch_fn(pdf: pd.DataFrame, ctx: dict | None = None) -> pd.DataFrame:
-            if not len(pdf):
-                return pdf
-            # Decode elements WITHOUT the order id (lambdas never see
-            # it); the mask then filters the full frame, so the id
-            # column survives for to_list(ordered=True).
-            data = pdf.drop(columns=[ORDER_COL]) if ORDER_COL in pdf.columns else pdf
-            cols = list(data.columns)
-            if cols == MIXED_COLS:
-                items: list[Any] = [
-                    decode_mixed(t, v) for t, v in zip(data["__tag"], data["__v"])
-                ]
-            elif cols == ["value"]:
-                items = data["value"].tolist()
-            else:
-                items = data.to_dict("records")
-            if ctx_aware:
-                mask = [bool(pred(it, ctx)) for it in items]
-            else:
-                mask = [bool(pred(it)) for it in items]
-            return pdf[pd.Series(mask, index=pdf.index)]
+        def build(in_schema: StructType) -> Callable:
+            codec = _Codec(in_schema)
 
-        if ctx_aware:
-            return self.map_batches(lambda pdf, ctx: batch_fn(pdf, ctx))
-        return self.map_batches(lambda pdf: batch_fn(pdf))
+            def keep(pdf: pd.DataFrame, ctx: dict | None) -> pd.DataFrame:
+                mask = [bool(pred(x, ctx)) for x in codec.decode(pdf)]
+                return pdf[pd.Series(mask, index=pdf.index, dtype=bool)]
+
+            return keep
+
+        return self._python_stage(build, None, aware)
 
     # -- flatten / explode ---------------------------------------------------
     def flatten(self, col: str, into: str | None = None) -> "Transformer":
@@ -494,33 +585,25 @@ class Transformer:
 
         - a callable ``fn(pdf[, ctx])`` run per Arrow batch (use ctx
           accumulators for metrics), or
-        - a sub-``Transformer`` of Python stages, run on a COPY of each
-          batch for its side effects with its output discarded
-          (reference tap(Transformer), tested at reference
+        - a sub-``Transformer`` of Python stages (reference
+          tap(Transformer), tested at reference
           tests/test_transformer.py:51-58).
-        """
-        if isinstance(fn, Transformer):
-            chain, _ = fn._compile_batch_chain()
 
-            def sub_fn(pdf: pd.DataFrame, ctx: dict | None = None) -> pd.DataFrame:
-                # copy: the sub-pipeline must not mutate the main stream
+        Either runs on a COPY of each batch, its output discarded.
+        """
+        sub = fn if isinstance(fn, Transformer) else Transformer().map_batches(fn)
+        stages = sub._python_stages()
+
+        def build(in_schema: StructType) -> Callable:
+            chain = _fuse(stages, in_schema)
+
+            def run(pdf: pd.DataFrame, ctx: dict | None) -> pd.DataFrame:
                 chain(pdf.copy(), ctx)
                 return pdf
 
-            return self.map_batches(lambda pdf, ctx: sub_fn(pdf, ctx))
+            return run
 
-        ctx_aware = is_context_aware(fn)
-
-        def batch_fn(pdf: pd.DataFrame, ctx: dict | None = None) -> pd.DataFrame:
-            if ctx_aware:
-                fn(pdf, ctx)
-            else:
-                fn(pdf)
-            return pdf
-
-        if ctx_aware:
-            return self.map_batches(lambda pdf, ctx: batch_fn(pdf, ctx))
-        return self.map_batches(lambda pdf: batch_fn(pdf))
+        return self._python_stage(build, None, any(s.aware for s in stages))
 
     def observe(self, name: str, *exprs: Column) -> "Transformer":
         """Zero-cost, exactly-once metrics riding the main job — the
@@ -580,22 +663,24 @@ class Transformer:
         """
         if not per_chunk:
             raise ValueError("whole-dataset folds live on Pipeline.reduce; use agg for distributed folds")
-        ctx_aware = is_context_aware(fn, threshold=2)
+        fn, aware = _with_ctx(fn, threshold=2)
+        chunker = self._chunker
 
         def step(df: DataFrame, context: Context | None) -> DataFrame:
-            wctx = _worker_ctx(context) if ctx_aware else None
+            codec = _Codec(df.schema)
+            wctx = _worker_ctx(context, aware)
 
             def run(batches: Iterable[pd.DataFrame]):
                 acc = initial
                 seen = False
                 for pdf in batches:
-                    for r in pdf.to_dict("records"):
-                        acc = fn(acc, r, wctx) if ctx_aware else fn(acc, r)
+                    for r in codec.decode(pdf, records=True):
+                        acc = fn(acc, r, wctx)
                         seen = True
                 if seen:
                     yield pd.DataFrame([{"value": acc}])
 
-            return df.mapInPandas(run, schema=schema)
+            return _map_in_pandas(df, run, schema, chunker)
 
         return self._with(step)
 
@@ -635,27 +720,21 @@ class Transformer:
         """
         if mode not in ("batch", "row"):
             raise ValueError(f"mode must be 'batch' or 'row', got {mode!r}")
-        sub: Transformer | None = None
-        if isinstance(fn, Transformer):
-            sub = fn
-        elif callable(fn):
+        sub = fn if isinstance(fn, Transformer) else None
+        if sub is None and callable(fn):
             try:
                 probe = fn(Transformer())
-                if isinstance(probe, Transformer):
-                    sub = probe
+                sub = probe if isinstance(probe, Transformer) else None
             except Exception:  # noqa: BLE001 — not a builder: plain batch fn
-                sub = None
-        if sub is not None:
-            chain, chain_schema = sub._compile_batch_chain()
-            if schema is None:
-                schema = chain_schema
-            fn = lambda pdf, ctx: chain(pdf, ctx)  # noqa: E731
+                pass
+        stages = (sub or Transformer().map_batches(fn))._python_stages()
+        declared = [s.schema for s in stages if s.schema is not None]
+        out_schema = schema if schema is not None else (declared or [None])[-1]
         handler = on_error
-        fn_ctx_aware = is_context_aware(fn)
         chunker = self._chunker
 
         def step(df: DataFrame, context: Context | None) -> DataFrame:
-            out_schema = schema if schema is not None else df.schema
+            call = _fuse(stages, df.schema)
             wctx = _worker_ctx(context)
 
             def handle(pdf: pd.DataFrame, exc: Exception) -> None:
@@ -666,50 +745,42 @@ class Transformer:
 
             def attempt(pdf: pd.DataFrame):
                 try:
-                    return True, (fn(pdf, wctx) if fn_ctx_aware else fn(pdf))
+                    return True, call(pdf, wctx)
                 except PipelineAbortError:
                     raise
                 except Exception as exc:  # noqa: BLE001 — isolated error domain
                     return False, exc
 
             def salvage(pdf: pd.DataFrame):
-                """Row-mode: bisect failing batches so fn stays vectorized —
-                a poison row costs O(log batch) re-tries instead of running
-                fn once per row. Binary split measured fastest (an 8-way
-                fan-out doubled wall time at 2% poison density: every
-                mid-level group still fails, and each failure then pays 8
-                child attempts instead of 2). Requires fn to be row-wise
-                (its output for a row must not depend on its batch)."""
+                """Batch mode drops a failing batch whole. Row mode
+                bisects it so fn stays vectorized — a poison row costs
+                O(log batch) re-tries instead of running fn once per row.
+                Binary split measured fastest (an 8-way fan-out doubled
+                wall time at 2% poison density: every mid-level group
+                still fails, and each failure then pays 8 child attempts
+                instead of 2). Requires fn to be row-wise (its output for
+                a row must not depend on its batch)."""
                 ok, out = attempt(pdf)
                 if ok:
                     if out is not None and len(out):
                         yield out
                     return
-                if len(pdf) == 1:
+                if mode == "batch" or len(pdf) == 1:
                     handle(pdf, out)
                     return
                 mid = len(pdf) // 2
                 yield from salvage(pdf.iloc[:mid])
                 yield from salvage(pdf.iloc[mid:])
 
+            # A set_chunker installed upstream governs the error-domain
+            # boundaries here too (batch-mode drops exactly one custom
+            # chunk per failure), mirroring the reference where the
+            # chunker defines the chunks catch operates on.
             def run(batches: Iterable[pd.DataFrame]):
-                # A set_chunker installed upstream governs the error-domain
-                # boundaries here too (batch-mode drops exactly one custom
-                # chunk per failure), mirroring the reference where the
-                # chunker defines the chunks catch operates on.
-                stream = chunker(batches) if chunker is not None else batches
-                for pdf in stream:
-                    if mode == "batch":
-                        ok, out = attempt(pdf)
-                        if ok:
-                            if out is not None and len(out):
-                                yield out
-                        else:
-                            handle(pdf, out)
-                    else:
-                        yield from salvage(pdf)
+                for pdf in batches:
+                    yield from salvage(pdf)
 
-            return df.mapInPandas(run, schema=out_schema)
+            return _map_in_pandas(df, run, out_schema, chunker)
 
         return self._with(step)
 
@@ -719,7 +790,6 @@ class Transformer:
         body: "Transformer",
         condition: Column | str | Callable[[DataFrame], bool],
         max_iterations: int = DEFAULT_MAX_LOOP_ITERATIONS,
-        checkpoint_every: int = 10,
     ) -> "Transformer":
         """Driver-side fixpoint iteration (reference: Transformer.loop,
         transformer.py:346-392 — per-chunk while-loop; here the unit is
@@ -727,8 +797,9 @@ class Transformer:
 
         ``condition`` as a Column/SQL string means "keep looping while any
         row matches"; a callable receives the DataFrame and returns bool.
-        ``localCheckpoint`` every ``checkpoint_every`` iterations truncates
-        lineage so plans don't grow unboundedly (SURVEY.md §7.4.3).
+        Every ``LOOP_PIN_EVERY`` iterations the frame is pinned, which
+        truncates its lineage so plans don't grow unboundedly
+        (SURVEY.md §7.4.3), and the pin it supersedes is released.
         """
         if max_iterations is None or max_iterations <= 0:
             raise ValueError("max_iterations must be a positive int (unbounded loops are unsupported)")
@@ -740,11 +811,14 @@ class Transformer:
                 return d.filter(_as_condition(condition)).limit(1).count() > 0
 
             i = 0
+            pinned = None
             while i < max_iterations and should_continue(df):
                 df = body(df, context)
                 i += 1
-                if i % checkpoint_every == 0:
+                if i % LOOP_PIN_EVERY == 0:
                     df = pin(df)
+                    release(pinned)
+                    pinned = df
             return df
 
         return self._with(step)
@@ -771,26 +845,24 @@ class Transformer:
         """
         if max_iterations is None or max_iterations <= 0:
             raise ValueError("max_iterations must be a positive int (unbounded loops are unsupported)")
-        if isinstance(body, Transformer):
-            chain, _ = body._compile_batch_chain()
-            body_fn, body_aware = chain, True
-        else:
-            body_fn, body_aware = body, is_context_aware(body)
-        cond_aware = is_context_aware(condition)
+        if not isinstance(body, Transformer):
+            body = Transformer().map_batches(body)
+        stages = body._python_stages()
+        condition, cond_aware = _with_ctx(condition)
 
-        def batch_fn(pdf: pd.DataFrame, ctx: dict | None = None):
-            i = 0
-            while (
-                pdf is not None
-                and len(pdf)
-                and i < max_iterations
-                and (condition(pdf, ctx) if cond_aware else condition(pdf))
-            ):
-                pdf = body_fn(pdf, ctx) if body_aware else body_fn(pdf)
-                i += 1
-            return pdf
+        def build(in_schema: StructType) -> Callable:
+            chain = _fuse(stages, in_schema)
 
-        return self.map_batches(lambda pdf, ctx: batch_fn(pdf, ctx))
+            def run(pdf: pd.DataFrame, ctx: dict | None):
+                i = 0
+                while pdf is not None and len(pdf) and i < max_iterations and condition(pdf, ctx):
+                    pdf = chain(pdf, ctx)
+                    i += 1
+                return pdf
+
+            return run
+
+        return self._python_stage(build, None, cond_aware or any(s.aware for s in stages))
 
     def short_circuit(self, fn: Callable[[dict], bool | None]) -> "Transformer":
         """Abort the whole run when ``fn(ctx)`` returns True (reference:
@@ -859,36 +931,15 @@ class Transformer:
         split, coalesce, or regroup the incoming batch stream however
         it likes before the batch function sees it. An ``int`` is the
         common case — re-chunk to exactly that many rows per batch
-        (tail excepted), whatever Arrow's maxRecordsPerBatch delivered.
+        (tail excepted), whatever Arrow's maxRecordsPerBatch delivered;
+        ``map_batches_arrow`` honors it too, on record batches.
 
         Scope mirrors the reference: the chunker governs chunking
         WITHIN a worker (here: within a partition); it cannot move rows
         across partitions — that is ``repartition``. Applies to stages
         added AFTER this call, like the reference's in-place setter."""
-        if isinstance(chunker, int):
-            if chunker <= 0:
-                raise ValueError(f"set_chunker: chunk size must be positive, got {chunker}")
-            size = chunker
-
-            def fixed(batches: Iterable[pd.DataFrame]):
-                buf: list[pd.DataFrame] = []
-                have = 0
-                for pdf in batches:
-                    buf.append(pdf)
-                    have += len(pdf)
-                    while have >= size:
-                        cat = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-                        yield cat.iloc[:size]
-                        rest = cat.iloc[size:]
-                        buf, have = ([rest], len(rest)) if len(rest) else ([], 0)
-                if have:
-                    yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-
-            # Arrow stages can't run a pandas-contract chunker, but the
-            # int form has an exact arrow-level equivalent — carry the
-            # size so map_batches_arrow re-slices record batches to it.
-            fixed._chunk_size = size  # type: ignore[attr-defined]
-            return Transformer(self._steps, fixed)
+        if isinstance(chunker, int) and chunker <= 0:
+            raise ValueError(f"set_chunker: chunk size must be positive, got {chunker}")
         return Transformer(self._steps, chunker)
 
     def repartition(self, n: int, *cols: str) -> "Transformer":
@@ -905,18 +956,15 @@ def create_transformer(_type_hint: Any = None) -> Transformer:
 
 
 def create_threaded_transformer(_type_hint: Any = None, max_workers: int = 4, ordered: bool = True) -> Transformer:
-    """Parity alias for laygo's create_threaded_transformer
-    (transformer.py:49-72): on Spark the strategy choice IS the
-    partitioning — this returns a transformer that repartitions to
-    ``max_workers`` so downstream per-batch work runs with that
-    parallelism. ``ordered`` is accepted for API compatibility; DataFrame
+    """Parity alias for laygo's create_threaded_transformer and
+    create_process_transformer (transformer.py:49-98): on Spark the
+    strategy choice IS the partitioning — this returns a transformer that
+    repartitions to ``max_workers`` so downstream per-batch work runs
+    with that parallelism (Spark executors already are separate
+    processes). ``ordered`` is accepted for API compatibility; DataFrame
     results are unordered sets unless an order_by is applied (SURVEY.md
     §7.4.4)."""
     return Transformer().repartition(max_workers)
 
 
-def create_process_transformer(_type_hint: Any = None, max_workers: int = 4, ordered: bool = True) -> Transformer:
-    """Parity alias for laygo's create_process_transformer
-    (transformer.py:75-98). Spark executors already are separate
-    processes; identical to create_threaded_transformer here."""
-    return Transformer().repartition(max_workers)
+create_process_transformer = create_threaded_transformer

@@ -86,3 +86,15 @@ def test_estimators_do_not_repin_a_pinned_sketch(spark):
             call()
     assert not (_ids(spark) - before)
     release(cms, hll, qs)
+
+
+def test_loop_releases_the_pin_it_supersedes(spark):
+    """Transformer.loop pins every LOOP_PIN_EVERY iterations and releases
+    the pin the new one replaces: 35 iterations leave one pin, not three."""
+    from laygo_python_spark import Transformer
+
+    base = _ids(spark)
+    body = Transformer().map(id=F.col("id") + 1)
+    out = Transformer().loop(body, lambda d: True, max_iterations=35)(spark.range(10))
+    assert out.agg(F.max("id")).first()[0] == 44
+    assert len(_ids(spark) - base) == 1

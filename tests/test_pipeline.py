@@ -488,10 +488,27 @@ def test_ordered_id_never_leaks_into_elements(spark):
     rows, _ = p.to_list()
     assert rows == [1, 2, 3]
     assert list(p) == [1, 2, 3]
-    seen = []
     dicts, _ = Pipeline([{"a": 1}], spark=spark, ordered=True).to_list(ordered=True)
     assert dicts == [{"a": 1}]
-    Pipeline([1], spark=spark, ordered=True).each(lambda x: seen.append(x))
+    ctx = Context(spark=spark)
+    ctx.counter("not_int")
+
+    def count_non_int(x, c):
+        if not isinstance(x, int):
+            c["not_int"] += 1
+
+    _, snap = Pipeline([1], spark=spark, ordered=True, context=ctx).each(count_non_int)
+    assert snap["not_int"] == 0
+    # Python stages see the same elements: the dict rows carry only "a".
+    recs = Pipeline([{"a": 1}, {"a": 2}], spark=spark, ordered=True)
+    mapped, _ = recs.transform(lambda t: t.map_rows(lambda r: {"a": len(r)})).to_list(ordered=True)
+    assert mapped == [{"a": 1}, {"a": 1}]
+    kept, _ = recs.transform(lambda t: t.filter_rows(lambda r: list(r) == ["a"])).to_list()
+    assert len(kept) == 2
+    keys, _ = recs.transform(
+        lambda t: t.reduce_rows(lambda acc, r: sorted(set(acc) | set(r)), [], "value array<string>")
+    ).to_list()
+    assert keys and all(k == ["a"] for k in keys)
 
 
 def test_mixed_map_can_emit_containers(spark):

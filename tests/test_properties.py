@@ -321,6 +321,62 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
     assert len(results[7][1]) == 500 - len([v for v in range(-250, 250) if v % 97 == 0])
 
 
+@given(
+    a=st.lists(st.none() | st.integers(-(2**40), 2**40), min_size=1, max_size=40),
+    parts=st.integers(min_value=1, max_value=5),
+    batch=st.sampled_from([1, 7, 1000]),
+    ordered=st.booleans(),
+)
+@SET
+def test_python_stages_see_the_elements_to_list_returns(spark, a, parts, batch, ordered):
+    """map_rows, filter_rows and reduce_rows see each record exactly as
+    plain Python holds it — None for NULL, int for a long, no order id —
+    whatever the partitioning and Arrow batch size, and to_list returns
+    it too (map_rows returns each record unchanged and filter_rows keeps
+    it). repr tells 5 from 5.0 and None from nan."""
+    from laygo_python_spark import Context
+
+    recs = [{"id": i, "a": v} for i, v in enumerate(a)]
+    want = {r["id"]: repr(r) for r in recs}
+    df = spark.createDataFrame(recs, "id long, a long")
+    ctx = Context(spark=spark)
+    ctx.counter("wrong")
+
+    def check(r, c):
+        if repr(r) != want[r["id"]]:
+            c["wrong"] += 1
+        return r
+
+    def pipe(build):
+        return Pipeline(df, spark=spark, context=ctx, ordered=ordered).transform(
+            lambda t: build(t.repartition(parts))
+        )
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    try:
+        kept, snap = pipe(
+            lambda t: t.map_rows(check).filter_rows(lambda r: repr(r) == want[r["id"]])
+        ).to_list()
+        folds, _ = pipe(
+            lambda t: t.reduce_rows(lambda acc, r: acc + [repr(r)], [], "value array<string>")
+        ).to_list()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert snap["wrong"] == 0
+    assert sorted(map(repr, kept)) == sorted(want.values())
+    assert sorted(x for fold in folds for x in fold) == sorted(want.values())
+
+
+def test_scalar_null_reaches_a_python_stage_as_none(spark):
+    got, _ = (
+        Pipeline([1, None, 3], spark=spark)
+        .transform(lambda t: t.filter_rows(lambda x: x is None))
+        .to_list()
+    )
+    assert got == [None]
+
+
 # ---------------------------------------------------------------------------
 # r9 sketch / fusion estimator properties
 
