@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from laygo_python_spark.context import Context
+from laygo_python_spark.session import get_spark, local_rows_df
 from laygo_python_spark.transformer import MIXED_SCHEMA, ORDER_COL, Transformer, encode_mixed
 from laygo_python_spark.transformer import _as_condition, _Codec, _with_ctx, _worker_ctx
 
@@ -41,11 +42,11 @@ def _coerce_source(spark: SparkSession, source: Any, allow_mixed: bool = False) 
     # dirty-data pipelines: tests/test_pipeline.py:117-124,
     # tests/test_integration.py:50-58). Unconditional on opt-in: dirty
     # dict records with inconsistent schemas must not fall into the
-    # Row(**d) schema-merge path below.
+    # schema-merge path below.
     if allow_mixed:
-        return spark.createDataFrame([encode_mixed(x) for x in items], MIXED_SCHEMA)
+        return local_rows_df(spark, [encode_mixed(x) for x in items], MIXED_SCHEMA)
     if isinstance(items[0], dict):
-        return spark.createDataFrame([Row(**d) for d in items])
+        return local_rows_df(spark, items)
     # Mixed scalar types (reference tests use [1, "hello", 3.14],
     # laygo tests/test_pipeline.py:117-120) have no honest DataFrame
     # schema. ``allow_mixed=True`` opts into the explicit tagged-union
@@ -63,7 +64,7 @@ def _coerce_source(spark: SparkSession, source: Any, allow_mixed: bool = False) 
         )
     if kinds == numeric:
         items = [float(x) if x is not None else None for x in items]
-    return spark.createDataFrame([(x,) for x in items], ["value"])
+    return local_rows_df(spark, [{"value": x} for x in items])
 
 
 def _exclusive_pred(cond: Callable, earlier: tuple[Callable, ...]) -> Callable:
@@ -75,7 +76,10 @@ def _exclusive_pred(cond: Callable, earlier: tuple[Callable, ...]) -> Callable:
 
 
 class Pipeline:
-    """Fluent DataFrame pipeline with laygo's API shape."""
+    """Fluent DataFrame pipeline with laygo's API shape. Dict records need
+    not share keys: a record without a key another one has gets None
+    there (``[{"a": 1}, {"a": 2, "b": 3}]`` gives ``{"a": 1, "b": None}``
+    first)."""
 
     def __init__(
         self,
@@ -87,11 +91,7 @@ class Pipeline:
     ):
         if not sources:
             raise ValueError("Pipeline needs at least one source")
-        self.spark = spark or SparkSession.getActiveSession()
-        if self.spark is None:
-            from laygo_python_spark.session import get_spark
-
-            self.spark = get_spark()
+        self.spark = spark or SparkSession.getActiveSession() or get_spark()
         dfs = [_coerce_source(self.spark, s, allow_mixed) for s in sources]
         # Multi-source concatenation (reference chains iterables lazily,
         # laygo/pipeline.py:108) → unionByName, still lazy under Catalyst.

@@ -135,24 +135,28 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         pass
 
 
-def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Tiny literal DataFrame as a JVM LocalRelation (via Arrow).
-
-    A plain list-backed ``createDataFrame`` executes through the
-    Python-RDD path: EVERY job that evaluates the frame — a write, a
-    join — spins up Python workers, measured ~4.5 s for a ONE-ROW
-    parquet write at r5 (it dominated the stored-index append wall).
-    The pandas/Arrow route lands the same rows as a JVM LocalRelation
-    (~0.2 s) and downstream execution stays whole-stage-codegen. Use
-    for params rows, batch markers, probe/lag tables; NOT for
-    ``Pipeline(*data)`` ingestion, whose mixed-type inference the
-    pandas path does not reproduce."""
-    import pandas as pd
+def local_rows_df(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """Python rows as a JVM LocalRelation, built through Arrow. A plain
+    list-backed ``createDataFrame`` runs through the Python-RDD path, so
+    EVERY job evaluating the frame spins up Python workers (~4.5 s for a
+    ONE-ROW parquet write at r5). ``rows`` are tuples in field order,
+    dicts or Rows, converted by pyspark's own list-to-Arrow conversion.
+    ``schema=None`` infers it as ``createDataFrame([Row(**d) for d in
+    rows])`` does from dict rows; a dict without some key gives None."""
+    from pyspark.sql import Row
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
-    st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
-    pdf = pd.DataFrame(list(rows), columns=st.fieldNames())
-    return spark.createDataFrame(pdf, schema=st)
+    rows = list(rows)
+    if schema is None:
+        schema = spark._inferSchemaFromList([Row(**r) for r in rows])
+    elif isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    large = spark._jconf.arrowUseLargeVarTypes()
+    if not rows:  # the conversion needs at least one row
+        return spark.createDataFrame(to_arrow_schema(schema, prefers_large_types=large).empty_table(), schema)
+    return spark.createDataFrame(LocalDataToArrowConversion.convert(rows, schema, large), schema)
 
 
 def pin(df: DataFrame) -> DataFrame:

@@ -36,10 +36,9 @@ def from_iterable(spark: SparkSession, data: Iterable[Any], schema: Any | None =
     """In-memory source, parity with Pipeline(*data). Scalars become a
     single ``value`` column (see pipeline._coerce_source)."""
     from laygo_python_spark.pipeline import _coerce_source
+    from laygo_python_spark.session import local_rows_df
 
-    if schema is not None:
-        return spark.createDataFrame(list(data), schema=schema)
-    return _coerce_source(spark, data)
+    return _coerce_source(spark, data) if schema is None else local_rows_df(spark, data, schema)
 
 
 def from_jdbc(spark: SparkSession, url: str, table: str, **options: Any) -> DataFrame:

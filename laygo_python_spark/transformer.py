@@ -15,10 +15,11 @@ Fast path vs slow path (decided at *build* time):
   (the closest match to laygo's ``(list[T], ctx) -> list[U]`` chunk
   contract, SURVEY.md §2.12) — never row-at-a-time Python UDFs.
 
-Each Python stage is a ``_Stage`` record run by one ``mapInPandas``
-helper; catch/tap/loop_chunks fuse sub-Transformers from those records.
-A user callable's context arity is worked out once, where its stage is
-built (``_with_ctx``, as laygo/helpers.py:28-41). Row stages and every
+Each Python stage is a ``_Stage`` record. Adjacent stages under one
+``set_chunker`` value run as ONE ``mapInPandas`` (``_fuse``), as laygo's
+``_pipe`` composes chunk functions; catch/tap/loop_chunks fuse their
+sub-Transformers the same way. A user callable's context arity is worked
+out once (``_with_ctx``, laygo/helpers.py:28-41). Row stages and every
 ``Pipeline`` terminal see elements through one codec, ``_Codec``.
 """
 
@@ -26,12 +27,13 @@ from __future__ import annotations
 
 import functools
 import inspect
+import itertools
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from dataclasses import dataclass
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StructType
 
@@ -303,47 +305,72 @@ def _map_in_pandas(df: DataFrame, run: Callable, schema: Any, chunker: Callable 
 
 @dataclass(frozen=True)
 class _Stage:
-    """A Python stage as data: ``build(in_schema)`` gives its batch
-    function ``(pdf, wctx) -> pdf | None``; ``schema`` is its declared
-    output (None keeps the input's); ``chunker`` is the ``set_chunker``
-    value in force when it was added."""
+    """A Python stage as data: ``build(in_schema, conform)`` gives its
+    batch function ``(pdf, wctx) -> pdf | None``; ``schema`` is its
+    declared output (None keeps the input's); ``chunker`` is the
+    ``set_chunker`` value in force when it was added."""
 
-    build: Callable[[StructType], Callable]
+    build: Callable[[StructType, Callable], Callable]
     schema: Any
     aware: bool
     chunker: Callable | int | None
 
-    def __call__(self, df: DataFrame, context: Context | None) -> DataFrame:
-        fn = self.build(df.schema)
-        wctx = _worker_ctx(context, self.aware)
 
-        def run(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                out = fn(pdf, wctx)
-                if out is not None and len(out):
-                    yield out
+def _conformer(spark: SparkSession) -> Callable[[pd.DataFrame, StructType], pd.DataFrame]:
+    """``conform(pdf, schema)`` casts ``pdf`` as a ``mapInPandas`` boundary
+    does (out to Arrow and back, by pyspark's own serializer, with the
+    session time zone and ``convertToArrowArraySafely``)."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
 
-        return _map_in_pandas(df, run, self.schema, self.chunker)
+    conf = spark._jconf
+    large = conf.arrowUseLargeVarTypes()
+    ser = ArrowStreamPandasUDFSerializer(conf.sessionLocalTimeZone(), conf.arrowSafeTypeConversion(),
+                                         assign_cols_by_name=True, df_for_struct=True, arrow_cast=True)
+
+    def conform(pdf: pd.DataFrame, schema: StructType) -> pd.DataFrame:
+        from pyspark.worker import verify_pandas_result
+
+        verify_pandas_result(pdf, schema, assign_cols_by_name=True, truncate_return_schema=True)
+        batch = ser._create_batch([(pdf, to_arrow_type(schema, prefers_large_types=large))])
+        return ser.arrow_to_pandas(batch.column(0), 0)
+
+    return conform
 
 
-def _fuse(stages: Sequence[_Stage], schema: StructType) -> Callable:
+def _fuse(stages: Sequence[_Stage], schema: StructType, conform: Callable) -> tuple[Callable, StructType]:
     """``stages`` as one ``(pdf, wctx) -> pdf | None`` function over input
-    of Spark schema ``schema``. Each stage decodes against the schema the
-    stage before it declared, or its input's when none is declared."""
+    of Spark schema ``schema``, and its output schema. A stage after the
+    first sees the frame it would see as its own ``mapInPandas``: conformed
+    to the schema the stage before declared or kept. An empty frame ends it."""
     fns = []
     for s in stages:
-        fns.append(s.build(schema))
+        fns.append((s.build(schema, conform), schema))
         if s.schema is not None:
             schema = StructType.fromDDL(s.schema) if isinstance(s.schema, str) else s.schema
 
     def chain(pdf: pd.DataFrame, wctx: dict | None):
-        for fn in fns:
+        for i, (fn, in_schema) in enumerate(fns):
             if pdf is None or not len(pdf):
                 return None
-            pdf = fn(pdf, wctx)
+            pdf = fn(conform(pdf, in_schema) if i else pdf, wctx)
         return pdf
 
-    return chain
+    return chain, schema
+
+
+def _run_stages(df: DataFrame, stages: Sequence[_Stage], context: Context | None) -> DataFrame:
+    """One ``mapInPandas`` passing each chunk through every stage of a run."""
+    chain, schema = _fuse(stages, df.schema, _conformer(df.sparkSession))
+    wctx = _worker_ctx(context, any(s.aware for s in stages))
+
+    def run(batches: Iterable[pd.DataFrame]):
+        for pdf in batches:
+            out = chain(pdf, wctx)
+            if out is not None and len(out):
+                yield out
+
+    return _map_in_pandas(df, run, schema, stages[0].chunker)
 
 
 class Transformer:
@@ -380,8 +407,10 @@ class Transformer:
         return self._steps
 
     def __call__(self, df: DataFrame, context: Context | None = None) -> DataFrame:
-        for step in self._steps:
-            df = step(df, context)
+        # A run: adjacent Python stages under one chunker, or one other step.
+        key = lambda s: (s.chunker,) if isinstance(s, _Stage) else object()  # noqa: E731
+        for chunker, run in itertools.groupby(self._steps, key):
+            df = _run_stages(df, list(run), context) if isinstance(chunker, tuple) else next(run)(df, context)
         return df
 
     @classmethod
@@ -428,7 +457,7 @@ class Transformer:
         returns a pandas DataFrame; ``schema=None`` keeps the input schema.
         """
         fn, aware = _with_ctx(fn)
-        return self._python_stage(lambda _in: fn, schema, aware)
+        return self._python_stage(lambda _schema, _conform: fn, schema, aware)
 
     def map_batches_http(
         self,
@@ -527,7 +556,7 @@ class Transformer:
         """
         fn, aware = _with_ctx(fn)
 
-        def build(in_schema: StructType) -> Callable:
+        def build(in_schema: StructType, _conform: Callable) -> Callable:
             codec = _Codec(in_schema)
             return lambda pdf, ctx: codec.encode([fn(x, ctx) for x in codec.decode(pdf)], pdf)
 
@@ -555,7 +584,7 @@ class Transformer:
         (catch/tap/loop_chunks)."""
         pred, aware = _with_ctx(pred)
 
-        def build(in_schema: StructType) -> Callable:
+        def build(in_schema: StructType, _conform: Callable) -> Callable:
             codec = _Codec(in_schema)
 
             def keep(pdf: pd.DataFrame, ctx: dict | None) -> pd.DataFrame:
@@ -594,8 +623,8 @@ class Transformer:
         sub = fn if isinstance(fn, Transformer) else Transformer().map_batches(fn)
         stages = sub._python_stages()
 
-        def build(in_schema: StructType) -> Callable:
-            chain = _fuse(stages, in_schema)
+        def build(in_schema: StructType, conform: Callable) -> Callable:
+            chain, _ = _fuse(stages, in_schema, conform)
 
             def run(pdf: pd.DataFrame, ctx: dict | None) -> pd.DataFrame:
                 chain(pdf.copy(), ctx)
@@ -728,13 +757,11 @@ class Transformer:
             except Exception:  # noqa: BLE001 — not a builder: plain batch fn
                 pass
         stages = (sub or Transformer().map_batches(fn))._python_stages()
-        declared = [s.schema for s in stages if s.schema is not None]
-        out_schema = schema if schema is not None else (declared or [None])[-1]
         handler = on_error
         chunker = self._chunker
 
         def step(df: DataFrame, context: Context | None) -> DataFrame:
-            call = _fuse(stages, df.schema)
+            call, declared = _fuse(stages, df.schema, _conformer(df.sparkSession))
             wctx = _worker_ctx(context)
 
             def handle(pdf: pd.DataFrame, exc: Exception) -> None:
@@ -780,7 +807,7 @@ class Transformer:
                 for pdf in batches:
                     yield from salvage(pdf)
 
-            return _map_in_pandas(df, run, out_schema, chunker)
+            return _map_in_pandas(df, run, declared if schema is None else schema, chunker)
 
         return self._with(step)
 
@@ -850,8 +877,8 @@ class Transformer:
         stages = body._python_stages()
         condition, cond_aware = _with_ctx(condition)
 
-        def build(in_schema: StructType) -> Callable:
-            chain = _fuse(stages, in_schema)
+        def build(in_schema: StructType, conform: Callable) -> Callable:
+            chain, _ = _fuse(stages, in_schema, conform)
 
             def run(pdf: pd.DataFrame, ctx: dict | None):
                 i = 0

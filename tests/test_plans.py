@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from laygo_python_spark import Transformer
 from laygo_python_spark.plans import (
     count_exchanges,
     has_broadcast_join,
@@ -254,3 +255,51 @@ def test_ann_knn_label_vote_broadcasts_query_side_only(spark, sf_dir):
                 if d < depth:
                     assert "BroadcastExchange" not in up
                     depth = d
+
+
+def _python_stage_plan(spark, build) -> str:
+    from laygo_python_spark import Pipeline
+
+    recs = [{"id": i, "v": i % 7} for i in range(40)]
+    return physical_plan(Pipeline(recs, spark=spark).transform(build).df)
+
+
+def _bump(r):
+    return {"id": r["id"], "v": r["v"] + 1}
+
+
+def test_adjacent_python_stages_fuse_into_one_map_in_pandas(spark):
+    """map_rows, filter_rows, tap and loop_chunks over a Python-list
+    source: one MapInPandas over a JVM LocalRelation, no Python RDD."""
+    plan = _python_stage_plan(
+        spark,
+        lambda t: t.map_rows(_bump)
+        .filter_rows(lambda r: r["v"] > 2)
+        .tap(lambda pdf: None)
+        .loop_chunks(Transformer().map_rows(_bump), lambda pdf: False),
+    )
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Scan ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def test_a_column_step_or_a_new_chunker_splits_the_fused_run(spark):
+    between_select = _python_stage_plan(
+        spark, lambda t: t.map_rows(_bump).select("*").filter_rows(lambda r: r["v"] > 2)
+    )
+    assert between_select.count("MapInPandas") == 2, between_select
+    between_chunker = _python_stage_plan(
+        spark, lambda t: t.map_rows(_bump).set_chunker(5).filter_rows(lambda r: r["v"] > 2)
+    )
+    assert between_chunker.count("MapInPandas") == 2, between_chunker
+
+
+def test_catch_and_reduce_rows_stay_their_own_nodes(spark):
+    plan = _python_stage_plan(
+        spark,
+        lambda t: t.map_rows(_bump).catch(lambda pdf: pdf).filter_rows(lambda r: r["v"] > 2),
+    )
+    assert plan.count("MapInPandas") == 3, plan
+    plan = _python_stage_plan(
+        spark, lambda t: t.map_rows(_bump).reduce_rows(lambda acc, r: acc + 1, 0, "value long")
+    )
+    assert plan.count("MapInPandas") == 2, plan

@@ -368,6 +368,83 @@ def test_python_stages_see_the_elements_to_list_returns(spark, a, parts, batch, 
     assert sorted(x for fold in folds for x in fold) == sorted(want.values())
 
 
+@given(
+    a=st.lists(st.none() | st.integers(-500, 500), min_size=1, max_size=40),
+    parts=st.integers(min_value=1, max_value=4),
+    batch=st.sampled_from([1, 7, 1000]),
+)
+@settings(SET, max_examples=8)
+def test_fused_python_stages_match_the_same_stages_split(spark, a, parts, batch):
+    """A run of Python stages fused into one mapInPandas gives the same
+    elements and counter values as the same chain with ``select("*")``
+    between every two stages (one mapInPandas per stage): each stage
+    sees the types Spark would cast its input to — ints returned into a
+    declared double column arrive as floats, floats into a long column
+    as ints — whatever the Arrow batch size. catch, tap and
+    loop_chunks sub-pipelines ride in the chain."""
+    from laygo_python_spark import Context
+
+    df = spark.createDataFrame([{"id": i, "a": v} for i, v in enumerate(a)], "id long, a long")
+
+    def triple(r):  # ints (or None) into a declared double column
+        return {"id": r["id"], "x": None if r["a"] is None else r["a"] * 3}
+
+    def halve(r):  # floats into a declared long column; t records what arrived
+        x = r["x"]
+        return {"id": r["id"], "y": None if x is None else x // 2, "t": type(x).__name__}
+
+    def seen(r, ctx):
+        ctx["seen"] += 1
+        return r
+
+    def lift(r):
+        y = r["y"]
+        return {**r, "y": y + 100 if y is not None and y < 10 else y}
+
+    def keep(r, ctx):
+        if r["id"] % 3:
+            ctx["kept"] += 1
+            return True
+        return False
+
+    def run(split: bool):
+        cut = (lambda t: t.select("*")) if split else (lambda t: t)
+        ctx = Context(spark=spark)
+        ctx.counter("seen")
+        ctx.counter("kept")
+        stages = [
+            lambda t: t.map_rows(triple, schema="id long, x double"),
+            lambda t: t.tap(Transformer().map_rows(seen)),
+            lambda t: t.map_rows(halve, schema="id long, y long, t string"),
+            lambda t: t.catch(Transformer().map_rows(lift).filter_rows(lambda r: r["id"] != 5)),
+            lambda t: t.loop_chunks(
+                Transformer().map_rows(lift),
+                lambda pdf: bool((pdf["y"] < 10).any()),
+                max_iterations=64,
+            ),
+            lambda t: t.filter_rows(keep),
+        ]
+
+        def build(t):
+            t = t.repartition(parts)
+            for i, stage in enumerate(stages):
+                t = stage(cut(t) if i else t)
+            return t
+
+        got, snap = Pipeline(df, spark=spark, context=ctx).transform(build).to_list()
+        return sorted(map(repr, got)), snap
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    try:
+        fused, split = run(False), run(True)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert fused == split
+    assert fused[1]["seen"] == len(a)
+    assert all("'t': 'float'" in r or "'t': 'NoneType'" in r for r in fused[0])
+
+
 def test_scalar_null_reaches_a_python_stage_as_none(spark):
     got, _ = (
         Pipeline([1, None, 3], spark=spark)

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import datetime
+import decimal
+
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +46,85 @@ def test_from_iterable_with_schema(spark):
 def test_from_iterable_scalars(spark):
     df = from_iterable(spark, [1, 2, 3])
     assert df.columns == ["value"] and df.count() == 3
+
+
+_CASES = {
+    "int_with_none": [{"a": 1}, {"a": None}, {"a": 3}],
+    "nan_float": [{"a": 1.5}, {"a": float("nan")}],
+    "bool": [{"a": True}, {"a": False}],
+    "nested_dict_is_map": [{"a": {"x": 1, "y": 2}}, {"a": {}}],
+    "list": [{"a": [1, 2, 3]}, {"a": []}],
+    "list_of_dict": [{"a": [{"x": 1}, {"y": 2}]}],
+    "date_datetime": [
+        {"d": datetime.date(2020, 1, 2), "t": datetime.datetime(2020, 1, 2, 3, 4, 5, 6)}
+    ],
+    "decimal": [{"a": decimal.Decimal("1.25")}, {"a": decimal.Decimal("-7")}],
+    "bytes": [{"a": b"\x00ab"}],
+    "two_pow_62": [{"a": 2**62}, {"a": -(2**62)}],
+    "nested_row": [{"a": Row(x=1, y="s")}],
+}
+
+
+def _same_source(spark, got, want):
+    """``got`` (a Python-list Pipeline) has ``want``'s schema and
+    ``to_list`` — repr tells 1 from 1.0 and None from nan — and is a
+    JVM LocalRelation, not a Python RDD."""
+    from laygo_python_spark import Pipeline
+    from laygo_python_spark.plans import physical_plan
+
+    assert got.df.schema == want.schema
+    assert repr(got.to_list()[0]) == repr(Pipeline(want, spark=spark).to_list()[0])
+    plan = physical_plan(got.df)
+    assert "Scan ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def test_list_sources_match_create_dataframe(spark):
+    """A Python-list source gives the schema and elements that
+    ``createDataFrame([Row(**d) ...])`` gives, for every case above,
+    for scalars, int/float mixes and the allow_mixed union — including
+    a datetime under a non-UTC session time zone."""
+    from laygo_python_spark import Pipeline
+    from laygo_python_spark.transformer import MIXED_SCHEMA, encode_mixed
+
+    for recs in _CASES.values():
+        want = spark.createDataFrame([Row(**d) for d in recs])
+        _same_source(spark, Pipeline(recs, spark=spark), want)
+    scalars = [3, None, 5]
+    want = spark.createDataFrame([(x,) for x in scalars], ["value"])
+    _same_source(spark, Pipeline(scalars, spark=spark), want)
+    mixed_num = [1, 2.5, None]
+    want = spark.createDataFrame([(1.0,), (2.5,), (None,)], ["value"])
+    _same_source(spark, Pipeline(mixed_num, spark=spark), want)
+    dirty = [1, "two", {"k": [3]}, None]
+    want = spark.createDataFrame([encode_mixed(x) for x in dirty], MIXED_SCHEMA)
+    _same_source(spark, Pipeline(dirty, spark=spark, allow_mixed=True), want)
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        recs = _CASES["date_datetime"]
+        want = spark.createDataFrame([Row(**d) for d in recs])
+        _same_source(spark, Pipeline(recs, spark=spark), want)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_dict_records_are_read_by_key(spark):
+    """A record without some key gets None there; a record with its keys
+    in another order is still read by key (a list-backed createDataFrame
+    of such Rows puts values in by position)."""
+    from laygo_python_spark import Pipeline
+
+    got, _ = Pipeline([{"a": 1}, {"a": 2, "b": 3}], spark=spark).to_list()
+    assert got == [{"a": 1, "b": None}, {"a": 2, "b": 3}]
+    got, _ = Pipeline([{"z": 1, "a": "q"}, {"a": "r", "z": 2}], spark=spark).to_list()
+    assert got == [{"z": 1, "a": "q"}, {"z": 2, "a": "r"}]
+
+
+def test_from_iterable_with_schema_is_a_local_relation(spark):
+    from laygo_python_spark.plans import physical_plan
+
+    df = from_iterable(spark, [{"b": "y", "a": 2}, (1, "x")], schema="a long, b string")
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+    assert "PythonRDD" not in physical_plan(df) and "ExistingRDD" not in physical_plan(df)
 
 
 def test_write_training_shards_balanced(spark, tmp_path):
