@@ -136,23 +136,31 @@ def ensure_session_defaults(spark: SparkSession) -> None:
 
 
 def local_rows_df(spark: SparkSession, rows, schema=None) -> DataFrame:
-    """Python rows as a JVM LocalRelation, built through Arrow. A plain
-    list-backed ``createDataFrame`` runs through the Python-RDD path, so
-    EVERY job evaluating the frame spins up Python workers (~4.5 s for a
-    ONE-ROW parquet write at r5). ``rows`` are tuples in field order,
-    dicts or Rows, converted by pyspark's own list-to-Arrow conversion.
-    ``schema=None`` infers it as ``createDataFrame([Row(**d) for d in
-    rows])`` does from dict rows; a dict without some key gives None."""
+    """Python rows as a JVM LocalRelation, built by pyspark's own
+    list-to-Arrow conversion: a list-backed ``createDataFrame`` is a Python
+    RDD, so EVERY job evaluating it spins up Python workers. ``rows`` are
+    tuples in field order, dicts or Rows; ``schema`` is what
+    ``createDataFrame`` takes. ``None`` infers it as from ``[Row(**d) for d
+    in rows]`` (a dict without some key gives None), a list of names
+    renames the inferred columns, an atomic type is one ``value`` column."""
     from pyspark.sql import Row
     from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
     rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
     if schema is None:
         schema = spark._inferSchemaFromList([Row(**r) for r in rows])
-    elif isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
+    elif isinstance(schema, (list, tuple)):
+        names = list(schema)
+        schema = spark._inferSchemaFromList(rows, names=names)
+        rows = [tuple(map(r.get, schema.names)) if isinstance(r, dict) else r for r in rows]
+        for i, name in enumerate(names):  # createDataFrame's rule: rename by position
+            schema.fields[i].name = schema.names[i] = name
+    elif not isinstance(schema, StructType):
+        schema, rows = StructType().add("value", schema), [(r,) for r in rows]
     large = spark._jconf.arrowUseLargeVarTypes()
     if not rows:  # the conversion needs at least one row
         return spark.createDataFrame(to_arrow_schema(schema, prefers_large_types=large).empty_table(), schema)

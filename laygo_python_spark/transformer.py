@@ -16,9 +16,9 @@ Fast path vs slow path (decided at *build* time):
   contract, SURVEY.md §2.12) — never row-at-a-time Python UDFs.
 
 Each Python stage is a ``_Stage`` record. Adjacent stages under one
-``set_chunker`` value run as ONE ``mapInPandas`` (``_fuse``), as laygo's
-``_pipe`` composes chunk functions; catch/tap/loop_chunks fuse their
-sub-Transformers the same way. A user callable's context arity is worked
+``set_chunker`` value run as ONE ``mapInPandas`` (``_fuse``, as laygo's
+``_pipe``), the chunker cutting each stage's input; catch/tap/loop_chunks
+fuse their sub-Transformers the same way. A user callable's context arity is worked
 out once (``_with_ctx``, laygo/helpers.py:28-41). Row stages and every
 ``Pipeline`` terminal see elements through one codec, ``_Codec``.
 """
@@ -319,7 +319,10 @@ class _Stage:
 def _conformer(spark: SparkSession) -> Callable[[pd.DataFrame, StructType], pd.DataFrame]:
     """``conform(pdf, schema)`` casts ``pdf`` as a ``mapInPandas`` boundary
     does (out to Arrow and back, by pyspark's own serializer, with the
-    session time zone and ``convertToArrowArraySafely``)."""
+    session time zone and ``convertToArrowArraySafely``). Columns not
+    matching ``schema`` are a stage's fault, not a row's, which ``catch``
+    must not drop: they raise ``PipelineAbortError``."""
+    from pyspark.errors import PySparkException
     from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -331,46 +334,50 @@ def _conformer(spark: SparkSession) -> Callable[[pd.DataFrame, StructType], pd.D
     def conform(pdf: pd.DataFrame, schema: StructType) -> pd.DataFrame:
         from pyspark.worker import verify_pandas_result
 
-        verify_pandas_result(pdf, schema, assign_cols_by_name=True, truncate_return_schema=True)
+        try:
+            verify_pandas_result(pdf, schema, assign_cols_by_name=True, truncate_return_schema=True)
+        except PySparkException as exc:
+            raise PipelineAbortError(f"a Python stage's output does not fit the next stage: {exc}") from exc
         batch = ser._create_batch([(pdf, to_arrow_type(schema, prefers_large_types=large))])
         return ser.arrow_to_pandas(batch.column(0), 0)
 
     return conform
 
 
-def _fuse(stages: Sequence[_Stage], schema: StructType, conform: Callable) -> tuple[Callable, StructType]:
-    """``stages`` as one ``(pdf, wctx) -> pdf | None`` function over input
-    of Spark schema ``schema``, and its output schema. A stage after the
-    first sees the frame it would see as its own ``mapInPandas``: conformed
-    to the schema the stage before declared or kept. An empty frame ends it."""
+def _fuse(stages: Sequence[_Stage], schema: StructType, conform: Callable,
+          chunk: Callable | None = None) -> tuple[Callable, StructType]:
+    """``stages`` as one ``(batches, wctx) -> batches`` stream function over
+    input of Spark schema ``schema``, and its output schema. A stage after
+    the first sees the frames it would see as its own ``mapInPandas``:
+    conformed to the schema the stage before declared or kept. Every
+    stage's input is re-cut by ``chunk``; empty frames are dropped."""
     fns = []
     for s in stages:
-        fns.append((s.build(schema, conform), schema))
+        fns.append((s.build(schema, conform), schema if fns else None))
         if s.schema is not None:
             schema = StructType.fromDDL(s.schema) if isinstance(s.schema, str) else s.schema
 
-    def chain(pdf: pd.DataFrame, wctx: dict | None):
-        for i, (fn, in_schema) in enumerate(fns):
-            if pdf is None or not len(pdf):
-                return None
-            pdf = fn(conform(pdf, in_schema) if i else pdf, wctx)
-        return pdf
-
-    return chain, schema
-
-
-def _run_stages(df: DataFrame, stages: Sequence[_Stage], context: Context | None) -> DataFrame:
-    """One ``mapInPandas`` passing each chunk through every stage of a run."""
-    chain, schema = _fuse(stages, df.schema, _conformer(df.sparkSession))
-    wctx = _worker_ctx(context, any(s.aware for s in stages))
-
-    def run(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            out = chain(pdf, wctx)
+    def feed(batches: Iterator[pd.DataFrame], fn: Callable, in_schema: StructType | None, wctx: dict | None):
+        for pdf in batches if chunk is None else chunk(batches):
+            out = fn(pdf if in_schema is None else conform(pdf, in_schema), wctx) if len(pdf) else None
             if out is not None and len(out):
                 yield out
 
-    return _map_in_pandas(df, run, schema, stages[0].chunker)
+    def pipe(batches: Iterable[pd.DataFrame], wctx: dict | None) -> Iterator[pd.DataFrame]:
+        batches = iter(batches)
+        for fn, in_schema in fns:
+            batches = feed(batches, fn, in_schema, wctx)
+        return batches
+
+    return pipe, schema
+
+
+def _run_stages(df: DataFrame, stages: Sequence[_Stage], context: Context | None) -> DataFrame:
+    """One ``mapInPandas`` passing each chunk through every stage of a run;
+    the run's ``set_chunker`` value cuts the input of every stage."""
+    pipe, schema = _fuse(stages, df.schema, _conformer(df.sparkSession), _pandas_chunker(stages[0].chunker))
+    wctx = _worker_ctx(context, any(s.aware for s in stages))
+    return _map_in_pandas(df, lambda batches: pipe(batches, wctx), schema, None)
 
 
 class Transformer:
@@ -624,10 +631,10 @@ class Transformer:
         stages = sub._python_stages()
 
         def build(in_schema: StructType, conform: Callable) -> Callable:
-            chain, _ = _fuse(stages, in_schema, conform)
+            pipe, _ = _fuse(stages, in_schema, conform)
 
             def run(pdf: pd.DataFrame, ctx: dict | None) -> pd.DataFrame:
-                chain(pdf.copy(), ctx)
+                list(pipe([pdf.copy()], ctx))
                 return pdf
 
             return run
@@ -761,7 +768,7 @@ class Transformer:
         chunker = self._chunker
 
         def step(df: DataFrame, context: Context | None) -> DataFrame:
-            call, declared = _fuse(stages, df.schema, _conformer(df.sparkSession))
+            pipe, declared = _fuse(stages, df.schema, _conformer(df.sparkSession))
             wctx = _worker_ctx(context)
 
             def handle(pdf: pd.DataFrame, exc: Exception) -> None:
@@ -772,7 +779,7 @@ class Transformer:
 
             def attempt(pdf: pd.DataFrame):
                 try:
-                    return True, call(pdf, wctx)
+                    return True, list(pipe([pdf], wctx))
                 except PipelineAbortError:
                     raise
                 except Exception as exc:  # noqa: BLE001 — isolated error domain
@@ -789,8 +796,7 @@ class Transformer:
                 a row must not depend on its batch)."""
                 ok, out = attempt(pdf)
                 if ok:
-                    if out is not None and len(out):
-                        yield out
+                    yield from out
                     return
                 if mode == "batch" or len(pdf) == 1:
                     handle(pdf, out)
@@ -878,12 +884,12 @@ class Transformer:
         condition, cond_aware = _with_ctx(condition)
 
         def build(in_schema: StructType, conform: Callable) -> Callable:
-            chain, _ = _fuse(stages, in_schema, conform)
+            pipe, _ = _fuse(stages, in_schema, conform)
 
             def run(pdf: pd.DataFrame, ctx: dict | None):
                 i = 0
                 while pdf is not None and len(pdf) and i < max_iterations and condition(pdf, ctx):
-                    pdf = chain(pdf, ctx)
+                    pdf = next(pipe([pdf], ctx), None)
                     i += 1
                 return pdf
 
@@ -957,9 +963,10 @@ class Transformer:
         ``Iterable[pd.DataFrame] -> Iterator[pd.DataFrame]`` and may
         split, coalesce, or regroup the incoming batch stream however
         it likes before the batch function sees it. An ``int`` is the
-        common case — re-chunk to exactly that many rows per batch
-        (tail excepted), whatever Arrow's maxRecordsPerBatch delivered;
-        ``map_batches_arrow`` honors it too, on record batches.
+        common case — re-chunk to exactly that many rows per batch (tail
+        excepted) before EVERY later Python stage, fused ones included,
+        whatever Arrow's maxRecordsPerBatch or the stage before
+        delivered; ``map_batches_arrow`` honors it too, on record batches.
 
         Scope mirrors the reference: the chunker governs chunking
         WITHIN a worker (here: within a partition); it cannot move rows

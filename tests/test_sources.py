@@ -127,6 +127,29 @@ def test_from_iterable_with_schema_is_a_local_relation(spark):
     assert "PythonRDD" not in physical_plan(df) and "ExistingRDD" not in physical_plan(df)
 
 
+def test_from_iterable_takes_the_schemas_create_dataframe_takes(spark):
+    """A list of column names (over tuple, list or dict rows, and shorter
+    than the rows), an atomic type as a DDL string or a DataType, and a
+    struct DDL string give createDataFrame's schema and rows."""
+    from laygo_python_spark.plans import physical_plan
+
+    cases = [
+        ([("x", 1), ("y", None)], ["a", "b"]),
+        ([["x", 1], ["y", 2]], ["a", "b"]),
+        ([{"b": 1, "a": "x"}, {"a": "y", "b": 2}], ["p", "q"]),
+        ([("x", 1, 2.5)], ["a"]),
+        ([1, None, 3], "long"),
+        (["s", None], "string"),
+        ([1.5, 2.0], T.DoubleType()),
+        ([("x", 1)], "a string, b long"),
+    ]
+    for data, schema in cases:
+        want = spark.createDataFrame(list(data), list(schema) if isinstance(schema, list) else schema)
+        got = from_iterable(spark, data, schema)
+        assert (got.schema, got.collect()) == (want.schema, want.collect()), schema
+        assert "PythonRDD" not in physical_plan(got) and "ExistingRDD" not in physical_plan(got)
+
+
 def test_write_training_shards_balanced(spark, tmp_path):
     from laygo_python_spark.sources.sinks import write_training_shards
 

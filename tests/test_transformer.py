@@ -436,6 +436,23 @@ def test_catch_multi_stage_chain_is_one_error_domain(spark):
     assert sorted(result) == [5, 10]
 
 
+def test_catch_raises_for_a_stage_whose_columns_do_not_fit(spark):
+    """A stage inside catch that changes its columns without declaring a
+    schema fails the job with pyspark's column-mismatch error, in batch
+    and row mode: a wrong stage is not a bad row, so catch must not drop
+    every batch for it. Declaring the schema makes the chain work."""
+
+    def chain(declare: bool):
+        schema = "a long" if declare else None
+        return lambda t: t.map_rows(lambda x: {"a": x}, schema=schema).filter_rows(lambda r: r["a"] > 1)
+
+    for mode in ("batch", "row"):
+        with pytest.raises(Exception, match="RESULT_COLUMN_NAMES_MISMATCH"):
+            Pipeline([1, 2, 3], spark=spark).catch(chain(False), schema="a long", mode=mode).to_list()
+        got, _ = Pipeline([1, 2, 3], spark=spark).catch(chain(True), mode=mode).to_list()
+        assert sorted(r["a"] for r in got) == [2, 3]
+
+
 # -- per-chunk loop (reference transformer.py:346-392) -----------------------
 def test_loop_chunks_basic(spark):
     """Port of reference tests/test_transformer.py:60-72: increment until
@@ -606,6 +623,24 @@ def test_set_chunker_survives_clone_and_applies_to_later_stages_only(spark):
         lambda pdf: pdf.assign(chunk_n=len(pdf)), schema="v long, chunk_n int"
     )(df).collect()
     assert {r.chunk_n for r in rows} == {7}
+
+
+def test_set_chunker_cuts_the_input_of_every_fused_stage(spark):
+    """Python stages fused into one mapInPandas each still get
+    exactly-N-row chunks (tails excepted) after a stage that added or
+    dropped rows: the same chunks as when a select("*") between them
+    makes each stage its own mapInPandas."""
+
+    def sizes(split: bool):
+        cut = (lambda t: t.select("*")) if split else (lambda t: t)
+        t = Transformer().set_chunker(10).map_batches(lambda pdf: pd.concat([pdf] * 3, ignore_index=True))
+        t = cut(t).filter_rows(lambda r: r["v"] % 2 == 0)
+        t = cut(t).map_batches(lambda pdf: pdf.assign(chunk_n=len(pdf)), schema="v long, chunk_n long")
+        return sorted(r.chunk_n for r in t(spark.range(0, 101).select(F.col("id").alias("v")).coalesce(1)).collect())
+
+    fused = sizes(False)
+    assert len(fused) == 153 and set(fused) == {3, 10}  # fifteen 10-row chunks and a 3-row tail
+    assert fused == sizes(True)
 
 
 def test_set_chunker_governs_catch_error_domains(spark):
