@@ -13,12 +13,15 @@ step of a training-data pipeline) map cleanly onto the engine's batch
 model, and BOTH halves of the reference's dual-purpose design exist
 here:
 
-* **client**: ``post_batches`` / ``Transformer.map_batches_http`` POST
-  each Arrow batch as a JSON record envelope from the EXECUTORS —
-  requests fan out with partition parallelism (``repartition(n)`` = n
-  in-flight requests), retries with exponential backoff run worker-side,
-  and a failed batch after retries raises into the normal error path
-  (compose with ``.catch`` for drop-the-batch semantics).
+* **client**: ``post_stream`` is the request/retry stream function;
+  ``post_batches`` runs it as one ``mapInPandas`` and
+  ``Transformer.map_batches_http`` as a Python stage that fuses with its
+  neighbours. Each batch goes as a JSON record envelope from the
+  EXECUTORS — requests fan out with partition parallelism
+  (``repartition(n)`` = n in-flight requests), retries with exponential
+  backoff run worker-side, and a failed batch after retries raises into
+  the normal error path (compose with ``.catch`` for drop-the-batch
+  semantics).
 * **server**: ``http_batch_handler`` wraps a plain
   ``fn(pd.DataFrame) -> pd.DataFrame`` as a stdlib
   ``BaseHTTPRequestHandler`` (the reference's ``get_route`` analog —
@@ -50,10 +53,8 @@ def _default_response(body: bytes) -> pd.DataFrame:
     return pd.DataFrame(json.loads(body)["records"])
 
 
-def post_batches(
-    df: DataFrame,
+def post_stream(
     url: str,
-    schema,
     request_fn: Callable[[pd.DataFrame], bytes] | None = None,
     response_fn: Callable[[bytes], pd.DataFrame] | None = None,
     timeout: float = 30.0,
@@ -61,11 +62,12 @@ def post_batches(
     backoff: float = 0.5,
     headers: dict[str, str] | None = None,
     concurrency: int = 1,
-    chunker: Callable[[Iterable[pd.DataFrame]], Iterator[pd.DataFrame]] | None = None,
     on_error: str = "raise",
-) -> DataFrame:
-    """POST each Arrow batch of ``df`` to ``url``; emit the response
-    rows under ``schema``.
+) -> Callable[[Iterable[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The stream function that POSTs each pandas batch it is given to
+    ``url`` (one batch = one request) and yields the response frames.
+    ``Transformer.map_batches_http`` runs it as a Python stage, so an
+    upstream ``set_chunker`` sets the request size.
 
     Retries transient failures (connection errors, HTTP 5xx/429)
     ``retries`` times with exponential backoff; 4xx responses raise
@@ -131,11 +133,7 @@ def post_batches(
             time.sleep(backoff * (2**attempt))
             attempt += 1
 
-    def run(raw_batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # A chunker controls REQUEST size — one custom chunk = one POST
-        # (Transformer.set_chunker flows through map_batches_http).
-        batches = chunker(raw_batches) if chunker is not None else raw_batches
-
+    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def settle(result_fn):
             """Resolve one request under the on_error policy."""
             try:
@@ -174,7 +172,13 @@ def post_batches(
                 if out is not None and len(out):
                     yield out
 
-    return df.mapInPandas(run, schema=schema)
+    return run
+
+
+def post_batches(df: DataFrame, url: str, schema, **options) -> DataFrame:
+    """POST each Arrow batch of ``df`` to ``url``; emit the response
+    rows under ``schema``. ``options`` are ``post_stream``'s."""
+    return df.mapInPandas(post_stream(url, **options), schema=schema)
 
 
 def http_batch_handler(fn: Callable[[pd.DataFrame], pd.DataFrame]):

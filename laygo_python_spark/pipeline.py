@@ -348,11 +348,11 @@ class Pipeline:
         for that branch; others are unaffected (laygo/pipeline.py:613-618).
         """
         conditional = any(isinstance(v, tuple) for v in branches.values())
-        # name -> (route: source -> the branch's input, transformer);
-        # routes are Column/predicate values, so no plan is built yet.
-        routes: dict[str, tuple[Callable, Any]] = {}
+        # name -> (route: a Transformer from the source to the branch's
+        # input, branch); no plan is built yet.
+        routes: dict[str, tuple[Transformer, Any]] = {}
         if not conditional:
-            routes = {name: (lambda d: d, t) for name, t in branches.items()}
+            routes = {name: (Transformer(), t) for name, t in branches.items()}
         else:
             specs = list(branches.items())
             for _, spec in specs:
@@ -381,7 +381,7 @@ class Pipeline:
                     pred = _exclusive_pred(cond, tuple(prior_fns)) if first_match else cond
                     if first_match:
                         prior_fns.append(cond)
-                    routes[name] = (lambda d, pred=pred: Transformer().filter_rows(pred)(d, self._context), t)
+                    routes[name] = (Transformer().filter_rows(pred), t)
                 else:
                     sel = c = _as_condition(cond)
                     if first_match:
@@ -392,15 +392,19 @@ class Pipeline:
                             # would silently drop the row).
                             sel = sel & ~F.coalesce(p, F.lit(False))
                         prior_cols.append(c)
-                    routes[name] = (lambda d, sel=sel: d.filter(sel), t)
+                    routes[name] = (Transformer().filter(sel), t)
 
         def run(name: str) -> tuple[str, list[Any]]:
             # The plan is built here, inside the branch's own try: an
             # analysis error fails only its branch.
             route, t = routes[name]
             try:
-                base = route(cached)
-                d = t(base, self._context) if isinstance(t, Transformer) else t(base)
+                if isinstance(t, Transformer):
+                    # One program, so a Python router fuses with the
+                    # branch's first Python stages.
+                    d = Transformer(route._steps + t._steps, t._chunker)(cached, self._context)
+                else:
+                    d = t(route(cached, self._context))
                 return name, list(_Codec(d.schema).rows(d.collect()))
             except Exception:  # noqa: BLE001 — branch isolation (pipeline.py:613-618)
                 return name, []

@@ -15,12 +15,15 @@ Fast path vs slow path (decided at *build* time):
   (the closest match to laygo's ``(list[T], ctx) -> list[U]`` chunk
   contract, SURVEY.md §2.12) — never row-at-a-time Python UDFs.
 
-Each Python stage is a ``_Stage`` record. Adjacent stages under one
-``set_chunker`` value run as ONE ``mapInPandas`` (``_fuse``, as laygo's
-``_pipe``), the chunker cutting each stage's input; catch/tap/loop_chunks
-fuse their sub-Transformers the same way. A user callable's context arity is worked
-out once (``_with_ctx``, laygo/helpers.py:28-41). Row stages and every
-``Pipeline`` terminal see elements through one codec, ``_Codec``.
+Each Python stage is a ``_Stage`` record (map_batches, map_rows,
+filter_rows, tap, loop_chunks, catch, reduce_rows, map_batches_http).
+Adjacent stages under one ``set_chunker`` value run as ONE ``mapInPandas``
+(``_fuse``, as laygo's ``_pipe``), the chunker cutting each stage's input;
+catch/tap/loop_chunks fuse their sub-Transformers the same way. A run ends
+at a Column/SQL step, ``observe``, ``loop``, ``short_circuit``,
+``map_batches_arrow`` or a new chunker. A user callable's context arity is
+worked out once (``_with_ctx``, laygo/helpers.py:28-41). Row stages and
+every ``Pipeline`` terminal see elements through one codec, ``_Codec``.
 """
 
 from __future__ import annotations
@@ -284,29 +287,10 @@ def _rechunk_arrow(batches: Iterable, size: int) -> Iterator:
         yield from tail.to_batches(max_chunksize=size)
 
 
-def _pandas_chunker(chunker: Callable | int | None) -> Callable | None:
-    """A ``set_chunker`` value as a pandas-batch chunker."""
-    if isinstance(chunker, int):
-        return functools.partial(_rechunk_frames, size=chunker)
-    return chunker
-
-
-def _map_in_pandas(df: DataFrame, run: Callable, schema: Any, chunker: Callable | int | None) -> DataFrame:
-    """The module's one ``mapInPandas``: ``run`` gets each partition's
-    pandas batches, re-cut by ``chunker``; ``schema=None`` keeps the
-    input schema."""
-    chunk = _pandas_chunker(chunker)
-
-    def partition(batches: Iterable[pd.DataFrame]):
-        return run(chunk(batches) if chunk is not None else batches)
-
-    return df.mapInPandas(partition, schema=df.schema if schema is None else schema)
-
-
 @dataclass(frozen=True)
 class _Stage:
     """A Python stage as data: ``build(in_schema, conform)`` gives its
-    batch function ``(pdf, wctx) -> pdf | None``; ``schema`` is its
+    stream function ``(batches, wctx) -> batches``; ``schema`` is its
     declared output (None keeps the input's); ``chunker`` is the
     ``set_chunker`` value in force when it was added."""
 
@@ -314,6 +298,17 @@ class _Stage:
     schema: Any
     aware: bool
     chunker: Callable | int | None
+
+
+def _per_batch(build: Callable) -> Callable:
+    """A builder of a batch function ``(pdf, wctx) -> pdf | None`` as a
+    builder of a stream function."""
+
+    def stream(in_schema: StructType, conform: Callable) -> Callable:
+        fn = build(in_schema, conform)
+        return lambda batches, wctx: (fn(pdf, wctx) for pdf in batches)
+
+    return stream
 
 
 def _conformer(spark: SparkSession) -> Callable[[pd.DataFrame, StructType], pd.DataFrame]:
@@ -345,39 +340,42 @@ def _conformer(spark: SparkSession) -> Callable[[pd.DataFrame, StructType], pd.D
 
 
 def _fuse(stages: Sequence[_Stage], schema: StructType, conform: Callable,
-          chunk: Callable | None = None) -> tuple[Callable, StructType]:
+          chunker: Callable | int | None = None) -> tuple[Callable, StructType]:
     """``stages`` as one ``(batches, wctx) -> batches`` stream function over
     input of Spark schema ``schema``, and its output schema. A stage after
     the first sees the frames it would see as its own ``mapInPandas``:
     conformed to the schema the stage before declared or kept. Every
-    stage's input is re-cut by ``chunk``; empty frames are dropped."""
+    stage's input is re-cut by ``chunker`` (a ``set_chunker`` value);
+    empty frames are dropped."""
+    chunk = functools.partial(_rechunk_frames, size=chunker) if isinstance(chunker, int) else chunker
     fns = []
     for s in stages:
         fns.append((s.build(schema, conform), schema if fns else None))
         if s.schema is not None:
             schema = StructType.fromDDL(s.schema) if isinstance(s.schema, str) else s.schema
 
-    def feed(batches: Iterator[pd.DataFrame], fn: Callable, in_schema: StructType | None, wctx: dict | None):
-        for pdf in batches if chunk is None else chunk(batches):
-            out = fn(pdf if in_schema is None else conform(pdf, in_schema), wctx) if len(pdf) else None
-            if out is not None and len(out):
-                yield out
+    def nonempty(batches: Iterable[pd.DataFrame | None]) -> Iterator[pd.DataFrame]:
+        return (pdf for pdf in batches if pdf is not None and len(pdf))
+
+    def feed(batches: Iterable[pd.DataFrame | None], in_schema: StructType | None) -> Iterator[pd.DataFrame]:
+        batches = nonempty(batches) if chunk is None else nonempty(chunk(nonempty(batches)))
+        return batches if in_schema is None else (conform(pdf, in_schema) for pdf in batches)
 
     def pipe(batches: Iterable[pd.DataFrame], wctx: dict | None) -> Iterator[pd.DataFrame]:
-        batches = iter(batches)
         for fn, in_schema in fns:
-            batches = feed(batches, fn, in_schema, wctx)
-        return batches
+            batches = fn(feed(batches, in_schema), wctx)
+        return nonempty(batches)
 
     return pipe, schema
 
 
 def _run_stages(df: DataFrame, stages: Sequence[_Stage], context: Context | None) -> DataFrame:
-    """One ``mapInPandas`` passing each chunk through every stage of a run;
-    the run's ``set_chunker`` value cuts the input of every stage."""
-    pipe, schema = _fuse(stages, df.schema, _conformer(df.sparkSession), _pandas_chunker(stages[0].chunker))
+    """The module's one ``mapInPandas``: each partition's batches pass
+    through every stage of a run; the run's ``set_chunker`` value cuts
+    the input of every stage."""
+    pipe, schema = _fuse(stages, df.schema, _conformer(df.sparkSession), stages[0].chunker)
     wctx = _worker_ctx(context, any(s.aware for s in stages))
-    return _map_in_pandas(df, lambda batches: pipe(batches, wctx), schema, None)
+    return df.mapInPandas(lambda batches: pipe(batches, wctx), schema=schema)
 
 
 class Transformer:
@@ -400,7 +398,7 @@ class Transformer:
         return self._with(_Stage(build, schema, aware, self._chunker))
 
     def _python_stages(self) -> tuple[_Stage, ...]:
-        """This transformer's steps, for fusion into one batch function.
+        """This transformer's steps, for fusion into one stream function.
         A Column/SQL stage is a Catalyst plan node with no per-batch form,
         so a sub-pipeline containing one raises here, naming the
         alternatives."""
@@ -415,6 +413,8 @@ class Transformer:
 
     def __call__(self, df: DataFrame, context: Context | None = None) -> DataFrame:
         # A run: adjacent Python stages under one chunker, or one other step.
+        # A Column/SQL step, observe, loop, short_circuit, map_batches_arrow
+        # or a new chunker ends a run of Python stages.
         key = lambda s: (s.chunker,) if isinstance(s, _Stage) else object()  # noqa: E731
         for chunker, run in itertools.groupby(self._steps, key):
             df = _run_stages(df, list(run), context) if isinstance(chunker, tuple) else next(run)(df, context)
@@ -464,7 +464,7 @@ class Transformer:
         returns a pandas DataFrame; ``schema=None`` keeps the input schema.
         """
         fn, aware = _with_ctx(fn)
-        return self._python_stage(lambda _schema, _conform: fn, schema, aware)
+        return self._python_stage(_per_batch(lambda _schema, _conform: fn), schema, aware)
 
     def map_batches_http(
         self,
@@ -488,33 +488,20 @@ class Transformer:
         not upstream stages, so drop semantics live here). Fan-out =
         partition count × ``concurrency``; an upstream ``set_chunker``
         controls REQUEST size (one custom chunk = one POST)."""
-        from laygo_python_spark.operators.http import post_batches
+        from laygo_python_spark.operators.http import post_stream
 
-        chunker = _pandas_chunker(self._chunker)
-
-        def step(df: DataFrame, context: Context | None) -> DataFrame:
-            out_schema = schema if schema is not None else df.schema
-            return post_batches(
-                df,
-                url,
-                out_schema,
-                timeout=timeout,
-                retries=retries,
-                headers=headers,
-                concurrency=concurrency,
-                chunker=chunker,
-                on_error=on_error,
-            )
-
-        return self._with(step)
+        run = post_stream(url, timeout=timeout, retries=retries, headers=headers,
+                          concurrency=concurrency, on_error=on_error)
+        return self._python_stage(lambda _s, _c: lambda batches, _ctx: run(batches), schema, False)
 
     def map_batches_arrow(self, fn: Callable, schema: Any | None = None) -> "Transformer":
         """``map_batches`` on the pyarrow transport: ``fn(pa.RecordBatch)
         -> pa.RecordBatch`` with no pandas materialization (mapInArrow).
         Prefer it when the batch logic is arrow/numpy-native — the pandas
         round-trip is pure overhead there (same lesson as
-        cogroup_apply_arrow / group_apply_arrow). Not fused by
-        catch/tap/loop_chunks, which compile the pandas chunk contract.
+        cogroup_apply_arrow / group_apply_arrow). Not a pandas Python
+        stage: it ends a fused run and cannot sit in a catch/tap/
+        loop_chunks body, which compile the pandas chunk contract.
 
         An upstream ``set_chunker(n)`` (int form) IS honored here — the
         record-batch stream is re-sliced to exactly n rows zero-copy
@@ -567,7 +554,7 @@ class Transformer:
             codec = _Codec(in_schema)
             return lambda pdf, ctx: codec.encode([fn(x, ctx) for x in codec.decode(pdf)], pdf)
 
-        return self._python_stage(build, schema, aware)
+        return self._python_stage(_per_batch(build), schema, aware)
 
     # -- filters ------------------------------------------------------------
     def filter(self, cond: Column | str | Callable) -> "Transformer":
@@ -600,7 +587,7 @@ class Transformer:
 
             return keep
 
-        return self._python_stage(build, None, aware)
+        return self._python_stage(_per_batch(build), None, aware)
 
     # -- flatten / explode ---------------------------------------------------
     def flatten(self, col: str, into: str | None = None) -> "Transformer":
@@ -639,7 +626,7 @@ class Transformer:
 
             return run
 
-        return self._python_stage(build, None, any(s.aware for s in stages))
+        return self._python_stage(_per_batch(build), None, any(s.aware for s in stages))
 
     def observe(self, name: str, *exprs: Column) -> "Transformer":
         """Zero-cost, exactly-once metrics riding the main job — the
@@ -691,6 +678,8 @@ class Transformer:
         'partial' half of a partial+final aggregation; laygo never does
         the final merge either). ``fn(acc, row_dict[, ctx]) -> acc``;
         the output row is ``{"value": acc}``-shaped per ``schema``.
+        Inside a catch/tap/loop_chunks body it folds each batch that
+        scope hands it: laygo's per-chunk reduce.
 
         For a whole-dataset sequential fold (reference terminal path,
         transformer.py:462-486) use ``Pipeline.reduce`` — a general
@@ -700,13 +689,11 @@ class Transformer:
         if not per_chunk:
             raise ValueError("whole-dataset folds live on Pipeline.reduce; use agg for distributed folds")
         fn, aware = _with_ctx(fn, threshold=2)
-        chunker = self._chunker
 
-        def step(df: DataFrame, context: Context | None) -> DataFrame:
-            codec = _Codec(df.schema)
-            wctx = _worker_ctx(context, aware)
+        def build(in_schema: StructType, _conform: Callable) -> Callable:
+            codec = _Codec(in_schema)
 
-            def run(batches: Iterable[pd.DataFrame]):
+            def fold(batches: Iterable[pd.DataFrame], wctx: dict | None) -> Iterator[pd.DataFrame]:
                 acc = initial
                 seen = False
                 for pdf in batches:
@@ -716,9 +703,9 @@ class Transformer:
                 if seen:
                     yield pd.DataFrame([{"value": acc}])
 
-            return _map_in_pandas(df, run, schema, chunker)
+            return fold
 
-        return self._with(step)
+        return self._python_stage(build, schema, aware)
 
     # -- error isolation -------------------------------------------------------
     def catch(
@@ -764,20 +751,12 @@ class Transformer:
             except Exception:  # noqa: BLE001 — not a builder: plain batch fn
                 pass
         stages = (sub or Transformer().map_batches(fn))._python_stages()
-        handler = on_error
-        chunker = self._chunker
+        declared = next((s.schema for s in reversed(stages) if s.schema is not None), None)
 
-        def step(df: DataFrame, context: Context | None) -> DataFrame:
-            pipe, declared = _fuse(stages, df.schema, _conformer(df.sparkSession))
-            wctx = _worker_ctx(context)
+        def build(in_schema: StructType, conform: Callable) -> Callable:
+            pipe, _ = _fuse(stages, in_schema, conform)
 
-            def handle(pdf: pd.DataFrame, exc: Exception) -> None:
-                if isinstance(handler, ErrorHandler):
-                    handler.handle(pdf, exc, wctx)
-                elif handler is not None:
-                    handler(pdf, exc, wctx)
-
-            def attempt(pdf: pd.DataFrame):
+            def attempt(pdf: pd.DataFrame, wctx: dict | None):
                 try:
                     return True, list(pipe([pdf], wctx))
                 except PipelineAbortError:
@@ -785,7 +764,7 @@ class Transformer:
                 except Exception as exc:  # noqa: BLE001 — isolated error domain
                     return False, exc
 
-            def salvage(pdf: pd.DataFrame):
+            def salvage(pdf: pd.DataFrame, wctx: dict | None) -> Iterator[pd.DataFrame]:
                 """Batch mode drops a failing batch whole. Row mode
                 bisects it so fn stays vectorized — a poison row costs
                 O(log batch) re-tries instead of running fn once per row.
@@ -794,28 +773,27 @@ class Transformer:
                 still fails, and each failure then pays 8 child attempts
                 instead of 2). Requires fn to be row-wise (its output for
                 a row must not depend on its batch)."""
-                ok, out = attempt(pdf)
+                ok, out = attempt(pdf, wctx)
                 if ok:
                     yield from out
-                    return
-                if mode == "batch" or len(pdf) == 1:
-                    handle(pdf, out)
-                    return
-                mid = len(pdf) // 2
-                yield from salvage(pdf.iloc[:mid])
-                yield from salvage(pdf.iloc[mid:])
+                elif mode == "batch" or len(pdf) == 1:
+                    if isinstance(on_error, ErrorHandler):
+                        on_error.handle(pdf, out, wctx)
+                    elif on_error is not None:
+                        on_error(pdf, out, wctx)
+                else:
+                    mid = len(pdf) // 2
+                    yield from salvage(pdf.iloc[:mid], wctx)
+                    yield from salvage(pdf.iloc[mid:], wctx)
 
-            # A set_chunker installed upstream governs the error-domain
-            # boundaries here too (batch-mode drops exactly one custom
-            # chunk per failure), mirroring the reference where the
+            # The run's set_chunker cuts this stage's input, so it governs
+            # the error-domain boundaries too (batch-mode drops exactly one
+            # custom chunk per failure), mirroring the reference where the
             # chunker defines the chunks catch operates on.
-            def run(batches: Iterable[pd.DataFrame]):
-                for pdf in batches:
-                    yield from salvage(pdf)
+            return lambda batches, wctx: (out for pdf in batches for out in salvage(pdf, wctx))
 
-            return _map_in_pandas(df, run, declared if schema is None else schema, chunker)
-
-        return self._with(step)
+        aware = on_error is not None or any(s.aware for s in stages)
+        return self._python_stage(build, declared if schema is None else schema, aware)
 
     # -- iteration ---------------------------------------------------------------
     def loop(
@@ -888,14 +866,15 @@ class Transformer:
 
             def run(pdf: pd.DataFrame, ctx: dict | None):
                 i = 0
-                while pdf is not None and len(pdf) and i < max_iterations and condition(pdf, ctx):
-                    pdf = next(pipe([pdf], ctx), None)
+                while pdf is not None and i < max_iterations and condition(pdf, ctx):
+                    out = list(pipe([pdf], ctx))  # a row-mode catch yields several frames
+                    pdf = pd.concat(out, ignore_index=True) if out else None
                     i += 1
                 return pdf
 
             return run
 
-        return self._python_stage(build, None, cond_aware or any(s.aware for s in stages))
+        return self._python_stage(_per_batch(build), None, cond_aware or any(s.aware for s in stages))
 
     def short_circuit(self, fn: Callable[[dict], bool | None]) -> "Transformer":
         """Abort the whole run when ``fn(ctx)`` returns True (reference:

@@ -345,6 +345,27 @@ def test_branch_broadcast_python_conditions_not_exclusive(spark):
     assert sorted(results["gt100"]) == [150]
 
 
+def test_branch_python_router_fuses_with_the_branch(spark, monkeypatch):
+    """A Python router condition and the branch's first Python stage are
+    one program, so the branch collects a plan with ONE MapInPandas (the
+    router ran as a Transformer call of its own: 2)."""
+    from laygo_python_spark.plans import physical_plan
+
+    p = Pipeline([{"v": i} for i in range(8)], spark=spark)
+    cls = type(p.df)
+    collect, plans = cls.collect, []
+
+    def recording_collect(df):
+        rows = collect(df)
+        plans.append(physical_plan(df))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    results, _ = p.branch({"big": (lambda r: r["v"] > 3, Transformer().map_rows(lambda r: {"v": r["v"] * 10}))})
+    assert sorted(r["v"] for r in results["big"]) == [40, 50, 60, 70]
+    assert [plan.count("MapInPandas") for plan in plans] == [1], plans
+
+
 # -- mixed-type sources (reference tests/test_pipeline.py:117-120) -----------
 def test_mixed_type_transformation_opt_in(spark):
     """Port of the reference's mixed-type test via allow_mixed=True:

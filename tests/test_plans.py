@@ -293,13 +293,21 @@ def test_a_column_step_or_a_new_chunker_splits_the_fused_run(spark):
     assert between_chunker.count("MapInPandas") == 2, between_chunker
 
 
-def test_catch_and_reduce_rows_stay_their_own_nodes(spark):
+def test_catch_and_reduce_rows_fuse_with_adjacent_stages(spark):
     plan = _python_stage_plan(
         spark,
         lambda t: t.map_rows(_bump).catch(lambda pdf: pdf).filter_rows(lambda r: r["v"] > 2),
     )
-    assert plan.count("MapInPandas") == 3, plan
+    assert plan.count("MapInPandas") == 1, plan
     plan = _python_stage_plan(
         spark, lambda t: t.map_rows(_bump).reduce_rows(lambda acc, r: acc + 1, 0, "value long")
     )
-    assert plan.count("MapInPandas") == 2, plan
+    assert plan.count("MapInPandas") == 1, plan
+    # Only the plan is built, so no server has to listen at the URL.
+    plan = _python_stage_plan(
+        spark,
+        lambda t: t.map_rows(_bump)
+        .map_batches_http("http://127.0.0.1:9/", schema="id long, v long")
+        .filter_rows(lambda r: r["v"] > 2),
+    )
+    assert plan.count("MapInPandas") == 1, plan

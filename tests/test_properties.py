@@ -381,7 +381,8 @@ def test_fused_python_stages_match_the_same_stages_split(spark, a, parts, batch)
     sees the types Spark would cast its input to — ints returned into a
     declared double column arrive as floats, floats into a long column
     as ints — whatever the Arrow batch size. catch, tap and
-    loop_chunks sub-pipelines ride in the chain."""
+    loop_chunks sub-pipelines ride in the chain, and a trailing
+    reduce_rows folds each partition: fused and split folds agree."""
     from laygo_python_spark import Context
 
     df = spark.createDataFrame([{"id": i, "a": v} for i, v in enumerate(a)], "id long, a long")
@@ -423,6 +424,7 @@ def test_fused_python_stages_match_the_same_stages_split(spark, a, parts, batch)
                 max_iterations=64,
             ),
             lambda t: t.filter_rows(keep),
+            lambda t: t.reduce_rows(lambda acc, r: acc + [repr(r)], [], "value array<string>"),
         ]
 
         def build(t):
@@ -431,8 +433,8 @@ def test_fused_python_stages_match_the_same_stages_split(spark, a, parts, batch)
                 t = stage(cut(t) if i else t)
             return t
 
-        got, snap = Pipeline(df, spark=spark, context=ctx).transform(build).to_list()
-        return sorted(map(repr, got)), snap
+        folds, snap = Pipeline(df, spark=spark, context=ctx).transform(build).to_list()
+        return sorted(repr(sorted(fold)) for fold in folds), snap, sorted(r for fold in folds for r in fold)
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
@@ -442,7 +444,7 @@ def test_fused_python_stages_match_the_same_stages_split(spark, a, parts, batch)
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert fused == split
     assert fused[1]["seen"] == len(a)
-    assert all("'t': 'float'" in r or "'t': 'NoneType'" in r for r in fused[0])
+    assert all("'t': 'float'" in r or "'t': 'NoneType'" in r for r in fused[2])
 
 
 def test_scalar_null_reaches_a_python_stage_as_none(spark):

@@ -470,6 +470,48 @@ def test_loop_chunks_basic(spark):
     assert sorted(result) == [5, 6, 7] or all(v >= 5 for v in result)
 
 
+def test_loop_chunks_keeps_every_frame_its_body_yields(spark):
+    """A row-mode catch in a loop_chunks body salvages a batch with a
+    poison row as several frames; the loop keeps all of them, so only
+    the poison row is lost."""
+    df = spark.range(0, 20).select(F.col("id").alias("v")).coalesce(1)
+
+    def fragile(pdf):
+        if (pdf["v"] == 7).any():
+            raise ValueError("poison")
+        return pdf
+
+    body = Transformer().catch(fragile, mode="row")
+    rows = Transformer().loop_chunks(body, lambda pdf: True, max_iterations=1)(df).collect()
+    assert sorted(r.v for r in rows) == [v for v in range(20) if v != 7]
+
+
+def test_reduce_rows_folds_each_batch_of_a_per_batch_scope(spark):
+    """reduce_rows inside a catch, tap or loop_chunks body folds each
+    batch that scope hands it (laygo's per-chunk reduce); it used to
+    raise TypeError there. With 5-row chunks, a catch gives one sum per
+    chunk, a loop_chunks body its chunk's sum and a tap one fold per chunk."""
+    df = spark.range(0, 20).select(F.col("id").alias("v")).coalesce(1)
+    total = Transformer().reduce_rows(lambda acc, r: acc + r["v"], 0, "value long")
+    sums = Transformer().set_chunker(5).catch(total)(df).collect()
+    assert sorted(r.value for r in sums) == [10, 35, 60, 85]
+
+    body = total.map_batches(lambda pdf: pdf.rename(columns={"value": "v"}))
+    looped = Transformer().set_chunker(5).loop_chunks(body, lambda pdf: len(pdf) > 1)(df).collect()
+    assert sorted(r.v for r in looped) == [10, 35, 60, 85]
+
+    ctx = Context(spark=spark)
+    ctx.counter("folds")
+
+    def count(pdf, c):
+        c["folds"] += 1
+        return pdf
+
+    tapped = Transformer().set_chunker(5).tap(total.map_batches(count))
+    _, snap = Pipeline(df, spark=spark, context=ctx).apply(tapped).consume()
+    assert snap["folds"] == 4
+
+
 def test_loop_chunks_max_iterations(spark):
     """Port of reference tests/test_transformer.py:74-86: the iteration
     cap halts an always-true condition."""
