@@ -5,14 +5,24 @@ Scale posture: these configs are tuned so the same code runs on
 AQE owns runtime re-planning (partition coalescing, skew-join splitting,
 broadcast demotion), shuffle partitions default to the cluster
 parallelism, and Arrow is on for every Python<->JVM hop.
+
+Python workers fork from the engine's own daemon (``_daemon.py``): it
+imports the engine once, so each worker starts with it loaded, and before
+Python 3.12 it keeps the per-task ``importlib.invalidate_caches()`` from
+re-reading every archive on the worker path (pyspark.zip, the spark-core
+jar); 3.12 made that re-read lazy. The engine must therefore be importable
+on every executor, as Python stages already require: ``get_spark`` puts
+this checkout's root on the executors' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import GeographyType, GeometryType, _type_mappings
 
 TABLES = (
     "region",
@@ -28,6 +38,8 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -100,6 +112,12 @@ def get_spark(
         # without measurable GC cost (one full GC on this heap ~0.2 s).
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # Python workers fork from the engine's own daemon (see _daemon.py),
+        # which must import this package: Spark merges this checkout root
+        # after its own archives, and Python skips it on an executor where
+        # the path does not exist.
+        .config("spark.python.daemon.module", "laygo_python_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
     )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(f"local[{n}]")
@@ -135,6 +153,34 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         pass
 
 
+# Value types whose inferred Spark type is a function of the Python type
+# alone: a datetime's depends on its tzinfo, a geometry's on its srid.
+_TYPE_ONLY = {
+    t
+    for t, dt in _type_mappings.items()
+    if t is not datetime.datetime and dt not in (GeometryType, GeographyType)
+}
+
+
+def _distinct_signatures(records: list[dict]) -> list[dict]:
+    """One record per distinct ``(key, type(value))`` signature, in order of
+    first appearance: inferring a schema from these gives the same
+    ``StructType`` (or the same error) as inferring it from every record,
+    since a record whose signature was already seen adds no field and no
+    type. Every record when one is not a dict or some value's type is not
+    in ``_TYPE_ONLY``."""
+    firsts = {}
+    for r in records:
+        if not isinstance(r, dict):
+            return records
+        sig = tuple((k, type(v)) for k, v in r.items())
+        if sig not in firsts:
+            if not all(t in _TYPE_ONLY for _, t in sig):
+                return records
+            firsts[sig] = r
+    return list(firsts.values())
+
+
 def local_rows_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     """Python rows as a JVM LocalRelation, built by pyspark's own
     list-to-Arrow conversion: a list-backed ``createDataFrame`` is a Python
@@ -152,7 +198,7 @@ def local_rows_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     if schema is None:
-        schema = spark._inferSchemaFromList([Row(**r) for r in rows])
+        schema = spark._inferSchemaFromList([Row(**r) for r in _distinct_signatures(rows)])
     elif isinstance(schema, (list, tuple)):
         names = list(schema)
         schema = spark._inferSchemaFromList(rows, names=names)

@@ -212,10 +212,11 @@ def test_merge_upsert_paths_agree(spark, data):
     """The broadcast decomposition and the full-outer path must produce
     identical results for any target/changeset pair."""
     from laygo_python_spark.operators.warehouse import merge_upsert
+    from laygo_python_spark.session import local_rows_df
 
     tgt_d, src_d = data
-    target = spark.createDataFrame([(k, v) for k, v in tgt_d.items()] or [(None, None)], "k int, bal double").filter(F.col("k").isNotNull())
-    source = spark.createDataFrame([(k, v) for k, v in src_d.items()] or [(None, None)], "k int, delta double").filter(F.col("k").isNotNull())
+    target = local_rows_df(spark, list(tgt_d.items()), "k int, bal double")
+    source = local_rows_df(spark, list(src_d.items()), "k int, delta double")
     results = []
     for bc in (False, True):
         out = merge_upsert(
@@ -497,6 +498,7 @@ def test_rrf_fuse_is_input_order_invariant(spark, docs, seed):
     import random
 
     from laygo_python_spark.operators.retrieval import rrf_fuse
+    from laygo_python_spark.session import local_rows_df
 
     r1 = [(d, i + 1) for i, d in enumerate(docs)]
     rng = random.Random(seed)
@@ -505,9 +507,7 @@ def test_rrf_fuse_is_input_order_invariant(spark, docs, seed):
     r2 = [(d, i + 1) for i, d in enumerate(docs2)]
 
     def fuse(lists):
-        frames = [
-            spark.createDataFrame(rows, "doc_id long, rank int") for rows in lists
-        ]
+        frames = [local_rows_df(spark, rows, "doc_id long, rank int") for rows in lists]
         return sorted(
             (r["doc_id"], r["rrf_score"], r["n_lists"], r["rank"])
             for r in rrf_fuse(frames, k=len(docs)).collect()
@@ -566,3 +566,29 @@ def test_moments_merge_matches_direct(spark, shards):
     assert got["n_rows"] == n
     assert abs(got["mean"] - mean) < 1e-9 + 1e-9 * abs(mean)
     assert abs(got["var_pop"] - var) < 1e-7 + 1e-7 * abs(var)
+
+
+record_values = st.one_of(
+    st.none(), st.booleans(), st.integers(-(10**6), 10**6), st.floats(allow_nan=False), st.text(max_size=4)
+)
+
+
+@given(rows=st.lists(st.dictionaries(st.sampled_from("abcd"), record_values, max_size=4), min_size=1, max_size=40))
+@settings(SET, max_examples=100)
+def test_record_schema_inferred_from_distinct_signatures(spark, rows):
+    """``local_rows_df(schema=None)`` infers from one record per distinct
+    (key, value type) signature: for ragged records that is the same
+    StructType, field order included, as inferring from every record, or
+    the same error."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql import Row
+
+    from laygo_python_spark.session import _distinct_signatures
+
+    def infer(records):
+        try:
+            return spark._inferSchemaFromList([Row(**r) for r in records])
+        except PySparkException as e:
+            return type(e), e.getCondition()
+
+    assert infer(_distinct_signatures(rows)) == infer(rows)

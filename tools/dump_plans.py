@@ -6,9 +6,10 @@ Usage: python tools/dump_plans.py > PLANS.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
 from laygo_python_spark.plans import formatted_plan  # noqa: E402

@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from laygo_python_spark.queries import ORACLES, QUERIES, load_all  # noqa: E402
 
@@ -20,7 +22,7 @@ def _driver_checked() -> set[str]:
     queries the DRIVER itself has gated; everything else is checked by
     the builder's mimic of the gate (tools/verify_oracle.py)."""
     seen: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
         try:
             seen |= set(json.load(open(path)))
         except Exception:  # noqa: BLE001 — a malformed artifact shouldn't kill the catalog

@@ -16,9 +16,10 @@ Usage: python tools/plan_audit.py [sf_dir] > PLAN_AUDIT.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from laygo_python_spark.plans import physical_plan  # noqa: E402
 from laygo_python_spark.queries import QUERIES, load_all  # noqa: E402

@@ -8,8 +8,8 @@ arbitrary repo root, so two checkouts can be timed back-to-back in the
 same process-adjacent conditions (same box, same page cache, minutes
 apart):
 
-    python tools/tpch_sweep_probe.py /root/repo 6
-    python tools/tpch_sweep_probe.py /root/repo/.bisect_r9 6
+    python tools/tpch_sweep_probe.py . 6
+    python tools/tpch_sweep_probe.py path/to/other/checkout 6
 
 Each invocation is its own JVM (fresh SparkSession) — cross-checkout
 state can't leak. Prints one JSON line with min/all pass times, the
@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-REPO = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else "/root/repo"
+REPO = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 6
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

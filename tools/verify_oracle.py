@@ -8,12 +8,13 @@ Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from laygo_python_spark.session import TABLES, get_spark  # noqa: E402
 
