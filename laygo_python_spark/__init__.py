@@ -24,23 +24,33 @@ fan-out are kept; single-use iterators become re-usable DataFrames; the
 thread/process/HTTP strategy choice becomes partitioning/cluster config.
 """
 
-from laygo_python_spark.context import Context, PipelineContext
-from laygo_python_spark.errors import ErrorHandler, raise_error
-from laygo_python_spark.pipeline import Pipeline
-from laygo_python_spark.session import get_spark, read_table, read_tables
-from laygo_python_spark.transformer import Transformer, create_transformer
+import importlib
 
-__all__ = [
-    "Context",
-    "ErrorHandler",
-    "Pipeline",
-    "Transformer",
-    "create_transformer",
-    "get_spark",
-    "raise_error",
-    "read_table",
-    "read_tables",
-    "PipelineContext",
-]
+# Exports resolve on first access (PEP 562), so importing the package
+# loads no pyspark: the worker daemon (``_daemon.py``) runs as a package
+# submodule and must settle ``sys.path`` before pyspark's first import.
+_EXPORTS = {
+    "Context": "context",
+    "PipelineContext": "context",
+    "ErrorHandler": "errors",
+    "raise_error": "errors",
+    "Pipeline": "pipeline",
+    "get_spark": "session",
+    "read_table": "session",
+    "read_tables": "session",
+    "Transformer": "transformer",
+    "create_transformer": "transformer",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value
+
 
 __version__ = "0.1.0"

@@ -668,7 +668,9 @@ def minhash_index_append(
     the on-disk artifact; exceptions surface there). View ≡
     read-after-append is pytest-pinned (tests/test_index_append.py).
     The batch frames ride localCheckpoint blocks that outlive this
-    call — a long-running loop should quiesce between batches.
+    call — a long-running loop should quiesce between batches. Without
+    ``return_view`` every pin the append takes is released before it
+    returns, on error too.
     ``background_writes`` requires ``stats=False`` (the counts would
     otherwise race the writes)."""
     if background_writes and stats:
@@ -714,141 +716,142 @@ def minhash_index_append(
             sig = sig.persist()
             sig_pin = sig
     new_membership = sig.select(F.col(id_col).alias("doc_id"), "sig_key")
-    # ONE groupBy serves both the reps rows and the fresh-signature
-    # derivation (r9; dropDuplicates + a separate reps groupBy was two
-    # identical sig_key exchanges). Docs sharing a sig_key have the
-    # SAME signature, hence identical band_keys — any() is
-    # deterministic here, and in-array duplicate band keys (two bands
-    # hashing alike) dedup via array_distinct instead of a global
-    # distinct shuffle over the exploded pairs.
-    #
-    # Pinned eagerly (r13): per_sig feeds FOUR sinks — the combined
-    # band-row checkpoint, the cap-verdict's new_counts (a broadcast
-    # build, so exchange reuse never fires into it), the reps write and
-    # the view's reps union — and the SQL profile showed the
-    # aggregation subtree executing 3x inside the combined checkpoint
-    # alone. The frame is |distinct batch sigs| rows (KB-scale); the
-    # pin is one short job that turns every re-execution into a block
-    # read (the small-frame trade documented on ``session.pin``).
-    per_sig = pin(sig.groupBy("sig_key").agg(
-        F.min(id_col).alias("rep"), F.any_value("band_keys").alias("band_keys")
-    ))
-    reps_add = per_sig.select("sig_key", "rep")
-    existing_sigs = artifact.read(spark, path, "minhash", "reps").select("sig_key")
-    dropped_cur = artifact.read_or_empty(spark, path, "minhash", "dropped")
-    # ONE pinned frame carries both the band rows AND each band's cap
-    # verdict (r7: the previous shape checkpointed new_band_rows, then
-    # a second job checkpointed newly_dropped derived from it — two
-    # sequential job barriers where one suffices; the self-referencing
-    # count rides the same job via in-job exchange reuse).
-    # Pinned eagerly (r13): this frame feeds the combined checkpoint's
-    # stream side, the cap-verdict's new_counts AND the semi-join build
-    # probing the stored band table — three subtrees under independent
-    # broadcast exchanges, so without the pin the anti-join + explode
-    # chain (and its existing_sigs/dropped broadcasts) executed 3x per
-    # append (SQL profile r13: 9 jobs in the combined exec, 6 of them
-    # re-built broadcasts). |batch band rows| x 2 longs — KB-scale.
-    new_band_rows = pin(
-        per_sig.join(existing_sigs, "sig_key", "left_anti")
-        .select("sig_key", F.explode(F.array_distinct("band_keys")).alias("band_key"))
-        .join(dropped_cur, "band_key", "left_anti")
-        .select("sig_key", "band_key")  # USING-join reordered; parquet appends by name
-    )
-    new_counts = new_band_rows.groupBy("band_key").agg(F.count(F.lit(1)).alias("add"))
-    cur_counts = (
-        artifact.read(spark, path, "minhash", "bands")
-        .join(new_counts.select("band_key"), "band_key", "left_semi")
-        .groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("cur"))
-    )
-    verdict = new_counts.join(cur_counts, "band_key", "left").select(
-        "band_key",
-        (F.coalesce(F.col("cur"), F.lit(0)) + F.col("add") > max_bucket).alias("__drop"),
-    )
-    # The per-bucket verdict table is |touched buckets| rows — broadcast
-    # it back onto the band rows rather than paying a band_key exchange.
-    combined = pin(new_band_rows.join(F.broadcast(verdict), "band_key"))
-    newly_dropped = combined.filter(F.col("__drop")).select("band_key").distinct()
-    band_append = combined.filter(~F.col("__drop")).select("sig_key", "band_key")
-    # The post-append logical view is assembled BEFORE any write: the
-    # old-table scans pin their parquet file listings at
-    # DataFrame-creation time (verified behavior), so the view never
-    # double-counts the files the writes are about to land, and the
-    # new-row side reads checkpoint blocks — the view and the writes
-    # are therefore fully independent, which is what lets
-    # ``background_writes`` overlap a caller's match with the commit.
-    view = None
-    if return_view:
-        all_dropped = dropped_cur.unionByName(newly_dropped)
-        view = {
-            "membership": artifact.read(spark, path, "minhash", "membership").unionByName(
-                new_membership
-            ),
-            "reps": artifact.read(spark, path, "minhash", "reps")
-            .unionByName(reps_add)
-            .groupBy("sig_key")
-            .agg(F.min("rep").alias("rep")),
-            "bands": artifact.read(spark, path, "minhash", "bands")
-            .select("sig_key", "band_key")
-            .unionByName(band_append)
-            .join(all_dropped, "band_key", "left_anti")
-            .select("sig_key", "band_key"),
-            "dropped": all_dropped,
-            "params": row,
-        }
-
-    # All four appends read pinned/cached frames (sig's cache filled
-    # during the combined checkpoint), so none re-scans a table it lands in.
-    def _do_writes() -> None:
-        artifact.append(spark, path, {
-            "membership": new_membership, "reps": reps_add,
-            "bands": band_append, "dropped": newly_dropped,
-        }, batch_id)
-
-    if background_writes:
-        import threading
-
-        err: list[BaseException] = []
-
-        def _runner() -> None:
-            try:
-                _do_writes()
-            except BaseException as exc:  # noqa: BLE001 — surfaced at wait()
-                err.append(exc)
-
-        # NON-daemon: a daemon thread can be killed by interpreter
-        # shutdown mid-append, leaving partial parquet files with no
-        # replay marker — silently widening the at-least-once
-        # duplicate-replay window far beyond the synchronous path.
-        # daemon=False alone guarantees the drain: CPython's
-        # threading._shutdown joins non-daemon threads BEFORE exit (no
-        # atexit hook needed — and a per-call atexit registration would
-        # pin each batch's thread + captured frames for the process
-        # lifetime in a foreachBatch ingest loop). A caller that skips
-        # wait() still gets the commit drained before exit; skipping
-        # wait() only defers error surfacing, not durability.
-        #
-        # KNOWN HANG MODE (deliberate trade, r11 ADVICE): threading.
-        # _shutdown joins non-daemon threads with NO timeout, so a
-        # WEDGED Spark write (dead gateway/cluster) pins interpreter
-        # shutdown until the write errors or the process is killed.
-        # That is the price of the durability guarantee above — a
-        # bounded join would reintroduce the silent-partial-commit
-        # window this thread exists to close. Callers on flaky
-        # clusters should call wait() themselves (interruptible,
-        # surfaces the error) rather than relying on the exit drain.
-        th = threading.Thread(
-            target=_runner, daemon=False, name="minhash-index-append"
-        )
-        th.start()
-
-        def _wait() -> None:
-            th.join()
-            if err:
-                raise err[0]
-
-        return {"applied": True, "view": view, "wait": _wait}
+    per_sig = new_band_rows = combined = None
     try:
+        # ONE groupBy serves both the reps rows and the fresh-signature
+        # derivation (r9; dropDuplicates + a separate reps groupBy was two
+        # identical sig_key exchanges). Docs sharing a sig_key have the
+        # SAME signature, hence identical band_keys — any() is
+        # deterministic here, and in-array duplicate band keys (two bands
+        # hashing alike) dedup via array_distinct instead of a global
+        # distinct shuffle over the exploded pairs.
+        #
+        # Pinned eagerly (r13): per_sig feeds FOUR sinks — the combined
+        # band-row checkpoint, the cap-verdict's new_counts (a broadcast
+        # build, so exchange reuse never fires into it), the reps write and
+        # the view's reps union — and the SQL profile showed the
+        # aggregation subtree executing 3x inside the combined checkpoint
+        # alone. The frame is |distinct batch sigs| rows (KB-scale); the
+        # pin is one short job that turns every re-execution into a block
+        # read (the small-frame trade documented on ``session.pin``).
+        per_sig = pin(sig.groupBy("sig_key").agg(
+            F.min(id_col).alias("rep"), F.any_value("band_keys").alias("band_keys")
+        ))
+        reps_add = per_sig.select("sig_key", "rep")
+        existing_sigs = artifact.read(spark, path, "minhash", "reps").select("sig_key")
+        dropped_cur = artifact.read_or_empty(spark, path, "minhash", "dropped")
+        # ONE pinned frame carries both the band rows AND each band's cap
+        # verdict (r7: the previous shape checkpointed new_band_rows, then
+        # a second job checkpointed newly_dropped derived from it — two
+        # sequential job barriers where one suffices; the self-referencing
+        # count rides the same job via in-job exchange reuse).
+        # Pinned eagerly (r13): this frame feeds the combined checkpoint's
+        # stream side, the cap-verdict's new_counts AND the semi-join build
+        # probing the stored band table — three subtrees under independent
+        # broadcast exchanges, so without the pin the anti-join + explode
+        # chain (and its existing_sigs/dropped broadcasts) executed 3x per
+        # append (SQL profile r13: 9 jobs in the combined exec, 6 of them
+        # re-built broadcasts). |batch band rows| x 2 longs — KB-scale.
+        new_band_rows = pin(
+            per_sig.join(existing_sigs, "sig_key", "left_anti")
+            .select("sig_key", F.explode(F.array_distinct("band_keys")).alias("band_key"))
+            .join(dropped_cur, "band_key", "left_anti")
+            .select("sig_key", "band_key")  # USING-join reordered; parquet appends by name
+        )
+        new_counts = new_band_rows.groupBy("band_key").agg(F.count(F.lit(1)).alias("add"))
+        cur_counts = (
+            artifact.read(spark, path, "minhash", "bands")
+            .join(new_counts.select("band_key"), "band_key", "left_semi")
+            .groupBy("band_key")
+            .agg(F.count(F.lit(1)).alias("cur"))
+        )
+        verdict = new_counts.join(cur_counts, "band_key", "left").select(
+            "band_key",
+            (F.coalesce(F.col("cur"), F.lit(0)) + F.col("add") > max_bucket).alias("__drop"),
+        )
+        # The per-bucket verdict table is |touched buckets| rows — broadcast
+        # it back onto the band rows rather than paying a band_key exchange.
+        combined = pin(new_band_rows.join(F.broadcast(verdict), "band_key"))
+        newly_dropped = combined.filter(F.col("__drop")).select("band_key").distinct()
+        band_append = combined.filter(~F.col("__drop")).select("sig_key", "band_key")
+        # The post-append logical view is assembled BEFORE any write: the
+        # old-table scans pin their parquet file listings at
+        # DataFrame-creation time (verified behavior), so the view never
+        # double-counts the files the writes are about to land, and the
+        # new-row side reads checkpoint blocks — the view and the writes
+        # are therefore fully independent, which is what lets
+        # ``background_writes`` overlap a caller's match with the commit.
+        view = None
+        if return_view:
+            all_dropped = dropped_cur.unionByName(newly_dropped)
+            view = {
+                "membership": artifact.read(spark, path, "minhash", "membership").unionByName(
+                    new_membership
+                ),
+                "reps": artifact.read(spark, path, "minhash", "reps")
+                .unionByName(reps_add)
+                .groupBy("sig_key")
+                .agg(F.min("rep").alias("rep")),
+                "bands": artifact.read(spark, path, "minhash", "bands")
+                .select("sig_key", "band_key")
+                .unionByName(band_append)
+                .join(all_dropped, "band_key", "left_anti")
+                .select("sig_key", "band_key"),
+                "dropped": all_dropped,
+                "params": row,
+            }
+
+        # All four appends read pinned/cached frames (sig's cache filled
+        # during the combined checkpoint), so none re-scans a table it lands in.
+        def _do_writes() -> None:
+            artifact.append(spark, path, {
+                "membership": new_membership, "reps": reps_add,
+                "bands": band_append, "dropped": newly_dropped,
+            }, batch_id)
+
+        if background_writes:
+            import threading
+
+            err: list[BaseException] = []
+
+            def _runner() -> None:
+                try:
+                    _do_writes()
+                except BaseException as exc:  # noqa: BLE001 — surfaced at wait()
+                    err.append(exc)
+
+            # NON-daemon: a daemon thread can be killed by interpreter
+            # shutdown mid-append, leaving partial parquet files with no
+            # replay marker — silently widening the at-least-once
+            # duplicate-replay window far beyond the synchronous path.
+            # daemon=False alone guarantees the drain: CPython's
+            # threading._shutdown joins non-daemon threads BEFORE exit (no
+            # atexit hook needed — and a per-call atexit registration would
+            # pin each batch's thread + captured frames for the process
+            # lifetime in a foreachBatch ingest loop). A caller that skips
+            # wait() still gets the commit drained before exit; skipping
+            # wait() only defers error surfacing, not durability.
+            #
+            # KNOWN HANG MODE (deliberate trade, r11 ADVICE): threading.
+            # _shutdown joins non-daemon threads with NO timeout, so a
+            # WEDGED Spark write (dead gateway/cluster) pins interpreter
+            # shutdown until the write errors or the process is killed.
+            # That is the price of the durability guarantee above — a
+            # bounded join would reintroduce the silent-partial-commit
+            # window this thread exists to close. Callers on flaky
+            # clusters should call wait() themselves (interruptible,
+            # surfaces the error) rather than relying on the exit drain.
+            th = threading.Thread(
+                target=_runner, daemon=False, name="minhash-index-append"
+            )
+            th.start()
+
+            def _wait() -> None:
+                th.join()
+                if err:
+                    raise err[0]
+
+            return {"applied": True, "view": view, "wait": _wait}
         _do_writes()
         out = {"applied": True}
         if return_view:
@@ -862,6 +865,8 @@ def minhash_index_append(
     finally:
         if sig_pin is not None:
             sig_pin.unpersist()
+        if not return_view:  # a view reads these pins after the call returns
+            release(per_sig, new_band_rows, combined)
 
 
 def minhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int]:
@@ -891,9 +896,14 @@ def minhash_index_compact(spark, path: str, stats: bool = True) -> dict[str, int
 def _index_compact(spark, path: str, read, tables: tuple[str, ...], stats: bool) -> dict[str, int]:
     artifact.begin(spark, path)
     idx = read(spark, path)
-    frames = {t: pin(idx[t]) for t in tables}
-    concurrent_actions(*(lambda t=t: artifact.write(path, t, frames[t]) for t in tables))
-    return _appended_counts(**frames) if stats else {}
+    frames: dict[str, DataFrame] = {}
+    try:
+        for t in tables:
+            frames[t] = pin(idx[t])
+        concurrent_actions(*(lambda t=t: artifact.write(path, t, frames[t]) for t in tables))
+        return _appended_counts(**frames) if stats else {}
+    finally:
+        release(*frames.values())
 
 
 def _appended_counts(**frames: DataFrame) -> dict[str, int]:

@@ -21,7 +21,7 @@ from laygo_python_spark import artifact
 from laygo_python_spark.operators import dedup
 from laygo_python_spark.operators.dedup import MINHASH_PRIME, hash_params
 from laygo_python_spark.queries import query
-from laygo_python_spark.session import concurrent_actions, pin
+from laygo_python_spark.session import concurrent_actions, pin, release
 from laygo_python_spark.session import read_table as _t
 
 
@@ -584,6 +584,7 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scratch = tempfile.mkdtemp(prefix="mh_idx_append_")
     path = f"{scratch}/index"
+    sig_box: dict = {}
     try:
         shutil.copytree(tmpl, path)
         day2 = docs.filter(F.col("doc_id") % 3 == 1)
@@ -601,7 +602,6 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # build both pins concurrently (guide §2.6: overlap independent
         # jobs) instead of serializing two Arrow stage walls; append and
         # match then consume them via precomputed_sig.
-        sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
             sig_box[tag] = pin(dedup.minhash_sig_keys(
@@ -624,6 +624,9 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             res["wait"]()
     finally:
+        # The result is pinned and the writes reading day 2's pin have
+        # committed; the view's pins stay, as the append documents.
+        release(*sig_box.values())
         shutil.rmtree(scratch, ignore_errors=True)
 
 
@@ -648,6 +651,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scratch = tempfile.mkdtemp(prefix="mh_idx_compact_")
     path = f"{scratch}/index"
+    sig_box: dict = {}
     try:
         shutil.copytree(tmpl, path)
         day2 = docs.filter(F.col("doc_id") % 3 == 1)
@@ -657,7 +661,6 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the probe's Python pass is independent of the append, so its
         # wall rides the append's tail instead of serializing after
         # the compaction.
-        sig_box: dict = {}
 
         def _mk_sig(tag: str, part) -> None:
             sig_box[tag] = pin(dedup.minhash_sig_keys(
@@ -678,6 +681,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe, stored, precomputed_sig=sig_box["probe"]
         ))
     finally:
+        release(*sig_box.values())
         shutil.rmtree(scratch, ignore_errors=True)
 
 

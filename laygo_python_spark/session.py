@@ -6,13 +6,24 @@ AQE owns runtime re-planning (partition coalescing, skew-join splitting,
 broadcast demotion), shuffle partitions default to the cluster
 parallelism, and Arrow is on for every Python<->JVM hop.
 
-Python workers fork from the engine's own daemon (``_daemon.py``): it
-imports the engine once, so each worker starts with it loaded, and before
-Python 3.12 it keeps the per-task ``importlib.invalidate_caches()`` from
-re-reading every archive on the worker path (pyspark.zip, the spark-core
-jar); 3.12 made that re-read lazy. The engine must therefore be importable
-on every executor, as Python stages already require: ``get_spark`` puts
-this checkout's root on the executors' ``PYTHONPATH``.
+Python workers fork from the engine's own daemon (``_daemon.py``). Before
+importing pyspark it drops Spark's source-only pyspark.zip and py4j source
+zip from the worker path when the interpreter's installed pyspark/py4j has
+a byte-identical ``version.py``, so workers run on compiled modules; with
+no installed copy, or another release, it keeps Spark's path. It imports
+the engine once, so each worker starts with it loaded, and before Python
+3.12 it keeps the per-task ``importlib.invalidate_caches()`` from re-reading
+every archive left on the worker path (the spark-core jar, and the zips
+where kept); 3.12 made that re-read lazy. The engine must therefore be
+importable on every executor, as Python stages already require:
+``get_spark`` puts this checkout's root on the executors' ``PYTHONPATH``.
+
+Limitation: Python data-source planning (``spark.read.format(<python
+source>)``'s partition and schema calls) starts its workers from the stock
+``pyspark.daemon``, since Spark reads ``spark.python.daemon.module`` only
+for task runners. Those workers import pyspark from the archives and, on
+Python 3.11, re-read them before every planner call; no configuration
+reaches them.
 """
 
 from __future__ import annotations

@@ -560,3 +560,58 @@ def test_minhash_append_background_requires_view_and_no_stats(spark, tmp_path):
         dedup.minhash_index_append(
             spark, path, day2, stats=False, background_writes=True
         )
+
+
+def _pins(spark) -> set[int]:
+    return {int(k) for k in dict(spark.sparkContext._jsc.getPersistentRDDs())}
+
+
+def test_index_append_and_compact_release_their_pins(spark, tmp_path):
+    """The stored-index operators follow the graph loops' rule
+    (tests/test_dedup.py): an append without ``return_view`` and a
+    compaction release every pin they take once their writes commit,
+    whether or not they count the rows."""
+    path = str(tmp_path / "idx")
+    dedup.minhash_index_write(dedup.minhash_index(_docs(spark, _uniq(12)), num_hashes=8, bands=4), path)
+    spath = str(tmp_path / "sidx")
+    dedup.simhash_index_write(dedup.simhash_index(_docs(spark, _uniq(12))), spath)
+    base = _pins(spark)
+    day2 = _docs(spark, _uniq(12, start=50) + _boiler(3, start=100))
+    assert dedup.minhash_index_append(spark, path, day2, batch_id=1)["membership"] == 15
+    dedup.minhash_index_append(spark, path, _docs(spark, _uniq(4, start=200)), batch_id=2, stats=False)
+    assert not _pins(spark) - base
+    assert dedup.minhash_index_compact(spark, path)["membership"] == 31
+    dedup.minhash_index_compact(spark, path, stats=False)
+    dedup.simhash_index_compact(spark, spath)
+    assert not _pins(spark) - base
+
+
+def test_index_append_releases_its_pins_when_a_write_fails(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "idx")
+    dedup.minhash_index_write(dedup.minhash_index(_docs(spark, _uniq(12)), num_hashes=8, bands=4), path)
+    base = _pins(spark)
+
+    def failing_append(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(artifact, "append", failing_append)
+    with pytest.raises(RuntimeError, match="injected"):
+        dedup.minhash_index_append(spark, path, _docs(spark, _uniq(6, start=50)), batch_id=1)
+    assert not _pins(spark) - base
+
+
+@pytest.mark.parametrize("name, most", [("dedup_index_compact", 1), ("dedup_index_append", 4)])
+def test_index_queries_keep_only_the_pins_their_result_reads(spark, sf_dir, name, most):
+    """``dedup_index_compact`` keeps only its pinned result. ``dedup_index_append``
+    also keeps the append view's three pins (``return_view`` hands them to
+    the caller); the ContextCleaner may free those once the view is gone,
+    hence at most. Both release their two signature pins."""
+    from laygo_python_spark.queries import QUERIES, load_all
+
+    load_all()
+    QUERIES[name](spark, sf_dir)  # builds the session's day-1 index template
+    base = _pins(spark)
+    result = QUERIES[name](spark, sf_dir)
+    new = len(_pins(spark) - base)
+    assert result.count() >= 0
+    assert 1 <= new <= most

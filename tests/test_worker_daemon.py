@@ -1,15 +1,19 @@
 """The engine's Python worker daemon (``laygo_python_spark._daemon``):
-workers fork from it, an unchanged archive on the worker path is not
-re-read per task, a rewritten one is, and workers import the engine from
-any driver cwd."""
+workers fork from it, import pyspark and py4j from the interpreter's own
+copies when those match Spark's source archives, do not re-read an
+unchanged archive on the worker path per task but do re-read a rewritten
+one, and import the engine from any driver cwd."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+import zipfile
 
 import pytest
+
+from laygo_python_spark._daemon import without_source_archives
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -34,12 +38,74 @@ def test_workers_fork_from_the_engine_daemon(spark):
     assert _in_worker(spark, main_module) == "laygo_python_spark._daemon"
 
 
+def test_workers_import_installed_pyspark_and_py4j(spark):
+    """The installed pyspark (4.1.2 here) matches Spark's own pyspark.zip
+    and py4j source zip, so the daemon takes both archives off the path and
+    imports the compiled copies."""
+
+    def module_files():
+        import py4j
+        import pyspark
+
+        return f"{pyspark.__file__}|{py4j.__file__}"
+
+    files = _in_worker(spark, module_files).split("|")
+    assert [os.path.basename(os.path.dirname(f)) for f in files] == ["pyspark", "py4j"]
+    assert all(os.path.isfile(f) for f in files), files  # a module inside a zip is no file
+
+
+def _package(root, package, version):
+    os.makedirs(root / package)
+    (root / package / "version.py").write_text(version)
+    return str(root)
+
+
+def _archive(path, package, version):
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(f"{package}/__init__.py", "")
+        z.writestr(f"{package}/version.py", version)
+    return str(path)
+
+
+def test_source_archive_dropped_only_for_a_matching_installed_copy(tmp_path):
+    site = _package(tmp_path / "site", "pyspark", "__version__ = '4.1.2'\n")
+    same = _archive(tmp_path / "pyspark.zip", "pyspark", "__version__ = '4.1.2'\n")
+    other = _archive(tmp_path / "other.zip", "pyspark", "__version__ = '4.0.0'\n")
+    lone = _archive(tmp_path / "py4j-src.zip", "py4j", "__version__ = '0.10.9.9'\n")
+    jar = str(tmp_path / "core.jar")
+
+    assert without_source_archives([same, lone, jar, site]) == [lone, jar, site]
+    assert without_source_archives([other, jar, site]) == [other, jar, site]
+    assert without_source_archives([same, other, site]) == [other, site]
+    assert without_source_archives([same, lone, jar]) == [same, lone, jar]
+    # The twin is the first installed copy on the path: an older one
+    # ahead of a matching one keeps the archive.
+    old_site = _package(tmp_path / "old", "pyspark", "__version__ = '4.0.0'\n")
+    assert without_source_archives([same, old_site, site]) == [same, old_site, site]
+
+
+def test_package_import_loads_no_pyspark():
+    """The daemon settles ``sys.path`` after the package ``__init__`` runs
+    and before pyspark's first import, so that import must load none."""
+    probe = (
+        "import sys, laygo_python_spark; "
+        "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=ROOT, capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip() == "[]"
+
+
 @pytest.mark.skipif(sys.version_info >= (3, 12), reason="3.12 re-reads archive directories lazily")
 def test_unchanged_archive_is_not_reread(spark):
     """A warm worker's ``invalidate_caches`` re-reads no archive directory.
-    Under ``pyspark.daemon`` every call re-reads pyspark.zip and the
-    spark-core jar once per cached importer: 16 reads here on Python 3.11.7
-    with PySpark 4.1.2."""
+    The spark-core jar always stays on the worker path, and so do Spark's
+    pyspark and py4j zips where no matching installed copy exists. Under the
+    stock ``pyspark.daemon``, which keeps pyspark.zip, every call re-read
+    pyspark.zip and the jar once per cached importer: 16 reads on Python
+    3.11.7 with PySpark 4.1.2."""
 
     def rereads():
         import importlib
